@@ -14,8 +14,40 @@ import org.apache.spark.sql.types._
   *    cast to DOUBLE at the end, so sum order cannot perturb low bits.
   */
 object T {
+  /** The driver tables' schemas, declared rather than inferred: a schemaless
+    * `read.parquet` runs a one-task Spark job per call just to read the
+    * footer, and every SPARQL graph build reads five tables. Each schema is
+    * exactly what Spark infers from the test data (every column nullable,
+    * `timestamp[us]` columns as TIMESTAMP_NTZ), so outputs are unchanged;
+    * DeclaredSchemaSpec fails if a table drifts from its declaration.
+    * `events` is declared with its micros `ts`; [[events]] swaps in the
+    * type the file's own footer calls for. */
+  val schemas: Map[String, StructType] = Map(
+    "region" -> "r_regionkey INT, r_name STRING",
+    "nation" -> "n_nationkey INT, n_name STRING, n_regionkey INT",
+    "customer" -> ("c_custkey BIGINT, c_name STRING, c_nationkey INT, " +
+      "c_acctbal DOUBLE, c_mktsegment STRING"),
+    "supplier" -> ("s_suppkey BIGINT, s_name STRING, s_nationkey INT, " +
+      "s_acctbal DOUBLE"),
+    "part" -> ("p_partkey BIGINT, p_name STRING, p_brand STRING, " +
+      "p_type STRING, p_size INT, p_retailprice DOUBLE"),
+    "orders" -> ("o_orderkey BIGINT, o_custkey BIGINT, o_orderstatus STRING, " +
+      "o_totalprice DOUBLE, o_orderdate TIMESTAMP_NTZ, o_orderpriority STRING"),
+    "lineitem" -> ("l_orderkey BIGINT, l_partkey BIGINT, l_suppkey BIGINT, " +
+      "l_linenumber INT, l_quantity DOUBLE, l_extendedprice DOUBLE, " +
+      "l_discount DOUBLE, l_tax DOUBLE, l_returnflag STRING, " +
+      "l_linestatus STRING, l_shipdate TIMESTAMP_NTZ"),
+    "events" -> ("event_id BIGINT, ts TIMESTAMP_NTZ, user_id BIGINT, " +
+      "event_type STRING, value DOUBLE, props STRING"),
+    "documents" -> ("doc_id BIGINT, text STRING, lang STRING, source STRING, " +
+      "n_chars BIGINT"),
+    "embeddings" -> "vec_id BIGINT, embedding ARRAY<FLOAT>, label INT"
+  ).map { case (name, ddl) => name -> StructType.fromDDL(ddl) }
+
+  def path(dir: String, name: String): String = s"$dir/$name.parquet"
+
   def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+    s.read.schema(schemas(name)).parquet(path(dir, name))
 
   def lineitem(s: SparkSession, dir: String): DataFrame = t(s, dir, "lineitem")
   def orders(s: SparkSession, dir: String): DataFrame   = t(s, dir, "orders")
@@ -30,14 +62,42 @@ object T {
     * isAdjustedToUTC=false) surfaces as TIMESTAMP_NTZ. Normalize both to a
     * micros TimestampType so every catalog query sees one type. The NTZ→TZ
     * cast is a numeric identity under the UTC session timezone; the nanos
-    * path uses integer division (doubles can't hold epoch-nanos exactly). */
+    * path uses integer division (doubles can't hold epoch-nanos exactly).
+    * Which form a file holds is read from its footer on the driver, which
+    * runs no Spark job. */
   def events(s: SparkSession, dir: String): DataFrame = {
-    val df = t(s, dir, "events")
-    df.schema("ts").dataType match {
+    val p = path(dir, "events")
+    val tsType = eventsTsType(s, p)
+    val declared = StructType(schemas("events").map(f =>
+      if (f.name == "ts") f.copy(dataType = tsType) else f))
+    val df = s.read.schema(declared).parquet(p)
+    tsType match {
       case LongType          => df.withColumn("ts", timestamp_micros(expr("ts DIV 1000")))
-      case _: TimestampNTZType => df.withColumn("ts", col("ts").cast(TimestampType))
+      case TimestampNTZType  => df.withColumn("ts", col("ts").cast(TimestampType))
       case _                 => df
     }
+  }
+
+  /** The type Spark infers for the `ts` column of the parquet file at `p`,
+    * from its footer: Long for TIMESTAMP(NANOS), TIMESTAMP_NTZ for a
+    * timestamp not adjusted to UTC, else TIMESTAMP. */
+  private def eventsTsType(s: SparkSession, p: String): DataType = {
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.parquet.schema.LogicalTypeAnnotation.{
+      TimeUnit, TimestampLogicalTypeAnnotation}
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
+      new org.apache.hadoop.fs.Path(p), s.sparkContext.hadoopConfiguration))
+    try {
+      val footer = reader.getFooter.getFileMetaData.getSchema
+      footer.getType(footer.getFieldIndex("ts")).getLogicalTypeAnnotation match {
+        case a: TimestampLogicalTypeAnnotation if a.getUnit == TimeUnit.NANOS =>
+          LongType
+        case a: TimestampLogicalTypeAnnotation if !a.isAdjustedToUTC =>
+          TimestampNTZType
+        case _ => TimestampType
+      }
+    } finally reader.close()
   }
   def documents(s: SparkSession, dir: String): DataFrame  = t(s, dir, "documents")
   def embeddings(s: SparkSession, dir: String): DataFrame = t(s, dir, "embeddings")

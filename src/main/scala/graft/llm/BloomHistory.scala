@@ -12,9 +12,7 @@ import org.apache.spark.sql.types.LongType
   *
   * Layout at `path`:
   *  - `words/` — the filter as `nShards` rows of (shard, `array<long>`)
-  *    (mBits/64 words each, ≤ 16 MB/shard at the per-shard 2^27 cap). A
-  *    store written before sharding has a single-column one-row layout;
-  *    readers treat it as shard 0 of 1.
+  *    (mBits/64 words each, ≤ 16 MB/shard at the per-shard 2^27 cap).
   *  - `_graft_bloom_meta.json` — mBits, k, nShards, nItems (fingerprints
   *    folded, for the fp-rate policy), lastBid (replay discipline).
   * and the FINGERPRINT SIDECAR at the sibling `path`__fp (outside the
@@ -468,13 +466,10 @@ object BloomHistory {
     if (rates.isEmpty) 0.0 else rates.max
   }
 
-  /** The stored filter as (shard, words) rows; a pre-sharding store's
-    * single-column one-row layout reads as shard 0. */
-  private def readWords(spark: SparkSession, path: String): DataFrame = {
-    val df = spark.read.parquet(s"$path/words")
-    if (df.columns.contains("shard")) df.select("shard", "words")
-    else df.select(lit(0L).as("shard"), col("words"))
-  }
+  /** The stored filter as (shard, words) rows. */
+  private def readWords(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema("shard BIGINT, words ARRAY<BIGINT>")
+      .parquet(s"$path/words")
 
   private def emptyWords(spark: SparkSession, mBits: Int,
       nShards: Int): DataFrame =

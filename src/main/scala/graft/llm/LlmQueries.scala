@@ -582,8 +582,19 @@ object LlmQueries {
             // already-thrown error)
             futs.foreach(_.cancel(false))
             pool.shutdown()
-            pool.awaitTermination(60, java.util.concurrent.TimeUnit.SECONDS)
-            throw e.getCause
+            val cause = e.getCause
+            try {
+              if (!pool.awaitTermination(60,
+                  java.util.concurrent.TimeUnit.SECONDS))
+                cause.addSuppressed(new java.util.concurrent.TimeoutException(
+                  s"copies into $dst still running 60 s after the first " +
+                    "failure"))
+            } catch {
+              case ie: InterruptedException =>
+                Thread.currentThread().interrupt()
+                cause.addSuppressed(ie)
+            }
+            throw cause
         }
       } finally pool.shutdown()
       s.catalog.refreshByPath(root)

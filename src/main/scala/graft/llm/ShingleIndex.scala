@@ -476,12 +476,11 @@ object ShingleIndex {
     val p = new Path(path, sub)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val ids = committedEpochs(spark, path)
-    val hasParts = fs.exists(p) &&
-      fs.listStatus(p).exists(_.getPath.getName.startsWith("ep="))
-    if (!hasParts || ids.isEmpty)
+    if (ids.isEmpty || !fs.exists(p))
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else spark.read.parquet(p.toString).filter(col("ep").isin(ids: _*))
+    else spark.read.schema(schema).parquet(p.toString)
+      .filter(col("ep").isin(ids: _*))
   }
 
   private def writeMeta(spark: SparkSession, path: String, nBuckets: Int,

@@ -151,13 +151,12 @@ object SimGraphStore {
     val p = new Path(path, sub)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val ids = committedIds(spark, path)
-    // an empty batch writes no bid= partition at all — a dir holding only
-    // _SUCCESS would fail schema inference, so probe for real partitions
-    val hasParts = fs.exists(p) &&
-      fs.listStatus(p).exists(_.getPath.getName.startsWith("bid="))
-    if (!hasParts || ids.isEmpty)
+    // an empty batch writes no bid= partition at all; a dir holding only
+    // _SUCCESS reads as empty under the declared schema
+    if (ids.isEmpty || !fs.exists(p))
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else spark.read.parquet(p.toString).filter(col("bid").isin(ids: _*))
+    else spark.read.schema(schema).parquet(p.toString)
+      .filter(col("bid").isin(ids: _*))
   }
 
   /** Delete `bid=` partitions no committed marker vouches for — a crashed

@@ -13,7 +13,7 @@ object SparqlQueries {
 
   import TpchGraph._
 
-  private val prologue =
+  private[graft] val prologue =
     s"""PREFIX g:<$ns>
        |PREFIX otit_swt:<${graft.rdf.Otit.ns}>
        |PREFIX xsd:<http://www.w3.org/2001/XMLSchema#>

@@ -40,6 +40,22 @@ class ParJobsSpec extends AnyFunSuite {
       "before the failure propagates")
   }
 
+  test("map never starts a queued task after an earlier failure, and " +
+      "still waits for the started ones") {
+    val done = new java.util.concurrent.atomic.AtomicInteger(0)
+    val late = new java.util.concurrent.atomic.AtomicBoolean(false)
+    // one task per pool thread, then one that has to queue
+    val started = Seq.fill(ParJobs.maxThreads - 1)(
+      () => { Thread.sleep(50); done.incrementAndGet() })
+    val e = intercept[IllegalStateException](ParJobs.map[Int](
+      (() => throw new IllegalStateException("boom")) +: started :+
+        (() => { late.set(true); 0 })))
+    assert(e.getMessage == "boom")
+    assert(done.get() == started.size,
+      "every started sibling must have completed")
+    assert(!late.get(), "a task queued behind the failure must never start")
+  }
+
   test("empty and single-task inputs run inline") {
     ParJobs.run(Seq.empty)
     var ran = false
