@@ -939,13 +939,37 @@ final class SparqlExecutor(
     * guard worth its plan cost: straddling the series join blocks pushing
     * the query's time filters below it, so attaching it unconditionally
     * would tax every hybrid query for a metadata error almost no graph
-    * has. The decision reads a cached metadata-sized distinct of the
-    * hasDatatype slice (one tiny job per graph). */
+    * has. When the hasDatatype slice's optimized plan outputs its object
+    * as one constant (a builder that declares every series with the same
+    * datatype), the decision reads that literal and fires no job. Otherwise
+    * it reads the graph's cached metadata-sized distinct of the slice
+    * ([[TriplesGraph.declaredTsDatatypes]], one tiny job per graph). The
+    * constant path is conservative: over an EMPTY slice an incompatible
+    * constant adds a guard that can never fire. */
   private lazy val needsDatatypeGuard: Boolean =
-    graph.slice(Otit.hasDatatype).isDefined && {
+    graph.slice(Otit.hasDatatype).exists { dsl =>
       val actualKind = OKind.ofDatatype(tsValueXsd)
-      graph.declaredTsDatatypes.exists(dt => OKind.ofDatatype(dt) != actualKind)
+      val declared =
+        constantObject(dsl.df).map(Seq(_)).getOrElse(graph.declaredTsDatatypes)
+      declared.exists(dt => OKind.ofDatatype(dt) != actualKind)
     }
+
+  /** The slice's object as a string when the optimizer reduces it to one
+    * non-null string literal — no job, just Catalyst's optimized plan. */
+  private def constantObject(df: DataFrame): Option[String] = {
+    import org.apache.spark.sql.catalyst.expressions.{Alias, Literal}
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Project}
+    val out = df.select(col("o").cast(StringType)).queryExecution.optimizedPlan match {
+      case p: Project => p.projectList
+      case a: Aggregate => a.aggregateExpressions
+      case _ => Nil
+    }
+    out match {
+      case Seq(Alias(Literal(v: org.apache.spark.unsafe.types.UTF8String,
+          _: StringType), _)) => Some(v.toString)
+      case _ => None
+    }
+  }
 
   private def attachDeclaredDatatype(df: DataFrame, entityCol: String)
     : (DataFrame, Option[String]) = graph.slice(Otit.hasDatatype) match {

@@ -60,6 +60,10 @@ final case class FusedMember(groupId: String, df: DataFrame, objCol: String)
   * `fused` optionally links the slice into property tables for same-subject
   * scan fusion (SURVEY §4 custom-rule candidate #1, done as a logical
   * rewrite before Catalyst).
+  *
+  * A graph built by [[TriplesGraph.fromLazySlices]] holds a builder per
+  * predicate instead: the slice is built on first access, memoised for
+  * that graph, and never built by a query that does not touch it.
   */
 final case class PredicateSlice(df: DataFrame, kind: OKind,
     hasLang: Boolean = false, fused: Seq[FusedMember] = Nil,
@@ -99,10 +103,49 @@ final case class TsSource(df: DataFrame) extends TsProvider {
   def frame: DataFrame = df
 }
 
+/** A [[TsSource]] built, and its columns checked, on first `frame` access:
+  * a query that never touches the time-series vocabulary never reads the
+  * source. */
+final class LazyTsSource(build: () => DataFrame) extends TsProvider {
+  lazy val frame: DataFrame = TsSource(build()).frame
+}
+
+/** An immutable map whose values are built on first access, once, and
+  * memoised; a cell's lock makes concurrent first accesses build it once.
+  * `get`, `contains`, `keySet` and `size` build nothing beyond the key they
+  * ask for; iterating the map builds every value. Derived maps (`removed`,
+  * `updated`) share the cells they keep. */
+private[graph] final class LazyMap[K, +V] private (cells: Map[K, LazyMap.Cell[V]])
+    extends scala.collection.immutable.AbstractMap[K, V] {
+  def get(key: K): Option[V] = cells.get(key).map(_.value)
+  def iterator: Iterator[(K, V)] =
+    cells.iterator.map { case (k, c) => (k, c.value) }
+  def removed(key: K): LazyMap[K, V] = new LazyMap(cells - key)
+  def updated[V1 >: V](key: K, value: V1): LazyMap[K, V1] =
+    new LazyMap(cells.updated(key, new LazyMap.Cell(() => value)))
+  override def contains(key: K): Boolean = cells.contains(key)
+  override def keySet: Set[K] = cells.keySet
+  override def size: Int = cells.size
+}
+
+private[graph] object LazyMap {
+  final class Cell[+V](build: () => V) { lazy val value: V = build() }
+  def apply[K, V](builders: Map[K, () => V]): LazyMap[K, V] =
+    new LazyMap(builders.map { case (k, b) => k -> new Cell(b) })
+}
+
 /** An RDF graph held as per-predicate DataFrame slices + an optional
   * time-series source for the virtual `hasDataPoint/hasTimestamp/hasValue`
   * vocabulary (SURVEY §3.1 stage 2 — the one piece of reference "magic" we
   * reimplement as a logical rewrite).
+  *
+  * Lazy-slice contract: `slices` may hold builders
+  * ([[TriplesGraph.fromLazySlices]]). A slice is built on first access and
+  * memoised per graph instance; [[slice]], `slices.keySet`/`contains`/`size`
+  * build nothing beyond the predicate asked for, so a query builds only the
+  * slices its patterns touch. Whole-graph operations ([[allTriples]],
+  * [[nodes]], [[applyDelta]], [[save]], the N-Triples export) iterate the
+  * map and so build every slice.
   */
 final class TriplesGraph(
     val spark: SparkSession,
@@ -212,7 +255,10 @@ final class TriplesGraph(
     * series-metadata slice, cached for the graph's lifetime — the executor
     * uses it to decide whether any declaration could conflict with the TS
     * source's storage kind, so the common all-consistent case plans with
-    * ZERO guard overhead (full filter pushdown below the series join). */
+    * ZERO guard overhead (full filter pushdown below the series join).
+    * The executor reads it only when the slice's optimized plan does not
+    * already name the datatype as one constant; a constant declaration is
+    * decided with no job at all. */
   lazy val declaredTsDatatypes: Seq[String] =
     slices.get(Otit.hasDatatype).map { sl =>
       sl.df.select(col("o").cast(StringType)).distinct()
@@ -964,6 +1010,15 @@ object TriplesGraph {
   def fromSlices(spark: SparkSession, slices: Map[String, PredicateSlice],
       ts: Option[TsProvider] = None): TriplesGraph =
     new TriplesGraph(spark, slices, ts)
+
+  /** [[fromSlices]] with one builder per predicate: each slice is built on
+    * its first access and memoised for this graph (the lazy-slice contract
+    * on [[TriplesGraph]]), so a query that reads one predicate builds one
+    * slice. */
+  def fromLazySlices(spark: SparkSession,
+      builders: Map[String, () => PredicateSlice],
+      ts: Option[TsProvider] = None): TriplesGraph =
+    new TriplesGraph(spark, LazyMap(builders), ts)
 
   /** Reload a graph persisted by [[TriplesGraph#save]]. Slice frames are
     * partition-pruned filters over the one dataset (a constant-predicate

@@ -1,7 +1,7 @@
 package graft.sparql
 
 import graft.T
-import graft.graph.{FusedMember, OKind, PredicateSlice, TriplesGraph, TsSource}
+import graft.graph.{FusedMember, LazyTsSource, OKind, PredicateSlice, TriplesGraph}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -10,8 +10,11 @@ import org.apache.spark.sql.types._
   *
   * Slices are derived with Spark transforms only (no driver-side collect), so
   * the same construction scales to a 100 TB lake: each predicate slice is a
-  * projection of a source table, Catalyst prunes the untouched ones, and a
-  * BGP over n predicates reads only its n slices.
+  * projection of a source table and a BGP over n predicates reads only its
+  * n slices. A query also builds only the slices it touches: every slice,
+  * table and property table is built on first use (the lazy-slice contract
+  * on [[TriplesGraph]]), so an ASK over `acctbal` reads just `supplier` and
+  * a hybrid time-series query just `events`. Every call builds a fresh graph.
   *
   * The `events` table doubles as the time-series source (id = event_type),
   * with series metadata published into the graph under the reference's
@@ -40,15 +43,15 @@ object TpchGraph {
   val typeSensor = s"${ns}Sensor"
 
   def graph(s: SparkSession, dir: String): TriplesGraph = {
-    val nation = T.nation(s, dir)
-    val region = T.region(s, dir)
-    val supplier = T.supplier(s, dir)
+    lazy val nation = T.nation(s, dir)
+    lazy val region = T.region(s, dir)
+    lazy val supplier = T.supplier(s, dir)
     // (l_orderkey, l_linenumber) is NOT unique in the driver's synthetic
     // data; mint line-row IRIs from the stable parquet row index so the two
     // lineitem slices self-join 1:1.
-    val lineitem = T.lineitem(s, dir)
+    lazy val lineitem = T.lineitem(s, dir)
       .withColumn("__rid", col("_metadata.row_index"))
-    val events = T.events(s, dir)
+    lazy val events = T.events(s, dir)
 
     val nIri = iri("nation", col("n_nationkey"))
     val rIri = iri("region", col("r_regionkey"))
@@ -63,52 +66,43 @@ object TpchGraph {
     // mixed-class slices keep their per-class branches: a typed NPS /
     // variable-predicate scan reads just the matching branch (see
     // PredicateSlice.byClass — (predicate, subject_class) partitioning)
-    val nameN = nation.select(nIri.as("s"), col("n_name").as("o"))
-    val nameR = region.select(rIri.as("s"), col("r_name").as("o"))
-    val nameS = supplier.select(sIri.as("s"), col("s_name").as("o"))
-    val names = nameN.unionByName(nameR).unionByName(nameS)
+    lazy val nameN = nation.select(nIri.as("s"), col("n_name").as("o"))
+    lazy val nameR = region.select(rIri.as("s"), col("r_name").as("o"))
+    lazy val nameS = supplier.select(sIri.as("s"), col("s_name").as("o"))
 
-    val typN = nation.select(nIri.as("s"), lit(typeNation).as("o"))
-    val typR = region.select(rIri.as("s"), lit(typeRegion).as("o"))
-    val typS = supplier.select(sIri.as("s"), lit(typeSupplier).as("o"))
-    val typE = events.select(iri("sensor", col("event_type")).as("s"),
+    lazy val typN = nation.select(nIri.as("s"), lit(typeNation).as("o"))
+    lazy val typR = region.select(rIri.as("s"), lit(typeRegion).as("o"))
+    lazy val typS = supplier.select(sIri.as("s"), lit(typeSupplier).as("o"))
+    lazy val typE = events.select(iri("sensor", col("event_type")).as("s"),
       lit(typeSensor).as("o")).distinct()
-    val types = typN.unionByName(typR).unionByName(typS).unionByName(typE)
 
-    val locS = supplier.select(sIri.as("s"), sNIri.as("o"))
-    val locN = nation.select(nIri.as("s"), nRIri.as("o"))
-    val located = locS.unionByName(locN)
+    lazy val locS = supplier.select(sIri.as("s"), sNIri.as("o"))
+    lazy val locN = nation.select(nIri.as("s"), nRIri.as("o"))
 
     // time-series metadata: one series per event_type
-    val sensors = events.select(col("event_type")).distinct()
-    val hasTs = sensors.select(iri("sensor", col("event_type")).as("s"),
-      iri("series", col("event_type")).as("o"))
-    val extId = sensors.select(iri("series", col("event_type")).as("s"),
-      col("event_type").as("o"))
-    // per-series declared value datatype (the reference's injected
-    // `?ts otit_swt:hasDatatype` vocabulary): events.value is double
-    val hasDt = sensors.select(iri("series", col("event_type")).as("s"),
-      lit(graft.rdf.Xsd.double).as("o"))
+    lazy val sensors = events.select(col("event_type")).distinct()
+    def seriesSlice(o: Column, kind: OKind, cls: String): PredicateSlice =
+      PredicateSlice(sensors.select(iri("series", col("event_type")).as("s"),
+        o.as("o")), kind, subjectClasses = Set(cls))
 
     // wide property tables for same-subject scan fusion: one row per entity
     // with a column per predicate, so an n-predicate star over one entity
     // type reads the source table once (the executor fuses automatically)
-    val nationWide = nation.select(nIri.as("s"), col("n_name").as("name"),
+    lazy val nationWide = nation.select(nIri.as("s"), col("n_name").as("name"),
       col("n_nationkey").as("key"), nRIri.as("inRegion"),
       nRIri.as("locatedIn"), lit(typeNation).as("rdftype"))
-    val regionWide = region.select(rIri.as("s"), col("r_name").as("name"),
+    lazy val regionWide = region.select(rIri.as("s"), col("r_name").as("name"),
       lit(typeRegion).as("rdftype"))
-    val supplierWide = supplier.select(sIri.as("s"), col("s_name").as("name"),
+    lazy val supplierWide = supplier.select(sIri.as("s"), col("s_name").as("name"),
       col("s_acctbal").as("acctbal"), sNIri.as("nationOf"),
       sNIri.as("locatedIn"), lit(typeSupplier).as("rdftype"))
-    val lineitemWide = lineitem.select(lIri.as("s"),
+    lazy val lineitemWide = lineitem.select(lIri.as("s"),
       iri("supplier", col("l_suppkey")).as("ofSupplier"),
       col("l_quantity").cast(LongType).as("quantity"))
-    def fm(g: String, df: DataFrame, c: String) = FusedMember(g, df, c)
-    val nF = fm("nation", nationWide, _: String)
-    val rF = fm("region", regionWide, _: String)
-    val sF = fm("supplier", supplierWide, _: String)
-    val lF = fm("lineitem", lineitemWide, _: String)
+    def nF(c: String) = FusedMember("nation", nationWide, c)
+    def rF(c: String) = FusedMember("region", regionWide, c)
+    def sF(c: String) = FusedMember("supplier", supplierWide, c)
+    def lF(c: String) = FusedMember("lineitem", lineitemWide, c)
 
     // declared subject classes per slice (complete — builder contract in
     // TriplesGraph): lets typed variable-predicate / NPS scans prune the
@@ -118,42 +112,51 @@ object TpchGraph {
     // dimension-typed NPS scan.
     val typeLine = s"${ns}Line"
     val typeSeries = s"${ns}Series"
-    val slices = Map(
-      name -> PredicateSlice(names, OKind.KStr,
+    val slices = Map[String, () => PredicateSlice](
+      name -> (() => PredicateSlice(
+        nameN.unionByName(nameR).unionByName(nameS), OKind.KStr,
         fused = Seq(nF("name"), rF("name"), sF("name")),
         subjectClasses = Set(typeNation, typeRegion, typeSupplier),
         byClass = Map(typeNation -> nameN, typeRegion -> nameR,
-          typeSupplier -> nameS)),
-      key -> sl(nation, nIri, col("n_nationkey"), OKind.KLong)
-        .copy(fused = Seq(nF("key")), subjectClasses = Set(typeNation)),
-      graft.rdf.Rdf.typ -> PredicateSlice(types, OKind.KIri,
+          typeSupplier -> nameS))),
+      key -> (() => sl(nation, nIri, col("n_nationkey"), OKind.KLong)
+        .copy(fused = Seq(nF("key")), subjectClasses = Set(typeNation))),
+      graft.rdf.Rdf.typ -> (() => PredicateSlice(
+        typN.unionByName(typR).unionByName(typS).unionByName(typE), OKind.KIri,
         fused = Seq(nF("rdftype"), rF("rdftype"), sF("rdftype")),
         subjectClasses = Set(typeNation, typeRegion, typeSupplier, typeSensor),
         byClass = Map(typeNation -> typN, typeRegion -> typR,
-          typeSupplier -> typS, typeSensor -> typE)),
-      inRegion -> sl(nation, nIri, nRIri, OKind.KIri)
-        .copy(fused = Seq(nF("inRegion")), subjectClasses = Set(typeNation)),
-      nationOf -> sl(supplier, sIri, sNIri, OKind.KIri)
-        .copy(fused = Seq(sF("nationOf")), subjectClasses = Set(typeSupplier)),
-      acctbal -> sl(supplier, sIri, col("s_acctbal"), OKind.KDbl)
-        .copy(fused = Seq(sF("acctbal")), subjectClasses = Set(typeSupplier)),
-      locatedIn -> PredicateSlice(located, OKind.KIri,
+          typeSupplier -> typS, typeSensor -> typE))),
+      inRegion -> (() => sl(nation, nIri, nRIri, OKind.KIri)
+        .copy(fused = Seq(nF("inRegion")), subjectClasses = Set(typeNation))),
+      nationOf -> (() => sl(supplier, sIri, sNIri, OKind.KIri)
+        .copy(fused = Seq(sF("nationOf")), subjectClasses = Set(typeSupplier))),
+      acctbal -> (() => sl(supplier, sIri, col("s_acctbal"), OKind.KDbl)
+        .copy(fused = Seq(sF("acctbal")), subjectClasses = Set(typeSupplier))),
+      locatedIn -> (() => PredicateSlice(locS.unionByName(locN), OKind.KIri,
         fused = Seq(nF("locatedIn"), sF("locatedIn")),
         subjectClasses = Set(typeSupplier, typeNation),
-        byClass = Map(typeSupplier -> locS, typeNation -> locN)),
-      ofSupplier -> sl(lineitem, lIri, iri("supplier", col("l_suppkey")), OKind.KIri)
-        .copy(fused = Seq(lF("ofSupplier")), subjectClasses = Set(typeLine)),
-      quantity -> sl(lineitem, lIri, col("l_quantity").cast(LongType), OKind.KLong)
-        .copy(fused = Seq(lF("quantity")), subjectClasses = Set(typeLine)),
-      graft.rdf.Otit.hasTimeseries -> PredicateSlice(hasTs, OKind.KIri,
-        subjectClasses = Set(typeSensor)),
-      graft.rdf.Otit.hasExternalId -> PredicateSlice(extId, OKind.KStr,
-        subjectClasses = Set(typeSeries)),
-      graft.rdf.Otit.hasDatatype -> PredicateSlice(hasDt, OKind.KIri,
-        subjectClasses = Set(typeSeries)),
+        byClass = Map(typeSupplier -> locS, typeNation -> locN))),
+      ofSupplier -> (() =>
+        sl(lineitem, lIri, iri("supplier", col("l_suppkey")), OKind.KIri)
+          .copy(fused = Seq(lF("ofSupplier")), subjectClasses = Set(typeLine))),
+      quantity -> (() =>
+        sl(lineitem, lIri, col("l_quantity").cast(LongType), OKind.KLong)
+          .copy(fused = Seq(lF("quantity")), subjectClasses = Set(typeLine))),
+      graft.rdf.Otit.hasTimeseries -> (() => PredicateSlice(
+        sensors.select(iri("sensor", col("event_type")).as("s"),
+          iri("series", col("event_type")).as("o")), OKind.KIri,
+        subjectClasses = Set(typeSensor))),
+      graft.rdf.Otit.hasExternalId -> (() =>
+        seriesSlice(col("event_type"), OKind.KStr, typeSeries)),
+      // per-series declared value datatype (the reference's injected
+      // `?ts otit_swt:hasDatatype` vocabulary): events.value is double
+      graft.rdf.Otit.hasDatatype -> (() =>
+        seriesSlice(lit(graft.rdf.Xsd.double), OKind.KIri, typeSeries)),
     )
-    val ts = TsSource(events.select(col("event_type").as("id"), col("ts"), col("value")))
-    TriplesGraph.fromSlices(s, slices, Some(ts))
+    val ts = new LazyTsSource(() =>
+      events.select(col("event_type").as("id"), col("ts"), col("value")))
+    TriplesGraph.fromLazySlices(s, slices, Some(ts))
   }
 
   /** Once-per-(JVM, dir) N-Triples round trip of the graph's DIMENSION
@@ -201,26 +204,19 @@ object TpchGraph {
     customerGraphOf(s, T.customer(s, dir)
       .filter(col("c_custkey") % 2 === parity))
 
-  private def customerGraphOf(s: SparkSession, customer: DataFrame): TriplesGraph = {
+  private def customerGraphOf(s: SparkSession, table: => DataFrame): TriplesGraph = {
+    lazy val customer = table
     val cIri = iri("customer", col("c_custkey"))
-    val cNIri = iri("nation", col("c_nationkey"))
+    def cs(o: Column, kind: OKind): () => PredicateSlice = () =>
+      PredicateSlice(customer.select(cIri.as("s"), o.as("o")), kind,
+        subjectClasses = Set(typeCustomer))
     val slices = Map(
-      name -> PredicateSlice(
-        customer.select(cIri.as("s"), col("c_name").as("o")), OKind.KStr,
-        subjectClasses = Set(typeCustomer)),
-      mktSegment -> PredicateSlice(
-        customer.select(cIri.as("s"), col("c_mktsegment").as("o")), OKind.KStr,
-        subjectClasses = Set(typeCustomer)),
-      nationOf -> PredicateSlice(
-        customer.select(cIri.as("s"), cNIri.as("o")), OKind.KIri,
-        subjectClasses = Set(typeCustomer)),
-      acctbal -> PredicateSlice(
-        customer.select(cIri.as("s"), col("c_acctbal").as("o")), OKind.KDbl,
-        subjectClasses = Set(typeCustomer)),
-      graft.rdf.Rdf.typ -> PredicateSlice(
-        customer.select(cIri.as("s"), lit(typeCustomer).as("o")), OKind.KIri,
-        subjectClasses = Set(typeCustomer)),
+      name -> cs(col("c_name"), OKind.KStr),
+      mktSegment -> cs(col("c_mktsegment"), OKind.KStr),
+      nationOf -> cs(iri("nation", col("c_nationkey")), OKind.KIri),
+      acctbal -> cs(col("c_acctbal"), OKind.KDbl),
+      graft.rdf.Rdf.typ -> cs(lit(typeCustomer), OKind.KIri),
     )
-    TriplesGraph.fromSlices(s, slices)
+    TriplesGraph.fromLazySlices(s, slices)
   }
 }

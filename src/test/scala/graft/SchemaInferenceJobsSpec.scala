@@ -1,16 +1,14 @@
 package graft
 
-import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
 import graft.exec.SparqlExecutor
 import graft.llm.SimGraphStore
 import graft.parser.SparqlParser
 import graft.sparql.{SparqlQueries, TpchGraph}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
-  SparkListenerStageCompleted}
-import scala.jdk.CollectionConverters._
 
 /** No benchmarked query or store path fires a schema-inference job: every
-  * table and store read declares its schema. */
+  * table and store read declares its schema. The SPARQL family's builds
+  * fire no job at all: a query builds only the slices it touches, and the
+  * constant datatype declaration needs no metadata collect. */
 class SchemaInferenceJobsSpec extends SparkTestBase {
 
   private val sf = new java.io.File("perfbench/data/sf0.001").getAbsolutePath
@@ -18,37 +16,11 @@ class SchemaInferenceJobsSpec extends SparkTestBase {
   /** Call sites of the schema-inference jobs `body` fired: one-stage
     * `parquet at …` jobs that write nothing (a parquet write has output),
     * the rule perfbench/layers.py counts as sources.schema_inference_jobs. */
-  private def inferenceJobs(body: => Any): Seq[String] = {
-    val sc = spark.sparkContext
-    val drainGroup = "schema-inference-probe-drain"
-    val oneStage = new ConcurrentHashMap[Int, String]()
-    val written = new ConcurrentHashMap[Int, Long]()
-    val drained = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        if (Option(js.properties)
-            .exists(_.getProperty("spark.jobGroup.id") == drainGroup))
-          drained.countDown()
-        else if (js.stageInfos.size == 1)
-          oneStage.put(js.stageInfos.head.stageId, js.stageInfos.head.name)
-      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
-        written.put(e.stageInfo.stageId, Option(e.stageInfo.taskMetrics)
-          .map(_.outputMetrics.bytesWritten).getOrElse(0L))
+  private def inferenceJobs(body: => Any): Seq[String] =
+    JobProbe(spark)(body).collect {
+      case j if j.stages == 1 && j.callSite.startsWith("parquet at ") &&
+          j.bytesWritten == 0L => j.callSite
     }
-    sc.addSparkListener(listener)
-    try {
-      body
-      // listeners see events asynchronously but in order: once the marker
-      // job's start arrives, every event of `body`'s jobs has too
-      sc.setJobGroup(drainGroup, "listener drain marker")
-      try spark.range(1).count() finally sc.clearJobGroup()
-      assert(drained.await(60, TimeUnit.SECONDS), "listener bus not drained")
-    } finally sc.removeSparkListener(listener)
-    oneStage.asScala.toSeq.collect {
-      case (stage, name) if name.startsWith("parquet at ") &&
-          written.getOrDefault(stage, 0L) == 0L => name
-    }
-  }
 
   test("the probe sees the footer read of a schemaless parquet read") {
     assert(inferenceJobs(spark.read.parquet(T.path(sf, "region"))).size == 1)
@@ -83,5 +55,28 @@ class SchemaInferenceJobsSpec extends SparkTestBase {
       assert(SimGraphStore.edges(spark, dir).collect().nonEmpty)
     }
     assert(jobs.isEmpty, jobs)
+  }
+
+  test("q42: graph build, parse and execute fire no job at all") {
+    val text = SparqlQueries.prologue +
+      SparqlQueries.sparqlTexts("q42_sparql_hybrid_ts")
+    val jobs = JobProbe(spark) {
+      val g = TpchGraph.graph(spark, sf)
+      new SparqlExecutor(g).execute(SparqlParser.parse(text))
+    }
+    assert(jobs.isEmpty, jobs)
+  }
+
+  test("q131's build fires no job at all") {
+    val q = Catalog.all.find(_.name.startsWith("q131_")).get
+    val jobs = JobProbe(spark)(q.fn(spark, sf))
+    assert(jobs.isEmpty, jobs)
+  }
+
+  test("q72 fires exactly its two ASK existence probes") {
+    val q = Catalog.all.find(_.name.startsWith("q72_")).get
+    val sites = JobProbe(spark)(q.fn(spark, sf)).map(_.callSite)
+    assert(sites.size == 2 &&
+      sites.forall(_.startsWith("isEmpty at SparqlExecutor.scala:")), sites)
   }
 }

@@ -1,8 +1,8 @@
 package graft.sparql
 
-import graft.SparkTestBase
+import graft.{JobProbe, SparkTestBase}
 import graft.exec.SparqlExecutor
-import graft.graph.{TriplesGraph, TsSource}
+import graft.graph.{OKind, PredicateSlice, TriplesGraph, TsSource}
 import graft.rdf.{Iri, Lit, Otit, Term, Xsd}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -112,5 +112,66 @@ class HasDatatypeSpec extends SparkTestBase {
         |} ORDER BY ?v""".stripMargin)
       .collect().map(_.getDouble(0)).toSeq
     assert(got == Seq(1.5, 2.5))
+  }
+
+  // ---- a declaration the optimizer reduces to one constant datatype (the
+  // TPC-H graph's shape) is decided from the plan, with no job
+
+  /** The fixture graph with every series (or, with `keep`, the series it
+    * selects) declared as the one constant datatype `dt`. */
+  private def constantDeclared(dt: String,
+      keep: org.apache.spark.sql.Column = lit(true)): TriplesGraph = {
+    val g0 = TriplesGraph.fromTerms(spark, baseTriples, Some(TsSource(tsDf)))
+    val ext = g0.slice(Otit.hasExternalId).get.df
+    TriplesGraph.fromSlices(spark, g0.slices.updated(Otit.hasDatatype,
+      PredicateSlice(ext.filter(keep).select(col("s"), lit(dt).as("o")),
+        OKind.KIri)), g0.ts)
+  }
+
+  private val allValues = prologue +
+    """SELECT ?ts ?v WHERE {
+      |  ?ts otit_swt:hasDataPoint ?dp . ?dp otit_swt:hasValue ?v .
+      |}""".stripMargin
+
+  test("a compatible constant declaration fires no job and keeps the time " +
+      "filter in the events scan") {
+    val sf = new java.io.File("perfbench/data/sf0.001").getAbsolutePath
+    val text = SparqlQueries.prologue +
+      SparqlQueries.sparqlTexts("q42_sparql_hybrid_ts")
+    var df: DataFrame = null
+    val jobs = JobProbe(spark) {
+      df = new SparqlExecutor(TpchGraph.graph(spark, sf)).execute(text)
+    }
+    assert(jobs.isEmpty, jobs)
+    // the data-point scan (the series-metadata scans read event_type only)
+    val scans = df.queryExecution.executedPlan.toString.split("\n")
+      .filter(l => l.contains("FileScan") && l.contains("events.parquet") &&
+        "ReadSchema: struct<[^>]*\\bts:".r.findFirstIn(l).nonEmpty)
+    assert(scans.nonEmpty && scans.forall(l =>
+      "PushedFilters: \\[[^\\]]*GreaterThanOrEqual\\(ts,".r.findFirstIn(l).nonEmpty),
+      scans.mkString("\n"))
+  }
+
+  test("an incompatible constant declaration still fails the query") {
+    val e = intercept[Exception] {
+      new SparqlExecutor(constantDeclared(Xsd.integer)).execute(allValues)
+        .collect()
+    }
+    def messages(t: Throwable): String =
+      if (t == null) "" else t.getMessage + "\n" + messages(t.getCause)
+    assert(messages(e).contains("inconsistent time-series datatypes"))
+  }
+
+  test("an incompatible constant over an empty slice changes no rows") {
+    def rows(g: TriplesGraph) = new SparqlExecutor(g).execute(allValues)
+      .collect().map(r => (r.getString(0), r.getDouble(1))).toSet
+    val undeclared = TriplesGraph.fromTerms(spark, baseTriples,
+      Some(TsSource(tsDf)))
+    val declared = constantDeclared(Xsd.boolean, col("s") === "no-such-series")
+    // decided from the plan: the guard is attached without a metadata job
+    assert(JobProbe(spark)(new SparqlExecutor(declared).execute(allValues))
+      .isEmpty)
+    val got = rows(declared)
+    assert(got.size == 3 && got == rows(undeclared))
   }
 }
