@@ -349,8 +349,9 @@ object AnnOps {
     * `payloadCols` ride along unchanged — the inline-payload layout of a
     * FILTERED vector search index (predicates on them push into the
     * pruned cells scan instead of joining a side table per query).
-    * private[graft]: the SemDedupProbe tool measures learned-cell
-    * occupancy through the same kernel the operator uses. */
+    * private[graft] so learned-cell occupancy is measured through the
+    * same kernel the operator uses (STATUS.md, "SemDeDup with the
+    * production quantizer at 100×"). */
   private[graft] def ivfAssignments(corpus: DataFrame,
       cents: Array[(Long, Array[Float], Double)], dim: Int,
       payloadCols: Seq[String] = Nil): DataFrame = {

@@ -64,17 +64,14 @@ import org.apache.spark.sql.types.LongType
   * lastBid — a crash between the sidecar write and the swap leaves an
   * orphan partition readers ignore and the next append deletes.
   *
-  * Replay discipline (the [[SimGraphStore]] / StreamingCuration rule): a
-  * `foreachBatch` maintainer passes the ENGINE batch id; a replayed
-  * in-flight id (== lastBid) is a no-op — OR-folding the same rows twice
-  * is bitwise idempotent anyway, but skipping keeps `nItems` honest — and
-  * an OLDER id means the checkpoint and the store are out of sync and
-  * fails loudly. The skip path VERIFIES the replay (ADVICE r12): meta
-  * carries `lastSig`, an order-free signature of the committed batch's
-  * fingerprint multiset, and a "replay" whose rows don't match it fails
-  * loudly instead of silently no-opping — so a reset checkpoint exactly
-  * one batch behind (indistinguishable from a replay by id alone) can
-  * only be skipped when it genuinely carries the already-folded rows.
+  * Replay discipline: [[graft.sources.AppendLog.resolveId]]'s rule, with
+  * the latest id and its signature kept in meta (`lastBid`, `lastSig`)
+  * instead of marker files — the filter and its meta commit together
+  * through the whole-store swap below. A `foreachBatch` maintainer passes
+  * the ENGINE batch id; a verified replay of lastBid is skipped (OR-folding
+  * the same rows twice is bitwise idempotent anyway, but skipping keeps
+  * `nItems` honest). `lastSig` signs the batch's FINGERPRINT multiset,
+  * which the append computes in the same pass as the fold.
   *
   * FP-rate policy (STATUS note): the filter cannot resize in place, so
   * appends monotonically raise occupancy. [[estimatedFpRate]] estimates
@@ -159,27 +156,11 @@ object BloomHistory {
     graft.sources.ParquetCompaction.recover(spark, path)
     val (mBits, k, nItems, lastBid) = readMeta(spark, path)
     val nShards = readShards(spark, path)
-    val bid = explicitBid match {
-      case None => lastBid + 1L
-      case Some(b) =>
-        if (b == lastBid) {
-          // replayed in-flight batch: no-op — but VERIFY it (class doc):
-          // a reset checkpoint one batch behind carries the same id with
-          // DIFFERENT rows, and skipping those would drop a real batch
-          val sig = batchSig(batch, textCol)
-          require(readSig(spark, path).forall(_ == sig),
-            s"batch id $b matches the store's latest committed id at " +
-              s"$path but its rows differ from the committed batch — " +
-              "this is a reset checkpoint one batch behind, not a " +
-              "replay; reset the checkpoint and the store together")
-          return b
-        }
-        require(b > lastBid,
-          s"batch id $b is older than the store's latest committed " +
-            s"$lastBid at $path — a replay can only repeat the latest " +
-            "batch; reset the checkpoint and the store together")
-        b
-    }
+    // the log's replay rule over this store's meta: lastBid is the latest
+    // committed id and lastSig its signature (of the fingerprint multiset)
+    val bid = graft.sources.AppendLog.resolveId(lastBid, explicitBid,
+      readSig(spark, path), batchSig(batch, textCol), s"store at $path")
+      .getOrElse(return lastBid)
     graft.functions.BloomFilterAgg.register(spark)
     // the sidecar write precedes the swap (class doc): orphans from a
     // crashed earlier attempt are exactly the partitions above lastBid

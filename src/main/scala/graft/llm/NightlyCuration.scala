@@ -37,7 +37,8 @@ import org.apache.spark.sql.functions._
   * Scale (100 TB lens): one night's cost is
   * O(batch + pruned-postings + Bloom-hit verifies); the lake-sized
   * costs (index builds) were paid once at bootstrap. Measured at 100×
-  * in tools/NightlyCurationProbe (STATUS r13 table). */
+  * by a one-off probe: the "100× night" entry of STATUS.md's round-13
+  * list. */
 object NightlyCuration {
 
   /** Paths of the five persisted stores under one root. */

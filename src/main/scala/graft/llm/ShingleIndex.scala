@@ -1,5 +1,6 @@
 package graft.llm
 
+import graft.sources.AppendLog
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -29,13 +30,11 @@ import org.apache.spark.sql.types._
   *    epochs (Zipf-small work; [[compactIndex]] keeps it merged).
   *  - `sigs/` — per-doc (id, sh, hs) verify signatures
   *    ([[TextOps.shingleSigs]] shape), partitioned by ep.
-  *  - `_epochs/<k>` — marker files, one per COMMITTED epoch (build = 0).
-  *    An append's three writes are not atomic together, so every
-  *    sub-dataset is directory-partitioned by epoch and readers prune to
-  *    committed ids — a crash mid-append leaves orphan `ep=` partitions
-  *    that are invisible, and the next [[appendToIndex]] or
-  *    [[compactIndex]] deletes them BEFORE reusing the id (the
-  *    [[SimGraphStore]] marker discipline). The marker is the commit.
+  *  - `_epochs/<k>` — the commit markers (build = epoch 0) of the
+  *    [[graft.sources.AppendLog]] the three sub-datasets are partitioned
+  *    under (`ep=<k>/`): an append's three writes are not atomic
+  *    together, so the marker is the commit, and the log's discipline
+  *    makes a crashed append's retry exact.
   *  - `_graft_shingle_meta.json` — nBuckets, n, layout version.
   *
   * Rank staleness across epochs (the exactness story VERDICT r11 #1 asked
@@ -94,6 +93,8 @@ object ShingleIndex {
 
   private val metaFile = "_graft_shingle_meta.json"
 
+  private val log = AppendLog("_epochs", "ep", Seq("postings", "df", "sigs"))
+
   private def postingsSchema = StructType(Seq(StructField("id", LongType),
     StructField("sz", IntegerType), StructField("s", StringType),
     StructField("rn", IntegerType), StructField("ep", LongType),
@@ -148,12 +149,12 @@ object ShingleIndex {
     // marker BEFORE meta (ADVICE r12): meta is every entry point's
     // fail-fast probe, so it must be the LAST artifact a build writes —
     // a crash between the two leaves a store readMeta rejects loudly,
-    // never one whose fail-fast passes while committedEpochs is empty
+    // never one whose fail-fast passes while no epoch is committed
     // and serving silently returns nothing. The marker carries the build
     // corpus's signature, so a stream batch landing on the build id (the
     // r13 bootstrap-seam collision) content-verifies instead of
     // id-only-skipping.
-    commitEpoch(spark, path, 0L, Some(batchSig(docs, idCol, textCol)))
+    log.commit(spark, path, 0L, AppendLog.batchSig(docs, idCol, textCol))
     writeMeta(spark, path, nBuckets, n)
   }
 
@@ -165,56 +166,30 @@ object ShingleIndex {
     * `ep=` partitions that the retry wipes before reusing the id.
     * Returns the committed epoch id.
     *
-    * `explicitEp` is the streaming seam (the [[SimGraphStore.update]]
-    * discipline): a `foreachBatch` maintainer passes the ENGINE's batch
-    * id (offset by the build epoch — see [[graft.streaming
-    * .StreamingShingleIndex]]) so a crash-replayed micro-batch — same
-    * id, same rows — is recognized as committed and skipped; an OLDER id
-    * means the checkpoint and the index are out of sync and fails
-    * loudly. */
+    * `explicitEp` is the streaming seam: a `foreachBatch` maintainer
+    * passes the ENGINE's batch id (offset by the build epoch — see
+    * [[graft.streaming.StreamingShingleIndex]]) so a crash-replayed
+    * micro-batch is recognized as committed and skipped, under
+    * [[AppendLog.resolveId]]'s rule. */
   def appendToIndex(spark: SparkSession, path: String, batch: DataFrame,
       idCol: String, textCol: String,
       explicitEp: Option[Long] = None): Long = {
     graft.sources.ParquetCompaction.recover(spark, path)
     val (nBuckets, n) = readMeta(spark, path)
-    cleanOrphanEpochs(spark, path)
-    val eps = committedEpochs(spark, path)
-    require(eps.nonEmpty, s"no built index to append to at $path")
-    val maxCommitted = eps.max
-    val ep = explicitEp match {
-      case None => maxCommitted + 1L
-      case Some(e) =>
-        if (e == maxCommitted) {
-          // replayed in-flight batch: no-op — but VERIFY it when the
-          // marker carries the committed batch's signature (ADVICE r12:
-          // a reset checkpoint one batch behind presents the same id
-          // with DIFFERENT rows; skipping those would drop a real
-          // batch). Build markers carry the corpus signature and
-          // compaction preserves the folded epoch's, so every
-          // replayable id content-verifies (pre-existing v2 stores
-          // with empty markers fall back to the id-only skip).
-          epochSig(spark, path, e).foreach { committedSig =>
-            require(batchSig(batch, idCol, textCol) == committedSig,
-              s"epoch id $e matches the index's latest committed id at " +
-                s"$path but its rows differ from the committed batch — " +
-                "this is a reset checkpoint one batch behind, not a " +
-                "replay; reset the checkpoint and the index together")
-          }
-          return e
-        }
-        require(e > maxCommitted,
-          s"epoch id $e is older than the index's latest committed " +
-            s"$maxCommitted at $path — a replay can only repeat the " +
-            "latest epoch; reset the checkpoint and the index together")
-        e
-    }
+    log.cleanOrphans(spark, path)
+    val latest = log.latest(spark, path)
+    require(latest >= 0L, s"no built index to append to at $path")
+    val ep = AppendLog.resolveId(latest, explicitEp,
+      log.sig(spark, path, latest),
+      AppendLog.batchSig(batch, idCol, textCol),
+      s"index at $path").getOrElse(return latest)
     val base = TextOps.shingleSigs(batch, idCol, textCol, n).localCheckpoint()
     val ex = base.select(col("id"), size(col("sh")).as("sz"),
       explode(col("sh")).as("s"))
     val delta = ex.groupBy("s").agg(count(lit(1)).as("dd")).localCheckpoint()
     // post-merge df for exactly the batch's shingles (all the ranking
     // window needs); the committed fold is Zipf-small
-    val dfCur = committed(spark, path, "df", dfSchema)
+    val dfCur = log.read(spark, path, "df", dfSchema)
       .groupBy("s").agg(sum("df").as("df0"))
     val mergedDf = delta.join(dfCur, Seq("s"), "left")
       .select(col("s"),
@@ -240,7 +215,7 @@ object ShingleIndex {
         .write.mode("append").partitionBy("ep", "sb").parquet(s"$path/df"),
       () => base.withColumn("ep", lit(ep))
         .write.mode("append").partitionBy("ep").parquet(s"$path/sigs")))
-    commitEpoch(spark, path, ep, Some(batchSig(batch, idCol, textCol)))
+    log.commit(spark, path, ep, AppendLog.batchSig(batch, idCol, textCol))
     ep
   }
 
@@ -252,7 +227,7 @@ object ShingleIndex {
       threshold: Double): DataFrame = {
     graft.sources.ParquetCompaction.recover(spark, path)
     readMeta(spark, path) // fail fast on a missing/partial index
-    val postings = committed(spark, path, "postings", postingsSchema)
+    val postings = log.read(spark, path, "postings", postingsSchema)
     val probe = postings
       .filter(col("rn") <= col("sz") - ceil(lit(threshold) * col("sz")) + 1)
       .select(col("id").as("ida"), col("sz").as("sza"), col("s"),
@@ -261,7 +236,7 @@ object ShingleIndex {
       col("s").as("s2"), col("rn").as("rnb"), col("ep").as("epb"))
     val candidates = TextOps.containmentCandidates(probe, target, threshold,
       sameOrder = col("epa") === col("epb"))
-    val sigs = committed(spark, path, "sigs", sigsSchema)
+    val sigs = log.read(spark, path, "sigs", sigsSchema)
       .select("id", "sh", "hs")
     TextOps.containmentVerify(candidates, sigs, sigs, threshold)
   }
@@ -279,7 +254,7 @@ object ShingleIndex {
     val sigsA = TextOps.shingleSigs(batch, idCol, textCol, n)
       .localCheckpoint()
     val candidates = againstCandidates(spark, path, sigsA, threshold)
-    val sigsB = committed(spark, path, "sigs", sigsSchema)
+    val sigsB = log.read(spark, path, "sigs", sigsSchema)
       .select("id", "sh", "hs")
     TextOps.containmentVerify(candidates, sigsA, sigsB, threshold)
   }
@@ -290,14 +265,13 @@ object ShingleIndex {
   private[graft] def againstCandidates(spark: SparkSession, path: String,
       sigsA: DataFrame, threshold: Double): DataFrame = {
     val (nBuckets, _) = readMeta(spark, path)
-    val eps = committedEpochs(spark, path)
-    val curEp = if (eps.isEmpty) 0L else eps.max
+    val curEp = math.max(log.latest(spark, path), 0L)
     val ex = sigsA.select(col("id"), size(col("sh")).as("sz"),
       explode(col("sh")).as("s"))
     // rank by the index's CURRENT df order (batch-only shingles as
     // df = 0) — which is the LATEST epoch's rank order, so the positional
     // filter applies exactly there and is waived for older epochs
-    val dfTab = committed(spark, path, "df", dfSchema)
+    val dfTab = log.read(spark, path, "df", dfSchema)
       .groupBy("s").agg(sum("df").as("df"))
     val w = Window.partitionBy("id").orderBy(col("df"), col("s"))
     val probe = ex.join(dfTab, Seq("s"), "left")
@@ -312,7 +286,7 @@ object ShingleIndex {
     val buckets = probe
       .select(pmod(xxhash64(col("s")), lit(nBuckets)).as("sb"))
       .distinct().collect().map(_.getLong(0)).toSeq
-    val target = committed(spark, path, "postings", postingsSchema)
+    val target = log.read(spark, path, "postings", postingsSchema)
       .filter(col("sb").isin(buckets: _*))
       .select(col("id").as("idb"), col("sz").as("szb"),
         col("s").as("s2"), col("rn").as("rnb"), col("ep").as("epb"))
@@ -329,24 +303,22 @@ object ShingleIndex {
     * .rewrite]]), so a kill at any stage leaves the old or the new store,
     * never a mix; output of every serve is unchanged (spec-pinned). */
   def compactIndex(spark: SparkSession, path: String): Unit = {
-    import org.apache.hadoop.fs.Path
     graft.sources.ParquetCompaction.recover(spark, path)
-    cleanOrphanEpochs(spark, path)
+    log.cleanOrphans(spark, path)
     val (nBuckets, n) = readMeta(spark, path)
-    val eps = committedEpochs(spark, path)
-    if (eps.isEmpty) return
-    val keep = eps.max
+    val keep = log.latest(spark, path)
+    if (keep < 0L) return
     // the kept epoch stays replayable after the fold: carry its replay
     // signature into the rewritten marker (read BEFORE the swap deletes
     // the old one), so a post-compaction replay of the last batch still
-    // content-verifies instead of id-only-skipping
-    val keepSig = epochSig(spark, path, keep)
+    // content-verifies
+    val keepSig = log.sig(spark, path, keep).get
     // materialize the folds BEFORE the swap deletes their input files
-    val sigs = committed(spark, path, "sigs", sigsSchema)
+    val sigs = log.read(spark, path, "sigs", sigsSchema)
       .select("id", "sh", "hs").localCheckpoint()
-    val dfAll = committed(spark, path, "df", dfSchema)
+    val dfAll = log.read(spark, path, "df", dfSchema)
       .groupBy("s").agg(sum("df").as("df")).localCheckpoint()
-    val ranked = committed(spark, path, "postings", postingsSchema)
+    val ranked = log.read(spark, path, "postings", postingsSchema)
       .select("id", "sz", "s").join(dfAll, "s")
       .withColumn("rn", row_number().over(
         Window.partitionBy("id").orderBy(col("df"), col("s"))))
@@ -368,17 +340,14 @@ object ShingleIndex {
       graft.sources.MetaSidecar.write(spark, tmp, metaFile,
         Seq("nBuckets" -> nBuckets.toString, "n" -> n.toString,
           "v" -> "2"))
-      val marker = new Path(s"$tmp/_epochs", keep.toString)
-      val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val out = fs.create(marker, true)
-      try keepSig.foreach(s => out.write(s.toString.getBytes("UTF-8")))
-      finally out.close()
+      log.commit(spark, tmp, keep, keepSig)
     }
   }
 
   /** Operational compaction dial (the [[SimGraphStore.compactionDue]]
-    * pattern), set from the r13 cadence rehearsal (tools/ShingleCadence,
-    * 10 sequential 1%-appends at the 100× corpus — STATUS r13 table):
+    * pattern), set from the r13 cadence rehearsal (10 sequential
+    * 1%-appends at the 100× corpus — the STATUS.md table "ShingleIndex
+    * cadence — 10 sequential 1% appends at 100×"):
     * APPEND cost stays FLAT as epochs accumulate (17–23 s per 1% batch,
     * no trend — batch-sized ranking + a vocab-sized df fold), but the
     * nightly batch-vs-index serve ([[containmentAgainst]]) degrades with
@@ -395,93 +364,7 @@ object ShingleIndex {
     * run [[compactIndex]] in the maintenance slot between appends. */
   def compactionDue(spark: SparkSession, path: String,
       maxEpochs: Int = 4): Boolean =
-    committedEpochs(spark, path).size > maxEpochs
-
-  // ---- epoch plumbing (the SimGraphStore marker discipline) ----
-
-  private def committedEpochs(spark: SparkSession, path: String): Seq[Long] = {
-    import org.apache.hadoop.fs.Path
-    val dir = new Path(path, "_epochs")
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dir)) Seq.empty
-    else fs.listStatus(dir).toSeq.map(_.getPath.getName.toLong)
-  }
-
-  /** Write the commit marker with the committed batch's replay signature:
-    * appends stamp the batch's, build stamps the corpus's, and compaction
-    * preserves the folded epoch's — every replayable id content-verifies. */
-  private def commitEpoch(spark: SparkSession, path: String, ep: Long,
-      sig: Option[Long] = None): Unit = {
-    import org.apache.hadoop.fs.Path
-    val marker = new Path(s"$path/_epochs", ep.toString)
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(marker, true)
-    try sig.foreach(s => out.write(s.toString.getBytes("UTF-8")))
-    finally out.close()
-  }
-
-  /** The replay signature stamped into an epoch's commit marker, if the
-    * marker carries one. */
-  private def epochSig(spark: SparkSession, path: String,
-      ep: Long): Option[Long] = {
-    import org.apache.hadoop.fs.Path
-    val marker = new Path(s"$path/_epochs", ep.toString)
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(marker)) None
-    else {
-      val in = fs.open(marker)
-      val txt =
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-        finally in.close()
-      if (txt.isEmpty) None else txt.toLongOption
-    }
-  }
-
-  /** Order-free signature of a batch's (id, text) multiset — what the
-    * replay skip verifies. One map-only pass, paid only on replay. */
-  private def batchSig(batch: DataFrame, idCol: String,
-      textCol: String): Long = {
-    val row = batch
-      .select(xxhash64(col(idCol).cast(LongType), col(textCol)).as("h"))
-      .agg(coalesce(expr("bit_xor(h)"), lit(0L)).as("bx"),
-        count(lit(1)).as("bn"))
-      .collect()(0)
-    row.getLong(0) ^ java.lang.Long.rotateLeft(row.getLong(1), 32) ^
-      0x5851f42d4c957f2dL
-  }
-
-  /** Delete `ep=` partitions no committed marker vouches for — a crashed
-    * append's partial writes. Cheap directory ops. */
-  private def cleanOrphanEpochs(spark: SparkSession, path: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val ids = committedEpochs(spark, path).toSet
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    Seq("postings", "df", "sigs").foreach { sub =>
-      val p = new Path(path, sub)
-      if (fs.exists(p)) fs.listStatus(p).foreach { st =>
-        val name = st.getPath.getName
-        if (name.startsWith("ep=") &&
-            !ids.contains(name.stripPrefix("ep=").toLong))
-          fs.delete(st.getPath, true)
-      }
-    }
-  }
-
-  /** Committed rows of an epoch-partitioned sub-dataset (empty frame with
-    * the right schema when nothing committed). The ep filter is a
-    * PARTITION filter — orphan partitions never even list into the scan. */
-  private def committed(spark: SparkSession, path: String, sub: String,
-      schema: StructType): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    val p = new Path(path, sub)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val ids = committedEpochs(spark, path)
-    if (ids.isEmpty || !fs.exists(p))
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else spark.read.schema(schema).parquet(p.toString)
-      .filter(col("ep").isin(ids: _*))
-  }
+    log.committed(spark, path).size > maxEpochs
 
   private def writeMeta(spark: SparkSession, path: String, nBuckets: Int,
       n: Int): Unit =

@@ -1,5 +1,6 @@
 package graft.llm
 
+import graft.sources.AppendLog
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
@@ -22,16 +23,13 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   *    df, so stale rows are dead weight until [[compact]] drops them).
   *  - `df/`     — (s, df, bid) document-frequency deltas; current df =
   *    SUM per shingle.
-  *  - `_batches/<bid>` — marker files, one per COMMITTED update. The
-  *    three appends of an update are not atomic together, so every
-  *    sub-dataset is directory-partitioned by batch id (`bid=<k>/`) and
-  *    readers prune to committed ids — a crash mid-update leaves orphan
-  *    `bid=` partitions that are invisible, and the next [[update]] or
-  *    [[compact]] deletes them BEFORE reusing the id (ids derive from
-  *    committed markers, so a crashed batch and its retry share one: the
-  *    cleanup is what makes the retry exact rather than double-counted).
-  *    The marker is the commit point, the same discipline as the
-  *    TriplesGraph manifest.
+  *  - `_batches/<bid>` — the commit markers of the
+  *    [[graft.sources.AppendLog]] the three sub-datasets are partitioned
+  *    under (`bid=<k>/`): an update's three appends are not atomic
+  *    together, so the marker is the commit point and the log's
+  *    discipline — committed-only reads, orphan cleanup before an id is
+  *    reused, the latest-id replay rule — makes a crashed update's retry
+  *    exact rather than double-counted.
   *
   * Update math (exactness argument): for a pair (a, b) and a common
   * shingle s, a +1 is appended exactly when the LATER of the two arrives
@@ -62,6 +60,8 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
 object SimGraphStore {
 
   private val metaFile = "_graft_simgraph_meta.json"
+
+  private val log = AppendLog("_batches", "bid", Seq("edges", "df", "post"))
 
   private def edgeSchema = StructType(Seq(StructField("a", LongType),
     StructField("b", LongType), StructField("c", LongType),
@@ -133,96 +133,30 @@ object SimGraphStore {
       requireLong(txt, path, "minCommon"))
   }
 
-  private def committedIds(spark: SparkSession, path: String): Seq[Long] = {
-    import org.apache.hadoop.fs.Path
-    val dir = new Path(path, "_batches")
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dir)) Seq.empty
-    else fs.listStatus(dir).toSeq.map(_.getPath.getName.toLong)
-  }
-
-  /** Committed rows of an append-grown sub-dataset (empty frame with the
-    * right schema when nothing committed yet). The bid filter is a
-    * PARTITION filter — orphan partitions are never even listed into the
-    * scan. */
-  private def committed(spark: SparkSession, path: String, sub: String,
-      schema: StructType): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    val p = new Path(path, sub)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val ids = committedIds(spark, path)
-    // an empty batch writes no bid= partition at all; a dir holding only
-    // _SUCCESS reads as empty under the declared schema
-    if (ids.isEmpty || !fs.exists(p))
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else spark.read.schema(schema).parquet(p.toString)
-      .filter(col("bid").isin(ids: _*))
-  }
-
-  /** Delete `bid=` partitions no committed marker vouches for — a crashed
-    * update's partial appends. Cheap directory ops; called before any
-    * batch id is (re)used. */
-  private def cleanOrphans(spark: SparkSession, path: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val ids = committedIds(spark, path).toSet
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    Seq("edges", "df", "post").foreach { sub =>
-      val p = new Path(path, sub)
-      if (fs.exists(p)) fs.listStatus(p).foreach { st =>
-        val name = st.getPath.getName
-        if (name.startsWith("bid=") &&
-            !ids.contains(name.stripPrefix("bid=").toLong))
-          fs.delete(st.getPath, true)
-      }
-    }
-  }
-
   /** Fold a batch of NEW documents into the graph. Returns the committed
     * batch id.
     *
     * `explicitBid` is the streaming seam: a `foreachBatch` caller passes
     * the ENGINE's batch id so a crash-replayed micro-batch (same id, same
     * rows — the Structured Streaming contract) is recognized and skipped
-    * instead of double-counted. Only the LATEST committed id may be
-    * replayed (foreachBatch replays at most the one in-flight batch); an
-    * older id means the checkpoint and the store are out of sync (e.g. a
-    * fresh checkpoint pointed at an existing store) and fails loudly —
-    * the same discipline as StreamingCuration's own-tagged-rows guard. */
+    * instead of double-counted, under [[AppendLog.resolveId]]'s rule (an
+    * older id, e.g. a fresh checkpoint pointed at an existing store,
+    * fails loudly). */
   def update(spark: SparkSession, path: String, batch: DataFrame,
       idCol: String, textCol: String,
       explicitBid: Option[Long] = None): Long = {
-    import org.apache.hadoop.fs.Path
     graft.sources.ParquetCompaction.recover(spark, path)
-    cleanOrphans(spark, path)
+    log.cleanOrphans(spark, path)
     val (n, cap, _) = readMeta(spark, path)
-    val maxCommitted = committedIds(spark, path).foldLeft(-1L)(math.max)
-    val bid = explicitBid match {
-      case None => maxCommitted + 1L
-      case Some(b) =>
-        if (b == maxCommitted) {
-          // replayed in-flight batch: no-op — but VERIFY it when the
-          // marker carries the committed batch's signature (ADVICE r12:
-          // a reset checkpoint one batch behind presents the same id
-          // with DIFFERENT rows; skipping those would drop a real batch)
-          batchMarkerSig(spark, path, b).foreach { committedSig =>
-            require(batchSig(batch, idCol, textCol) == committedSig,
-              s"batch id $b matches the store's latest committed id at " +
-                s"$path but its rows differ from the committed batch — " +
-                "this is a reset checkpoint one batch behind, not a " +
-                "replay; reset the checkpoint and the store together")
-          }
-          return b
-        }
-        require(b > maxCommitted,
-          s"batch id $b is older than the store's latest committed " +
-            s"$maxCommitted at $path — a replay can only repeat the " +
-            "latest batch; reset the checkpoint and the store together")
-        b
-    }
+    val latest = log.latest(spark, path)
+    val bid = AppendLog.resolveId(latest, explicitBid,
+      log.sig(spark, path, latest),
+      AppendLog.batchSig(batch, idCol, textCol),
+      s"store at $path").getOrElse(return latest)
     // batch postings: one row per (doc, DISTINCT shingle)
     val bp = postingsOf(batch, idCol, textCol, n).localCheckpoint()
     val delta = bp.groupBy("s").agg(count(lit(1)).as("dd"))
-    val dfCur = committed(spark, path, "df", dfSchema)
+    val dfCur = log.read(spark, path, "df", dfSchema)
       .groupBy("s").agg(sum("df").as("df0"))
     // every batch shingle with its pre/post df — the crossing analysis
     val j = delta.join(dfCur, Seq("s"), "left")
@@ -230,7 +164,7 @@ object SimGraphStore {
         (coalesce(col("df0"), lit(0L)) + col("dd")).as("df1"),
         col("dd"))
       .localCheckpoint()
-    val post = committed(spark, path, "post", postSchema)
+    val post = log.read(spark, path, "post", postSchema)
     // retractions: shingles this batch pushes over the cap take back the
     // +1 every pair of their (all still-valid: df0 ≤ cap) posting docs got
     val crossed = j.filter(col("df0") <= cap && col("df1") > cap).select("s")
@@ -268,47 +202,8 @@ object SimGraphStore {
         .write.mode("append").partitionBy("bid").parquet(s"$path/df"),
       () => bpr.withColumn("bid", lit(bid))
         .write.mode("append").partitionBy("bid").parquet(s"$path/post")))
-    // the marker carries the batch's replay signature (the ShingleIndex
-    // discipline, ADVICE r12): the replay skip verifies it
-    val marker = new Path(s"$path/_batches", bid.toString)
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(marker, true)
-    try out.write(batchSig(batch, idCol, textCol).toString.getBytes("UTF-8"))
-    finally out.close()
+    log.commit(spark, path, bid, AppendLog.batchSig(batch, idCol, textCol))
     bid
-  }
-
-  /** Order-free signature of a batch's (id, text) multiset — what the
-    * replay skip verifies. One map-only pass, paid only on replay and
-    * commit. */
-  private def batchSig(batch: DataFrame, idCol: String,
-      textCol: String): Long = {
-    val row = batch
-      .select(xxhash64(col(idCol).cast(LongType), col(textCol)).as("h"))
-      .agg(coalesce(expr("bit_xor(h)"), lit(0L)).as("bx"),
-        count(lit(1)).as("bn"))
-      .collect()(0)
-    row.getLong(0) ^ java.lang.Long.rotateLeft(row.getLong(1), 32) ^
-      0x5851f42d4c957f2dL
-  }
-
-  /** The replay signature stamped into a batch's commit marker, if the
-    * marker carries one (updates stamp the batch's; compaction preserves
-    * the folded id's, so post-compaction replays content-verify too;
-    * only pre-existing stores with empty markers fall back to id-only). */
-  private def batchMarkerSig(spark: SparkSession, path: String,
-      bid: Long): Option[Long] = {
-    import org.apache.hadoop.fs.Path
-    val marker = new Path(s"$path/_batches", bid.toString)
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(marker)) None
-    else {
-      val in = fs.open(marker)
-      val txt =
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-        finally in.close()
-      if (txt.isEmpty) None else txt.toLongOption
-    }
   }
 
   /** Operational compaction dial, set from the r12 cadence rehearsal
@@ -325,14 +220,14 @@ object SimGraphStore {
     * between folds. */
   def compactionDue(spark: SparkSession, path: String,
       maxDeltaBatches: Int = 4): Boolean =
-    committedIds(spark, path).size > maxDeltaBatches
+    log.committed(spark, path).size > maxDeltaBatches
 
   /** The graph: (a, b) doc pairs currently sharing ≥ minCommon rare
     * shingles. */
   def edges(spark: SparkSession, path: String): DataFrame = {
     graft.sources.ParquetCompaction.recover(spark, path)
     val (_, _, minCommon) = readMeta(spark, path)
-    committed(spark, path, "edges", edgeSchema)
+    log.read(spark, path, "edges", edgeSchema)
       .groupBy("a", "b").agg(sum("c").as("c"))
       .filter(col("c") >= minCommon).select("a", "b")
   }
@@ -343,28 +238,26 @@ object SimGraphStore {
     * log to a single committed id. Whole-store rewrite-then-swap, so a
     * kill at any point leaves either the old or the new store. */
   def compact(spark: SparkSession, path: String): Unit = {
-    import org.apache.hadoop.fs.Path
     graft.sources.ParquetCompaction.recover(spark, path)
-    cleanOrphans(spark, path)
+    log.cleanOrphans(spark, path)
     val (n, cap, minCommon) = readMeta(spark, path)
-    val ids = committedIds(spark, path)
+    val keepBid = log.latest(spark, path)
     // no committed batches → nothing to fold, and writing a marker for id
     // 0 here would make a later stream's FIRST fold (engine batch id 0)
     // look like a replay and silently skip — so an empty store is a no-op
-    if (ids.isEmpty) return
-    val keepBid = ids.max
+    if (keepBid < 0L) return
     // carry the kept id's replay signature into the rewritten marker
     // (read BEFORE the swap), so a post-compaction replay of the last
-    // batch still content-verifies instead of id-only-skipping
-    val keepSig = batchMarkerSig(spark, path, keepBid)
+    // batch still content-verifies
+    val keepSig = log.sig(spark, path, keepBid).get
     graft.sources.ParquetCompaction.rewrite(spark, path) { tmp =>
-      val mergedEdges = committed(spark, path, "edges", edgeSchema)
+      val mergedEdges = log.read(spark, path, "edges", edgeSchema)
         .groupBy("a", "b").agg(sum("c").as("c"))
         .filter(col("c") =!= 0L).withColumn("bid", lit(keepBid))
-      val mergedDf = committed(spark, path, "df", dfSchema)
+      val mergedDf = log.read(spark, path, "df", dfSchema)
         .groupBy("s").agg(sum("df").as("df")).withColumn("bid", lit(keepBid))
       val rare = mergedDf.filter(col("df") <= cap).select("s")
-      val livePost = committed(spark, path, "post", postSchema)
+      val livePost = log.read(spark, path, "post", postSchema)
         .select("d", "s").join(rare, "s").select(col("d"), col("s"))
         .withColumn("bid", lit(keepBid))
       // three disjoint sub-datasets of the rewrite temp (guide §2.6)
@@ -375,11 +268,7 @@ object SimGraphStore {
       graft.sources.MetaSidecar.write(spark, tmp, metaFile,
         Seq("n" -> n.toString, "cap" -> cap.toString,
           "minCommon" -> minCommon.toString))
-      val marker = new Path(s"$tmp/_batches", keepBid.toString)
-      val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val out = fs.create(marker, true)
-      try keepSig.foreach(s => out.write(s.toString.getBytes("UTF-8")))
-      finally out.close()
+      log.commit(spark, tmp, keepBid, keepSig)
     }
   }
 }

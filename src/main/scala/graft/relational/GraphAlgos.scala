@@ -43,9 +43,10 @@ object GraphAlgos {
     * graphs (nodes ≫ executor memory) exceed the threshold and fall back
     * to the shuffled equi-join automatically.
     *
-    * The default is MEMORY-DERIVED (r12 PageRankThresholdProbe, both
-    * paths at 0.6M/1.1M/2.1M/4.2M nodes, two passes in one window, on a
-    * 56 GiB driver — STATUS table): at ≤2.1M nodes the two paths tie
+    * The default is MEMORY-DERIVED (r12 one-off probe, both paths at
+    * 0.6M/1.1M/2.1M/4.2M nodes, two passes in one window, on a 56 GiB
+    * driver — STATUS.md table "PageRank broadcast-vs-shuffled
+    * crossover"): at ≤2.1M nodes the two paths tie
     * within the host band (winners swap between passes), while at 4.2M
     * broadcast collapses to 2.4–2.6× the shuffled wall in BOTH passes
     * (604–673 s vs 237–274 s — a per-round node-sized broadcast build +

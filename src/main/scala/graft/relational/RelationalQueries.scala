@@ -557,8 +557,8 @@ object RelationalQueries {
     // spelling (Sessionize scaladoc): windows partition by (user, 6h salt
     // range) and sessions stitch across boundaries via per-bucket
     // summaries, so a 50%-hot user no longer serializes half the corpus
-    // through one window task (the SkewProbe finding); output numbering
-    // is bit-identical to the oracle's plain per-user window.
+    // through one window task (STATUS.md, "Skew stress probe"); output
+    // numbering is bit-identical to the oracle's plain per-user window.
     q("q64_sessionize",
       """WITH e AS (
         |  SELECT event_id, user_id, epoch_ns(ts) // 1000 AS us FROM events

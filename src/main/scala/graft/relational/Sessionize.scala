@@ -5,9 +5,9 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Gap-based sessionization with TIME-RANGE SALTING — the documented cure
-  * for the per-user window's skew cliff (SkewProbe: at a 50% hot key, half
-  * the corpus lands in ONE window partition; a real celebrity/bot key does
-  * the same at lake scale).
+  * for the per-user window's skew cliff (STATUS.md "Skew stress probe": at
+  * a 50% hot key, half the corpus lands in ONE window partition; a real
+  * celebrity/bot key does the same at lake scale).
   *
   * The naive spelling partitions a window by user alone, so a user's whole
   * history serializes through one task. Here every event first salts into

@@ -16,11 +16,6 @@ package graft.sources
   * finished, so a failed lifecycle never half-hides behind a swallowed
   * error; tasks still queued behind a failure never start. */
 object ParJobs {
-  /** A/B knob: SPARK_GRAFT_SERIAL_FOLDS=1 runs every ParJobs call
-    * sequentially — one binary measures the overlap win itself. */
-  private def serial: Boolean =
-    sys.env.get("SPARK_GRAFT_SERIAL_FOLDS").contains("1")
-
   def run(tasks: Seq[() => Unit]): Unit = map(tasks)
 
   /** Most tasks one call runs at once (every in-repo caller passes
@@ -33,7 +28,7 @@ object ParJobs {
     * lifecycle it belongs to is already lost. */
   def map[A](tasks: Seq[() => A]): Seq[A] = {
     if (tasks.isEmpty) return Seq.empty
-    if (tasks.size == 1 || serial) return tasks.map(_())
+    if (tasks.size == 1) return tasks.map(_())
     val threads = math.min(tasks.size, maxThreads)
     val failed = new java.util.concurrent.atomic.AtomicBoolean(false)
     val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)

@@ -2,7 +2,6 @@ package graft.streaming
 
 import graft.llm.BloomHistory
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.Trigger
 
 /** Streaming maintenance of the persisted Bloom history filter: each
   * micro-batch of documents OR-folds into a [[BloomHistory]] store via
@@ -23,19 +22,9 @@ object StreamingBloomHistory {
   /** Drain currently-available input into the filter store at `storeDir`
     * (which must already be [[BloomHistory.init]]ed). */
   def run(spark: SparkSession, srcDir: String, storeDir: String,
-      checkpointDir: String, maxFilesPerTrigger: Int = 1): Unit = {
-    val docs = spark.readStream.schema(StreamingSimGraph.docSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(srcDir)
-    val q = docs.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId, storeDir)
-      }
-      .start()
-    q.awaitTermination()
-  }
+      checkpointDir: String, maxFilesPerTrigger: Int = 1): Unit =
+    StreamingFold.drain(spark, StreamingFold.docSchema, srcDir,
+      checkpointDir, maxFilesPerTrigger)(processBatch(_, _, storeDir))
 
   /** One micro-batch fold — the `foreachBatch` body, callable directly in
     * tests (crash replay = calling it twice with the same id). */

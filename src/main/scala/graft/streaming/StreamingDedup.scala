@@ -23,13 +23,8 @@ object StreamingDedup {
 
   final case class DocFp(doc_id: Long, fp: String)
 
-  /** documents.parquet schema for the file-source stream. */
-  val docSchema: StructType = StructType(Seq(
-    StructField("doc_id", LongType), StructField("text", StringType),
-    StructField("lang", StringType)))
-
   def readDocuments(spark: SparkSession, dir: String): DataFrame =
-    spark.readStream.schema(docSchema).parquet(dir)
+    spark.readStream.schema(StreamingFold.docSchema).parquet(dir)
 
   /** First-occurrence-only pass-through: emits a document iff its
     * fingerprint has never been seen in the stream's lifetime. */

@@ -3,7 +3,6 @@ package graft.streaming
 import graft.llm.AnnOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
 /** Streaming IVF ingest-to-serving (beyond-reference north star): the
@@ -45,19 +44,9 @@ object StreamingIvf {
     * `maxFilesPerTrigger` bounds each micro-batch. */
   def run(spark: SparkSession, srcDir: String, indexPath: String,
       checkpointDir: String, dim: Int = 64,
-      maxFilesPerTrigger: Int = 1): Unit = {
-    val vecs = spark.readStream.schema(embSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(srcDir)
-    val q = vecs.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        processBatch(batch, indexPath, dim)
-      }
-      .start()
-    q.awaitTermination()
-  }
+      maxFilesPerTrigger: Int = 1): Unit =
+    StreamingFold.drain(spark, embSchema, srcDir, checkpointDir,
+      maxFilesPerTrigger)((batch, _) => processBatch(batch, indexPath, dim))
 
   private[streaming] def processBatch(batch: DataFrame, indexPath: String,
       dim: Int): Unit = {

@@ -3,7 +3,6 @@ package graft.streaming
 import graft.llm.TextOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
 /** Streaming NEAR-duplicate suppression (beyond-reference north star): the
@@ -51,11 +50,6 @@ import org.apache.spark.sql.types._
   */
 object StreamingNearDup {
 
-  /** documents.parquet schema for the file-source stream. */
-  val docSchema: StructType = StructType(Seq(
-    StructField("doc_id", LongType), StructField("text", StringType),
-    StructField("lang", StringType)))
-
   /** Run near-dup suppression over a document file stream: survivors land
     * in `outDir` (parquet, append), the band index in `indexDir`. Drains
     * currently-available input (Trigger.AvailableNow); `maxFilesPerTrigger`
@@ -65,19 +59,11 @@ object StreamingNearDup {
       shingleN: Int = 3, numHashes: Int = 128, rowsPerBand: Int = 2,
       threshold: Double = 0.5, maxFilesPerTrigger: Int = 1): Unit = {
     val numBands = numHashes / rowsPerBand
-    val docs = spark.readStream.schema(docSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(srcDir)
-
-    val q = docs.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        processBatch(batch, indexDir, outDir,
-          shingleN, numHashes, rowsPerBand, threshold, numBands)
-      }
-      .start()
-    q.awaitTermination()
+    StreamingFold.drain(spark, StreamingFold.docSchema, srcDir,
+        checkpointDir, maxFilesPerTrigger) { (batch, _) =>
+      processBatch(batch, indexDir, outDir,
+        shingleN, numHashes, rowsPerBand, threshold, numBands)
+    }
   }
 
   private[streaming] def processBatch(batch: DataFrame, indexDir: String, outDir: String,

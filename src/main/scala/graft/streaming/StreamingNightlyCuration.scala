@@ -1,11 +1,11 @@
 package graft.streaming
 
-import graft.llm.{AnnOps, BloomHistory, NightlyCuration, ShingleIndex,
-  SimGraphStore, TextIndex}
+import graft.llm.{BloomHistory, NightlyCuration, ShingleIndex, SimGraphStore}
+import graft.sources.AppendLog
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.types.StructType
 
 /** The STREAMED spelling of the store-backed nightly curation cycle
   * ([[NightlyCuration]], q144): tonight's feed arrives as a stream of
@@ -36,25 +36,37 @@ import org.apache.spark.sql.streaming.Trigger
   * (≤ the feed) and each bid partition is written once, immutably.
   *
   * Crash safety:
-  *  - staging is the marker-commit discipline: admitted rows land in
-  *    `manifest/bid=<b>/`, then the `_bids/<b>` marker (stamped with the
-  *    INPUT batch's order-free signature) commits them; a crash before
-  *    the marker leaves invisible orphans, wiped before the id is
-  *    reused; a replayed in-flight micro-batch (same id, same rows) is
-  *    verified against the signature and skipped, and a reset checkpoint
-  *    presenting a committed id with different rows fails loudly;
+  *  - staging is a [[graft.sources.AppendLog]]: admitted rows land in
+  *    `manifest/bid=<b>/`, then the `manifest/_bids/<b>` marker (stamped
+  *    with the INPUT batch's signature — staging is deterministic given
+  *    the pre-night stores, so same input ⇒ same staged rows) commits
+  *    them, under the log's orphan and replay discipline;
   *  - [[endOfNight]] is idempotent: Bloom/shingle/graph appends carry the
   *    night's explicit commit id (their stores' replay-skip verifies the
   *    recomputed staged union), text/IVF appends are guarded by the
   *    already-indexed anti-join (the [[StreamingTextIndex]] /
-  *    [[StreamingIvf]] discipline), and the manifest retires via a single
-  *    atomic rename AFTER every append committed — a kill anywhere
-  *    re-runs to the identical final state.
+  *    [[StreamingIvf]] `processBatch` discipline), and the manifest
+  *    retires via a single atomic rename AFTER every append committed — a
+  *    kill anywhere re-runs to the identical final state;
+  *  - a completed fold advances the night floor (`_night_floor`) and
+  *    keeps each folded bid's signature (`_folded_bids/<b>`), so the
+  *    engine replaying a folded bid no-ops when its rows match and fails
+  *    loudly when they do not.
   *
   * Contract: [[endOfNight]] must not run concurrently with staging (the
   * admission gate reads pre-night store state by design — the nightly
   * cycle's own sequencing, same as [[NightlyCuration.maintenance]]). */
 object StreamingNightlyCuration {
+
+  /** The staging manifest: partitions directly under `manifest/`. */
+  private val manifest = AppendLog("_bids", "bid", Seq(""))
+
+  /** Folded bids' staging signatures; only markers, no sub-datasets. */
+  private val folded = AppendLog("_folded_bids", "bid", Nil)
+
+  /** The staged rows' declared schema, `bid` being the partition key. */
+  private val stagedSchema =
+    StructType.fromDDL("doc_id BIGINT, text STRING, bid BIGINT")
 
   /** Drain currently-available feed slices from `srcDir` through the
     * admission gate into the staging manifest (one micro-batch per file
@@ -66,20 +78,12 @@ object StreamingNightlyCuration {
       stores: NightlyCuration.Stores,
       checkpointDir: String, maxFilesPerTrigger: Int = 1,
       minTokens: Int = 8, minUniqueRatio: Double = 0.3,
-      containmentThreshold: Double = 0.8): Unit = {
-    val docs = spark.readStream.schema(StreamingSimGraph.docSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(srcDir)
-    val q = docs.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        stageBatch(batch, batchId, stores, minTokens,
-          minUniqueRatio, containmentThreshold)
-      }
-      .start()
-    q.awaitTermination()
-  }
+      containmentThreshold: Double = 0.8): Unit =
+    StreamingFold.drain(spark, StreamingFold.docSchema, srcDir,
+        checkpointDir, maxFilesPerTrigger) { (batch, batchId) =>
+      stageBatch(batch, batchId, stores, minTokens, minUniqueRatio,
+        containmentThreshold)
+    }
 
   /** One micro-batch of the night: admit against the pre-night stores,
     * stage the admitted rows under this engine batch id. The
@@ -92,7 +96,9 @@ object StreamingNightlyCuration {
       minTokens: Int = 8, minUniqueRatio: Double = 0.3,
       containmentThreshold: Double = 0.8): Unit = {
     val spark = batch.sparkSession
-    cleanOrphanBids(spark, stores)
+    val dir = manifestDir(stores)
+    manifest.cleanOrphans(spark, dir)
+    lazy val sig = AppendLog.batchSig(batch, "doc_id", "text")
     // a bid at or below the night floor was folded by a completed
     // endOfNight. The engine replaying it is legitimate exactly when the
     // rows match what was staged (a crash between staging and checkpoint
@@ -103,8 +109,7 @@ object StreamingNightlyCuration {
     // endOfNight preserves each folded bid's signature for this check.
     val floor = nightFloor(spark, stores)
     if (bid <= floor) {
-      val sig = foldedBidSig(spark, stores, bid)
-      require(sig.contains(batchSig(batch)),
+      require(folded.sig(spark, stores.root, bid).contains(sig),
         s"micro-batch id $bid was already folded by a completed " +
           s"endOfNight (night floor $floor) at ${stores.root} and its " +
           "rows do not match the folded batch — this is a reset " +
@@ -112,50 +117,26 @@ object StreamingNightlyCuration {
           "folded bids or rebuild the stores")
       return
     }
-    val committed = committedBids(spark, stores)
-    val maxCommitted = committed.foldLeft(Long.MinValue)(math.max)
-    if (committed.nonEmpty && bid == maxCommitted) {
-      // replayed in-flight micro-batch (foreachBatch replays at most the
-      // LATEST one — the store discipline): verify the rows really are
-      // the committed batch's (a reset checkpoint one batch behind
-      // presents a committed id with DIFFERENT rows — that must fail,
-      // not no-op)
-      bidSig(spark, stores, bid).foreach { committedSig =>
-        require(batchSig(batch) == committedSig,
-          s"micro-batch id $bid is already staged in ${manifestDir(stores)} " +
-            "but its rows differ from the staged batch — this is a reset " +
-            "checkpoint one batch behind, not a replay; reset the " +
-            "checkpoint and the night's manifest together")
-      }
-      return
+    val latest = manifest.latest(spark, dir)
+    AppendLog.resolveId(latest, Some(bid), manifest.sig(spark, dir, latest),
+        sig, s"manifest at $dir").foreach { _ =>
+      val admitted = NightlyCuration.admit(spark, stores, batch,
+        "doc_id", "text", minTokens, minUniqueRatio, containmentThreshold)
+      admitted.select(col("doc_id").cast("long").as("doc_id"), col("text"))
+        .write.mode("overwrite").parquet(s"$dir/bid=$bid")
+      manifest.commit(spark, dir, bid, sig)
     }
-    require(committed.forall(_ < bid),
-      s"micro-batch id $bid is older than the manifest's latest staged id " +
-        s"$maxCommitted at ${manifestDir(stores)} — a replay can only " +
-        "repeat the latest batch; reset the checkpoint and the night's " +
-        "manifest together")
-    val admitted = NightlyCuration.admit(spark, stores, batch,
-      "doc_id", "text", minTokens, minUniqueRatio, containmentThreshold)
-    admitted.select(col("doc_id").cast("long").as("doc_id"), col("text"))
-      .write.mode("overwrite").parquet(s"${manifestDir(stores)}/bid=$bid")
-    commitBid(spark, stores, bid, batchSig(batch))
   }
 
   /** The union of every committed staged micro-batch — tonight's admitted
-    * set so far. Empty (with the right schema) when nothing is staged.
-    * `aboveBid` excludes bids at or below it (the night floor: bids a
-    * completed fold already owns). */
+    * set so far, as (doc_id BIGINT, text STRING); empty when nothing is
+    * staged. `aboveBid` excludes bids at or below it (the night floor:
+    * bids a completed fold already owns). */
   def stagedAdmitted(spark: SparkSession,
       stores: NightlyCuration.Stores,
-      aboveBid: Long = Long.MinValue): DataFrame = {
-    val bids = committedBids(spark, stores).filter(_ > aboveBid)
-    if (bids.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StreamingSimGraph.docSchema)
-    else
-      spark.read.parquet(bids.sorted.map(b =>
-        s"${manifestDir(stores)}/bid=$b"): _*)
-  }
+      aboveBid: Long = Long.MinValue): DataFrame =
+    manifest.read(spark, manifestDir(stores), "", stagedSchema)
+      .filter(col("bid") > aboveBid).select("doc_id", "text")
 
   /** Fold everything staged tonight into all five stores, then retire the
     * manifest. `nightId` is the night's commit id in the id-disciplined
@@ -169,18 +150,18 @@ object StreamingNightlyCuration {
   def endOfNight(spark: SparkSession, stores: NightlyCuration.Stores,
       emb: DataFrame, nightId: Long, dim: Int = 64): Unit = {
     gcRetiredManifests(spark, stores)
-    cleanOrphanBids(spark, stores)
+    manifest.cleanOrphans(spark, manifestDir(stores))
     // defense-in-depth: never fold a bid at or below the night floor. A
-    // crash after writeNightFloor but before the manifest rename leaves
+    // crash after the floor advances but before the manifest rename leaves
     // already-folded bids in the manifest; the contract says re-run with
     // the SAME nightId (appends replay-skip), but a caller that bumps
     // nightId instead must not re-append their content under the new id.
     val floor = nightFloor(spark, stores)
-    val allBids = committedBids(spark, stores)
+    val allBids = manifest.committed(spark, manifestDir(stores))
     val bids = allBids.filter(_ > floor)
     if (bids.isEmpty) {
       // nothing fresh — but a manifest holding only folded bids is the
-      // tail of a crash between writeNightFloor and the rename: finish
+      // tail of a crash between the floor write and the rename: finish
       // that night's retirement so the state converges
       if (allBids.nonEmpty) {
         val dir0 = new Path(manifestDir(stores))
@@ -207,25 +188,10 @@ object StreamingNightlyCuration {
         "text", explicitBid = Some(nightId)): Unit,
       // anti-join-disciplined stores: drop what a crashed earlier run of
       // THIS night already appended (doc identity is the replay key)
-      () => {
-        val textFresh = admitted.join(
-          spark.read.parquet(s"${stores.text}/postings")
-            .select("doc_id").distinct(),
-          Seq("doc_id"), "left_anti").localCheckpoint()
-        if (!textFresh.isEmpty)
-          TextIndex.appendToIndex(spark, stores.text, textFresh, "doc_id",
-            "text")
-      },
-      () => {
-        val admittedEmb = emb
-          .join(admitted.select(col("doc_id").as("vec_id")), "vec_id")
-        val ivfFresh = admittedEmb.join(
-          spark.read.parquet(s"${stores.ivf}/cells")
-            .select(col("nid").as("vec_id")).distinct(),
-          Seq("vec_id"), "left_anti").localCheckpoint()
-        if (!ivfFresh.isEmpty)
-          AnnOps.appendToIvfIndex(spark, stores.ivf, ivfFresh, dim): Unit
-      },
+      () => StreamingTextIndex.processBatch(admitted, stores.text),
+      () => StreamingIvf.processBatch(
+        emb.join(admitted.select(col("doc_id").as("vec_id")), "vec_id"),
+        stores.ivf, dim),
       // the lake delta record: the night's admitted rows under a night-id
       // partition (overwrite = idempotent on a re-run) — what a production
       // deployment merges into the lake table, and what [[admittedLog]] /
@@ -240,10 +206,10 @@ object StreamingNightlyCuration {
     // signature (same rows → no-op; different rows → loud) instead of
     // re-admitting against post-fold stores. Idempotent on a re-run.
     bids.foreach { b =>
-      bidSig(spark, stores, b).foreach(s =>
-        writeMarker(spark, s"${stores.root}/_folded_bids", b, s))
+      folded.commit(spark, stores.root, b,
+        manifest.sig(spark, manifestDir(stores), b).get)
     }
-    writeNightFloor(spark, stores, bids.max)
+    AppendLog.writeLong(spark, nightFloorFile(stores), bids.max)
     // retire the manifest: ONE rename after every append committed, so a
     // kill on either side of it re-runs to the same state (before: all
     // appends replay-skip; after: the night no-ops)
@@ -263,10 +229,8 @@ object StreamingNightlyCuration {
     val dir = new Path(s"${stores.root}/admitted_log")
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(dir))
-      spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          StreamingSimGraph.docSchema)
-        .withColumn("night", lit(-1L))
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+        StructType.fromDDL("doc_id BIGINT, text STRING, night BIGINT"))
     else spark.read.parquet(dir.toString)
       .select(col("doc_id"), col("text"), col("night").cast("long"))
   }
@@ -297,133 +261,25 @@ object StreamingNightlyCuration {
       checkpointDir: String, nightOffset: Long = 1L,
       maxFilesPerTrigger: Int = 1, dim: Int = 64, minTokens: Int = 8,
       minUniqueRatio: Double = 0.3,
-      containmentThreshold: Double = 0.8): Unit = {
-    val docs = spark.readStream.schema(StreamingSimGraph.docSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(srcDir)
-    val q = docs.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        stageBatch(batch, batchId, stores, minTokens,
-          minUniqueRatio, containmentThreshold)
-        endOfNight(spark, stores, emb, nightOffset + batchId, dim)
-      }
-      .start()
-    q.awaitTermination()
-  }
-
-  // ---- manifest plumbing (the ShingleIndex marker discipline) ----
+      containmentThreshold: Double = 0.8): Unit =
+    StreamingFold.drain(spark, StreamingFold.docSchema, srcDir,
+        checkpointDir, maxFilesPerTrigger) { (batch, batchId) =>
+      stageBatch(batch, batchId, stores, minTokens, minUniqueRatio,
+        containmentThreshold)
+      endOfNight(spark, stores, emb, nightOffset + batchId, dim)
+    }
 
   private def manifestDir(stores: NightlyCuration.Stores): String =
     s"${stores.root}/manifest"
 
+  private def nightFloorFile(stores: NightlyCuration.Stores): Path =
+    new Path(stores.root, "_night_floor")
+
   /** The highest staging bid a completed [[endOfNight]] has folded
     * (-1 before the first night). */
   private def nightFloor(spark: SparkSession,
-      stores: NightlyCuration.Stores): Long = {
-    val f = new Path(stores.root, "_night_floor")
-    val fs = f.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(f)) -1L
-    else {
-      val in = fs.open(f)
-      val txt =
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-        finally in.close()
-      txt.toLongOption.getOrElse(-1L)
-    }
-  }
-
-  private def writeNightFloor(spark: SparkSession,
-      stores: NightlyCuration.Stores, bid: Long): Unit = {
-    val f = new Path(stores.root, "_night_floor")
-    val fs = f.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(f, true)
-    try out.write(bid.toString.getBytes("UTF-8")) finally out.close()
-  }
-
-  private def committedBids(spark: SparkSession,
-      stores: NightlyCuration.Stores): Seq[Long] = {
-    val dir = new Path(manifestDir(stores), "_bids")
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dir)) Seq.empty
-    else fs.listStatus(dir).toSeq.map(_.getPath.getName.toLong)
-  }
-
-  private def writeMarker(spark: SparkSession, dir: String, id: Long,
-      sig: Long): Unit = {
-    val marker = new Path(dir, id.toString)
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(marker, true)
-    try out.write(sig.toString.getBytes("UTF-8")) finally out.close()
-  }
-
-  private def readMarkerSig(spark: SparkSession, dir: String,
-      id: Long): Option[Long] = {
-    val marker = new Path(dir, id.toString)
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(marker)) None
-    else {
-      val in = fs.open(marker)
-      val txt =
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-        finally in.close()
-      if (txt.isEmpty) None else txt.toLongOption
-    }
-  }
-
-  private def commitBid(spark: SparkSession,
-      stores: NightlyCuration.Stores, bid: Long, sig: Long): Unit =
-    writeMarker(spark, s"${manifestDir(stores)}/_bids", bid, sig)
-
-  private def bidSig(spark: SparkSession, stores: NightlyCuration.Stores,
-      bid: Long): Option[Long] =
-    readMarkerSig(spark, s"${manifestDir(stores)}/_bids", bid)
-
-  /** The preserved staging signature of a bid an [[endOfNight]] already
-    * folded — what a post-fold replay verifies against. */
-  private def foldedBidSig(spark: SparkSession,
-      stores: NightlyCuration.Stores, bid: Long): Option[Long] =
-    readMarkerSig(spark, s"${stores.root}/_folded_bids", bid)
-
-  /** Order-free signature of the INPUT micro-batch's (id, text) multiset —
-    * what the replay skip verifies (staging is deterministic given the
-    * pre-night stores, so same input ⇒ same staged rows). */
-  private def batchSig(batch: DataFrame): Long = {
-    // SUM + bit_xor of per-row hashes: both commutative (order-free under
-    // any partitioning), and the sum term is cancellation-free — bit_xor
-    // alone let any row repeated an even number of times vanish, so two
-    // different multisets with equal counts could collide. The hash is
-    // summed as two 32-bit halves (each sum ≤ 2³²·rows, overflow-safe
-    // under ANSI mode for any batch under 2³¹ rows) and recombined.
-    val row = batch
-      .select(xxhash64(col("doc_id").cast("long"), col("text")).as("h"))
-      .agg(coalesce(expr("bit_xor(h)"), lit(0L)).as("bx"),
-        coalesce(expr("sum(h & 4294967295)"), lit(0L)).as("slo"),
-        coalesce(expr("sum(shiftright(h, 32) & 4294967295)"), lit(0L))
-          .as("shi"),
-        count(lit(1)).as("bn"))
-      .collect()(0)
-    row.getLong(0) ^ java.lang.Long.rotateLeft(row.getLong(1), 13) ^
-      java.lang.Long.rotateLeft(row.getLong(2), 27) ^
-      java.lang.Long.rotateLeft(row.getLong(3), 45) ^
-      0x5851f42d4c957f2dL
-  }
-
-  /** Delete `bid=` partitions no committed marker vouches for — a crashed
-    * staging attempt's partial writes. Cheap directory ops. */
-  private def cleanOrphanBids(spark: SparkSession,
-      stores: NightlyCuration.Stores): Unit = {
-    val ids = committedBids(spark, stores).toSet
-    val dir = new Path(manifestDir(stores))
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(dir)) fs.listStatus(dir).foreach { st =>
-      val name = st.getPath.getName
-      if (name.startsWith("bid=") &&
-          !ids.contains(name.stripPrefix("bid=").toLong))
-        fs.delete(st.getPath, true)
-    }
-  }
+      stores: NightlyCuration.Stores): Long =
+    AppendLog.readLong(spark, nightFloorFile(stores)).getOrElse(-1L)
 
   /** Delete manifests retired by a completed [[endOfNight]] (the rename
     * made them invisible; deleting them is pure garbage collection). */

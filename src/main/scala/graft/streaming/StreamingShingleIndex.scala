@@ -2,7 +2,6 @@ package graft.streaming
 
 import graft.llm.ShingleIndex
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.Trigger
 
 /** Streaming maintenance of the epoch-appendable shingle index: each
   * micro-batch of documents folds in via [[ShingleIndex.appendToIndex]]
@@ -37,19 +36,11 @@ object StreamingShingleIndex {
     * via the marker replay signature). */
   def run(spark: SparkSession, srcDir: String, indexDir: String,
       checkpointDir: String, maxFilesPerTrigger: Int = 1,
-      epOffset: Long = 1L): Unit = {
-    val docs = spark.readStream.schema(StreamingSimGraph.docSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(srcDir)
-    val q = docs.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, epOffset + batchId, indexDir)
-      }
-      .start()
-    q.awaitTermination()
-  }
+      epOffset: Long = 1L): Unit =
+    StreamingFold.drain(spark, StreamingFold.docSchema, srcDir,
+        checkpointDir, maxFilesPerTrigger) { (batch, batchId) =>
+      processBatch(batch, epOffset + batchId, indexDir)
+    }
 
   /** One micro-batch fold — the `foreachBatch` body, callable directly in
     * tests (crash replay = calling it twice with the same id). The caller

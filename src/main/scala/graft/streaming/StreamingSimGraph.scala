@@ -2,8 +2,6 @@ package graft.streaming
 
 import graft.llm.SimGraphStore
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.Trigger
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** Streaming maintenance of the incremental similarity graph: each
   * micro-batch of documents folds into a [[SimGraphStore]] via
@@ -25,11 +23,6 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   * (store state, batch rows) and AvailableNow delivers each file once. */
 object StreamingSimGraph {
 
-  /** documents.parquet schema for the file-source stream. */
-  val docSchema: StructType = StructType(Seq(
-    StructField("doc_id", LongType), StructField("text", StringType),
-    StructField("lang", StringType)))
-
   /** Drain currently-available input into the graph store at
     * `storeDir` (which must already be [[SimGraphStore.init]]ed).
     *
@@ -46,19 +39,11 @@ object StreamingSimGraph {
     * itself rejects any drift loudly. */
   def run(spark: SparkSession, srcDir: String, storeDir: String,
       checkpointDir: String, maxFilesPerTrigger: Int = 1,
-      bidOffset: Long = 0L): Unit = {
-    val docs = spark.readStream.schema(docSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(srcDir)
-    val q = docs.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, bidOffset + batchId, storeDir)
-      }
-      .start()
-    q.awaitTermination()
-  }
+      bidOffset: Long = 0L): Unit =
+    StreamingFold.drain(spark, StreamingFold.docSchema, srcDir,
+        checkpointDir, maxFilesPerTrigger) { (batch, batchId) =>
+      processBatch(batch, bidOffset + batchId, storeDir)
+    }
 
   /** One micro-batch fold — the `foreachBatch` body, callable directly
     * in tests (crash replay = calling it twice with the same id). The

@@ -3,7 +3,6 @@ package graft.streaming
 import graft.llm.TextIndex
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
 /** Streaming inverted-index maintenance: documents arriving on a stream
@@ -33,19 +32,9 @@ object StreamingTextIndex {
     * `indexPath` (built by [[TextIndex.buildIndex]]). Drains
     * currently-available input (Trigger.AvailableNow). */
   def run(spark: SparkSession, srcDir: String, indexPath: String,
-      checkpointDir: String, maxFilesPerTrigger: Int = 1): Unit = {
-    val docs = spark.readStream.schema(docSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(srcDir)
-    val q = docs.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        processBatch(batch, indexPath)
-      }
-      .start()
-    q.awaitTermination()
-  }
+      checkpointDir: String, maxFilesPerTrigger: Int = 1): Unit =
+    StreamingFold.drain(spark, docSchema, srcDir, checkpointDir,
+      maxFilesPerTrigger)((batch, _) => processBatch(batch, indexPath))
 
   private[streaming] def processBatch(batch: DataFrame,
       indexPath: String): Unit = {
