@@ -6,14 +6,24 @@ oracle SQL in DuckDB against the same testdata parquet tables, and compares:
 row count, column names (sorted), and a value hash over column-name-sorted,
 row-sorted data. Mirrors what we believe the driver does; stricter is fine.
 
+DuckDB runs under a fixed memory limit and spills to a temp directory
+inside the output dir (removed at exit), so an oracle whose working set
+exceeds the limit spills to disk instead of failing or taking the host's
+memory. The spill is capped too: an oracle that outgrows the cap fails
+with its own error instead of filling the disk (q125's k-core peel
+outgrew a 20 GB disk at sf0.001).
+
 Usage: oracle_check.py <sfDir> <verifyOutDir>
 """
-import sys, os, json, math
+import sys, os, json, math, shutil
 import duckdb
 import pyarrow.parquet  # noqa: F401  (ensures duckdb can use arrow)
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
+MEMORY_LIMIT = "4GB"
+SPILL_LIMIT = "8GB"
+SPILL_DIR = "_duckdb_spill"  # under the output dir; not a result entry
 
 
 def canon(v):
@@ -44,7 +54,29 @@ def frame_sig(cols, rows):
 
 def main():
     sf_dir, out_dir = sys.argv[1], sys.argv[2]
+    names = [d for d in sorted(os.listdir(out_dir))
+             if os.path.isdir(os.path.join(out_dir, d)) and d != SPILL_DIR]
+    spill = os.path.join(out_dir, SPILL_DIR)
+    try:
+        results = check(sf_dir, out_dir, names, spill)
+    finally:
+        shutil.rmtree(spill, ignore_errors=True)
+    n_ok = sum(1 for v in results.values() if v.startswith("OK"))
+    n_ro = sum(1 for v in results.values() if v.startswith("rows-only"))
+    for k in sorted(results):
+        print(f"{k:28s} {results[k]}")
+    print(f"\n{n_ok} OK, {n_ro} rows-only, {len(results) - n_ok - n_ro} FAILED "
+          f"of {len(results)}")
+    sys.exit(0 if n_ok + n_ro == len(results) else 1)
+
+
+def check(sf_dir, out_dir, names, spill):
     con = duckdb.connect()
+    con.execute(f"SET memory_limit='{MEMORY_LIMIT}'")
+    con.execute(f"SET temp_directory='{spill}'")
+    con.execute(f"SET max_temp_directory_size='{SPILL_LIMIT}'")
+    # lets blocking operators spill without holding rows in input order
+    con.execute("SET preserve_insertion_order=false")
     con.execute("SET TimeZone='UTC'")
     for t in TABLES:
         p = os.path.join(sf_dir, f"{t}.parquet")
@@ -52,8 +84,6 @@ def main():
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
     oracle = json.load(open(os.path.join(out_dir, "oracle_sql.json")))
     results = {}
-    names = [d for d in sorted(os.listdir(out_dir))
-             if os.path.isdir(os.path.join(out_dir, d))]
     for name in names:
         try:
             got = con.execute(
@@ -83,13 +113,7 @@ def main():
                              f"    got: {gr[diff][:200]}\n    exp: {er[diff][:200]}")
         else:
             results[name] = f"OK rows={gn}"
-    n_ok = sum(1 for v in results.values() if v.startswith("OK"))
-    n_ro = sum(1 for v in results.values() if v.startswith("rows-only"))
-    for k in sorted(results):
-        print(f"{k:28s} {results[k]}")
-    print(f"\n{n_ok} OK, {n_ro} rows-only, {len(results) - n_ok - n_ro} FAILED "
-          f"of {len(results)}")
-    sys.exit(0 if n_ok + n_ro == len(results) else 1)
+    return results
 
 
 if __name__ == "__main__":

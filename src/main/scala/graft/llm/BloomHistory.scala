@@ -27,11 +27,7 @@ import org.apache.spark.sql.types.LongType
   *    still fans out for pruned verify reads. Readers prune across
   *    MIXED fan-outs because every B is a power of two dividing 256:
   *    a hit hashing to bucket r under mod 256 lives in bucket r mod B
-  *    of a B-bucket partition (B | 256 ⇒ h ≡ r (mod B)). A partition in
-  *    the PRE-nb layout (`bid=<b>/bkt=<x>/`, the fixed fan-out this
-  *    store wrote before r14) is read with its historical B = 64
-  *    (ADVICE r14: without the fallback the nb prune silently treated
-  *    all legacy history as empty); [[compactFingerprints]] migrates it.
+  *    of a B-bucket partition (B | 256 ⇒ h ≡ r (mod B)).
   * The sidecar is the lake's fingerprint column as a store-owned dataset
   * (VERDICT r13 #1): [[probe]] hits verify against IT, so the nightly
   * admission gate never reads lake text — the verify scan is fp-bytes
@@ -64,14 +60,28 @@ import org.apache.spark.sql.types.LongType
   * lastBid — a crash between the sidecar write and the swap leaves an
   * orphan partition readers ignore and the next append deletes.
   *
+  * An append's critical path is one fingerprint pass and one overlapped
+  * pair of writes. The batch's fingerprints are checkpointed once; the
+  * row count (which sizes the sidecar fan-out and `nItems`) and the
+  * replay signature ride that pass as observed metrics
+  * ([[graft.sources.AppendLog.observeHashSig]], bounded wait with a
+  * same-value fallback). The filter folds FROM that checkpoint — the
+  * exact rows the sidecar records, so the two can never disagree — and
+  * inside the rewrite the sidecar partition and the new `words` are
+  * written concurrently (disjoint directories); both finish before the
+  * swap deletes the stored words the fold reads.
+  *
   * Replay discipline: [[graft.sources.AppendLog.resolveId]]'s rule, with
   * the latest id and its signature kept in meta (`lastBid`, `lastSig`)
   * instead of marker files — the filter and its meta commit together
   * through the whole-store swap below. A `foreachBatch` maintainer passes
   * the ENGINE batch id; a verified replay of lastBid is skipped (OR-folding
   * the same rows twice is bitwise idempotent anyway, but skipping keeps
-  * `nItems` honest). `lastSig` signs the batch's FINGERPRINT multiset,
-  * which the append computes in the same pass as the fold.
+  * `nItems` honest). `lastSig` signs the batch's FINGERPRINT multiset
+  * with the log's cancellation-free aggregates
+  * ([[graft.sources.AppendLog.hashSig]]: a batch repeating a row an even
+  * number of times cannot collide with another that repeats a different
+  * one).
   *
   * FP-rate policy (STATUS note): the filter cannot resize in place, so
   * appends monotonically raise occupancy. [[estimatedFpRate]] estimates
@@ -99,11 +109,6 @@ object BloomHistory {
     * derive any partition's bucket for a hit from the hit's residue mod
     * this one modulus. */
   private[graft] val maxFpBuckets = 256
-
-  /** Fan-out of the PRE-nb sidecar layout (`bid=/bkt=`, fixed 64): the
-    * fallback modulus for partitions written before the batch-sized
-    * fan-out existed (ADVICE r14). */
-  private[graft] val legacyFpBuckets = 64L
 
   /** Target fingerprint rows per sidecar bucket file (~32 B/row ⇒
     * ~256 KB files); drives [[bucketsFor]]. */
@@ -165,58 +170,49 @@ object BloomHistory {
     // the sidecar write precedes the swap (class doc): orphans from a
     // crashed earlier attempt are exactly the partitions above lastBid
     cleanOrphanFps(spark, path, lastBid)
-    // ONE pass over the batch (ADVICE r14: counting the raw batch before
-    // the fingerprint write evaluated its upstream plan twice): the
-    // fingerprint frame is checkpointed, the fan-out is sized from the
-    // rows actually written, and the write reads the checkpoint blocks
-    val fps = batch
-      .select(TextOps.tokenSetFingerprint(col(textCol)).as("fp"))
-      .localCheckpoint()
-    val nb = bucketsFor(fps.count())
-    fps
-      .withColumn("bkt", pmod(xxhash64(col("fp")), lit(nb)))
-      // repartition BY bkt first: without it every shuffle task writes
-      // into every bucket directory — up to tasks×buckets tiny files per
-      // append (measured 7.6 s vs 1.8 s for a 5k-doc batch at 100×)
-      .repartition(col("bkt"))
-      .write.partitionBy("bkt").mode("overwrite")
-      .parquet(s"${fpPath(path)}/bid=$bid/nb=$nb")
-    // fold the filter FROM the just-written sidecar partition: one read
-    // of fp-bytes instead of re-tokenizing the batch text, and the
-    // filter can never disagree with what the sidecar recorded
-    // explicit schema: a 0-row batch writes no data files, and the fold
-    // must still see an empty (fp, bkt) frame, not an inference failure
-    val folded = spark.read.schema("fp STRING, nb BIGINT, bkt BIGINT")
-      .parquet(s"${fpPath(path)}/bid=$bid")
+    // ONE pass over the batch: the fingerprint frame is checkpointed, and
+    // the row count and the replay signature ride that pass as observed
+    // metrics (fingerprinting is map-only, so the observation sits in the
+    // checkpoint's result stage). The fan-out is sized from the rows the
+    // sidecar records, and both writes below read the checkpoint blocks.
+    val observed = graft.sources.AppendLog.observeHashSig(
+      fingerprints(batch, textCol), xxhash64(col("fp")))
+    val fps = observed.frame.localCheckpoint()
+    val added = observed.rows
+    val nb = bucketsFor(added)
+    // fold the filter FROM the checkpoint the sidecar records: one
+    // tokenization of the batch text, and the filter can never disagree
+    // with the sidecar
+    val folded = fps
       .groupBy(shardOf(col("fp"), nShards).as("shard"))
       .agg(call_function(graft.functions.BloomFilterAgg.name,
-          xxhash64(col("fp")), lit(mBits), lit(k)).as("bw"),
-        count(lit(1)).as("bn"),
-        coalesce(expr("bit_xor(xxhash64(fp))"), lit(0L)).as("bx"))
-    val stored = readWords(spark, path)
+          xxhash64(col("fp")), lit(mBits), lit(k)).as("bw"))
     // nShards rows × (≤ nShards) rows: OR the word arrays per shard
     // (shards the batch didn't touch keep their stored words unchanged
     // — OR with the all-zero identity); Bloom union is exact
-    val merged = stored.join(broadcast(folded), Seq("shard"), "left")
+    val merged = readWords(spark, path)
+      .join(broadcast(folded), Seq("shard"), "left")
       .select(col("shard"),
         zip_with(col("words"),
           coalesce(col("bw"), array_repeat(lit(0L), lit(mBits / 64))),
-          (a, b) => a.bitwiseOR(b)).as("words"),
-        coalesce(col("bn"), lit(0L)).as("bn"),
-        coalesce(col("bx"), lit(0L)).as("bx"))
-      .localCheckpoint() // materialize BEFORE the swap deletes its input
-    // XOR over per-shard XORs == the whole batch's XOR (shards partition
-    // the rows), so the replay signature is shard-layout-independent
-    val head = merged
-      .agg(sum("bn").as("bn"),
-        coalesce(expr("bit_xor(bx)"), lit(0L)).as("bx"))
-      .collect()(0)
-    val added = head.getLong(0)
-    val sig = combineSig(head.getLong(1), added)
+          (a, b) => a.bitwiseOR(b)).as("words"))
     graft.sources.ParquetCompaction.rewrite(spark, path) { tmp =>
-      merged.select("shard", "words").write.parquet(s"$tmp/words")
+      // the sidecar partition and the new filter land in disjoint
+      // directories, so they are written CONCURRENTLY (guide §2.6); both
+      // finish before the swap deletes the stored words `merged` reads
+      graft.sources.ParJobs.run(Seq(
+        () => fps
+          .withColumn("bkt", pmod(xxhash64(col("fp")), lit(nb)))
+          // repartition BY bkt first: without it every shuffle task
+          // writes into every bucket directory — up to tasks×buckets tiny
+          // files per append (measured 7.6 s vs 1.8 s for a 5k-doc batch
+          // at 100×)
+          .repartition(col("bkt"))
+          .write.partitionBy("bkt").mode("overwrite")
+          .parquet(s"${fpPath(path)}/bid=$bid/nb=$nb"),
+        () => merged.write.parquet(s"$tmp/words")))
       writeMeta(spark, tmp, mBits, k, nShards, nItems + added, bid,
-        Some(sig))
+        Some(observed.sig))
     }
     bid
   }
@@ -307,17 +303,19 @@ object BloomHistory {
     graft.sources.ParquetCompaction.recover(spark, path)
     val (_, _, _, lastBid) = readMeta(spark, path)
     // materialize the hits: they are read three times (bucket list,
-    // size gate, verify join) and all must see the same filter state
-    val hits = probe(spark, path, batch, idCol, textCol)
-      .withColumn("bkt", pmod(xxhash64(col("fp")), lit(maxFpBuckets)))
-      .localCheckpoint()
-    // hit residues mod the MAX fan-out — ≤ maxFpBuckets distinct
-    // values, a driver-bounded collect; each partition's own bucket for
-    // a hit is its residue mod that partition's nb (class doc). One
-    // grouped aggregate yields the residue list AND the hit count the
-    // broadcast gate below needs — two jobs folded into one.
-    val bktCounts = hits.groupBy("bkt").count().collect()
-    val res = bktCounts.map(_.getLong(0))
+    // size gate, verify join) and all must see the same filter state.
+    // The hit residues mod the MAX fan-out (≤ maxFpBuckets distinct
+    // values, a driver-bounded set; each partition's own bucket for a hit
+    // is its residue mod that partition's nb, class doc) and the hit count
+    // the broadcast gate below needs ride the checkpoint's pass as
+    // observed metrics (the probe is map-side over the batch, so the
+    // observation sits in the checkpoint's result stage)
+    val observed = graft.sources.Observed(
+      probe(spark, path, batch, idCol, textCol)
+        .withColumn("bkt", pmod(xxhash64(col("fp")), lit(maxFpBuckets))),
+      Seq(collect_set(col("bkt")).as("res"), count(lit(1)).as("n")))
+    val hits = observed.frame.localCheckpoint()
+    val res = observed.row.getSeq[Long](0)
     if (res.isEmpty) return hits.select("doc_id").limit(0)
     // one OR-of-ANDs over the possible fan-outs (1, 2, …, maxFpBuckets —
     // derived, ADVICE r14, so a fan-out cap change can't silently miss
@@ -330,7 +328,7 @@ object BloomHistory {
     // broadcast only a fitting hit set (class doc): ~64 B/row in the
     // build-side hash table (32-char fp + id + object overhead)
     val bcastThreshold = spark.sessionState.conf.autoBroadcastJoinThreshold
-    val hitRows = bktCounts.map(_.getLong(1)).sum
+    val hitRows = observed.row.getLong(1)
     val verify = hits.select("doc_id", "fp")
     val verifySide =
       if (bcastThreshold > 0 && hitRows * 64L <= bcastThreshold)
@@ -344,33 +342,16 @@ object BloomHistory {
 
   /** Every committed fingerprint in the sidecar (bids ≤ `lastBid`; an
     * orphan partition above it is a crashed append's leftover). Columns
-    * (fp, nb, bkt); empty frame when nothing has been appended. A
-    * committed partition in the pre-nb layout (no `nb=` level) reads
-    * with the fixed legacy fan-out (class doc). */
+    * (fp, nb, bkt); empty frame when nothing has been appended. */
   private def storedFingerprints(spark: SparkSession, path: String,
       lastBid: Long): DataFrame = {
     val dirs = committedFpDirs(spark, path, lastBid)
     if (dirs.isEmpty)
       spark.range(0).select(lit("").as("fp"), lit(1L).as("nb"),
         lit(0L).as("bkt")).limit(0)
-    else {
-      val root = new org.apache.hadoop.fs.Path(fpPath(path))
-      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val (v2, legacy) = dirs.partition { d =>
-        fs.listStatus(new org.apache.hadoop.fs.Path(d))
-          .exists(_.getPath.getName.startsWith("nb="))
-      }
-      val frames =
-        (if (v2.isEmpty) Nil
-         else Seq(spark.read.schema("fp STRING, nb BIGINT, bkt BIGINT")
-           .option("basePath", fpPath(path)).parquet(v2: _*)
-           .select("fp", "nb", "bkt"))) ++
-        (if (legacy.isEmpty) Nil
-         else Seq(spark.read.schema("fp STRING, bkt BIGINT")
-           .option("basePath", fpPath(path)).parquet(legacy: _*)
-           .select(col("fp"), lit(legacyFpBuckets).as("nb"), col("bkt"))))
-      frames.reduce(_.unionByName(_))
-    }
+    else spark.read.schema("fp STRING, nb BIGINT, bkt BIGINT")
+      .option("basePath", fpPath(path)).parquet(dirs: _*)
+      .select("fp", "nb", "bkt")
   }
 
   private def committedFpDirs(spark: SparkSession, path: String,
@@ -411,8 +392,7 @@ object BloomHistory {
     * every fingerprint to the latest committed bid is sound: readers
     * only ever ask "bid ≤ lastBid", and the replay discipline never
     * re-writes a committed bid's partition. Whole-sidecar
-    * rewrite-then-swap, so a kill leaves the old or the new sidecar.
-    * Pre-nb-layout partitions migrate to the current layout here. */
+    * rewrite-then-swap, so a kill leaves the old or the new sidecar. */
   def compactFingerprints(spark: SparkSession, path: String): Unit = {
     graft.sources.ParquetCompaction.recover(spark, path)
     val (_, _, nItems, lastBid) = readMeta(spark, path)
@@ -457,21 +437,18 @@ object BloomHistory {
     spark.range(nShards.toLong).select(col("id").as("shard"),
       array_repeat(lit(0L), lit(mBits / 64)).as("words"))
 
-  /** Order-free signature of a batch's fingerprint multiset (count mixed
-    * with the bit_xor of per-row hashes) — what [[append]]'s replay skip
-    * verifies. One map-only pass over the batch, paid ONLY on the replay
-    * path. */
-  private def batchSig(batch: DataFrame, textCol: String): Long = {
-    val row = batch
-      .select(TextOps.tokenSetFingerprint(col(textCol)).as("fp"))
-      .agg(coalesce(expr("bit_xor(xxhash64(fp))"), lit(0L)).as("bx"),
-        count(lit(1)).as("bn"))
-      .collect()(0)
-    combineSig(row.getLong(0), row.getLong(1))
-  }
+  /** The batch's token-set fingerprints as one `fp` column. */
+  private def fingerprints(batch: DataFrame, textCol: String): DataFrame =
+    batch.select(TextOps.tokenSetFingerprint(col(textCol)).as("fp"))
 
-  private def combineSig(xorHash: Long, n: Long): Long =
-    xorHash ^ java.lang.Long.rotateLeft(n, 32) ^ 0x5851f42d4c957f2dL
+  /** Order-free signature of a batch's fingerprint multiset — what
+    * [[append]]'s replay skip verifies, under the log's cancellation-free
+    * aggregates ([[graft.sources.AppendLog.hashSig]]; the append computes
+    * the same value on its fingerprint pass). One map-only pass over the
+    * batch, paid ONLY on the replay path. */
+  private def batchSig(batch: DataFrame, textCol: String): Long =
+    graft.sources.AppendLog.hashSig(fingerprints(batch, textCol),
+      xxhash64(col("fp")))
 
   private def writeMeta(spark: SparkSession, path: String, mBits: Int,
       k: Int, nShards: Int, nItems: Long, lastBid: Long,

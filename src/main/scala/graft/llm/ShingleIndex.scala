@@ -116,7 +116,10 @@ object ShingleIndex {
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(root)) fs.delete(root, true)
-    val base = TextOps.shingleSigs(docs, idCol, textCol, n).localCheckpoint()
+    // the corpus signature the epoch-0 marker carries rides this pass
+    val observed = AppendLog.observeSig(docs, idCol, textCol)
+    val base = TextOps.shingleSigs(observed.frame, idCol, textCol, n)
+      .localCheckpoint()
     val ex = base.select(col("id"), size(col("sh")).as("sz"),
       explode(col("sh")).as("s"))
     // checkpoint the vocab-sized df table: the df write AND the postings
@@ -154,7 +157,7 @@ object ShingleIndex {
     // corpus's signature, so a stream batch landing on the build id (the
     // r13 bootstrap-seam collision) content-verifies instead of
     // id-only-skipping.
-    log.commit(spark, path, 0L, AppendLog.batchSig(docs, idCol, textCol))
+    log.commit(spark, path, 0L, observed.sig)
     writeMeta(spark, path, nBuckets, n)
   }
 
@@ -183,7 +186,11 @@ object ShingleIndex {
       log.sig(spark, path, latest),
       AppendLog.batchSig(batch, idCol, textCol),
       s"index at $path").getOrElse(return latest)
-    val base = TextOps.shingleSigs(batch, idCol, textCol, n).localCheckpoint()
+    // the batch signature the marker carries rides the signature pass
+    // (map-only over the batch: the observation is in its result stage)
+    val observed = AppendLog.observeSig(batch, idCol, textCol)
+    val base = TextOps.shingleSigs(observed.frame, idCol, textCol, n)
+      .localCheckpoint()
     val ex = base.select(col("id"), size(col("sh")).as("sz"),
       explode(col("sh")).as("s"))
     val delta = ex.groupBy("s").agg(count(lit(1)).as("dd")).localCheckpoint()
@@ -215,7 +222,7 @@ object ShingleIndex {
         .write.mode("append").partitionBy("ep", "sb").parquet(s"$path/df"),
       () => base.withColumn("ep", lit(ep))
         .write.mode("append").partitionBy("ep").parquet(s"$path/sigs")))
-    log.commit(spark, path, ep, AppendLog.batchSig(batch, idCol, textCol))
+    log.commit(spark, path, ep, observed.sig)
     ep
   }
 

@@ -43,6 +43,19 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   * a pair whose sum hits 0 can never be touched again (a future −1 for s
   * requires an earlier +1 for s, which would still be in the sum).
   *
+  * Both delta kinds come from ONE tagged self-join. The tagged frame holds
+  * the batch postings on shingles still rare after the batch (new) and
+  * the committed postings on shingles rare before it (old, flagged
+  * `crossed` when this batch pushes the shingle over the cap); it is
+  * joined to itself on the shingle once, for pairs a < b. On a crossed
+  * shingle only old rows exist, and each of their pairs is a −1; on a
+  * still-rare shingle each pair with a new doc is a +1 (new × old and
+  * new × new) and old × old pairs are dropped — they got their +1 when
+  * the later of the two arrived. Grouping by (a, b, sign) yields exactly
+  * the rows of the retraction fold and the addition fold unioned, so the
+  * argument above holds unchanged. The committed postings are read once,
+  * through a broadcast join to the batch's (s, df0, df1) table.
+  *
   * Scale (100 TB corpus, nightly batch): update cost is batch shingling,
   * one vocab-sized df fold (Zipf-small next to the corpus; [[compact]]
   * keeps it merged), retraction pair-work ≤ cap²·|crossing shingles|, and
@@ -153,8 +166,11 @@ object SimGraphStore {
       log.sig(spark, path, latest),
       AppendLog.batchSig(batch, idCol, textCol),
       s"store at $path").getOrElse(return latest)
-    // batch postings: one row per (doc, DISTINCT shingle)
-    val bp = postingsOf(batch, idCol, textCol, n).localCheckpoint()
+    // batch postings: one row per (doc, DISTINCT shingle); the batch's
+    // signature rides this pass (the postings are map-only over the
+    // batch, so the observation sits in the checkpoint's result stage)
+    val observed = AppendLog.observeSig(batch, idCol, textCol)
+    val bp = postingsOf(observed.frame, idCol, textCol, n).localCheckpoint()
     val delta = bp.groupBy("s").agg(count(lit(1)).as("dd"))
     val dfCur = log.read(spark, path, "df", dfSchema)
       .groupBy("s").agg(sum("df").as("df0"))
@@ -164,45 +180,43 @@ object SimGraphStore {
         (coalesce(col("df0"), lit(0L)) + col("dd")).as("df1"),
         col("dd"))
       .localCheckpoint()
-    val post = log.read(spark, path, "post", postSchema)
-    // retractions: shingles this batch pushes over the cap take back the
-    // +1 every pair of their (all still-valid: df0 ≤ cap) posting docs got
-    val crossed = j.filter(col("df0") <= cap && col("df1") > cap).select("s")
-    val pc = post.join(crossed, "s").select("d", "s")
-    val dec = pc.select(col("d").as("a"), col("s"))
-      .join(pc.select(col("d").as("b"), col("s").as("s2")),
-        col("s") === col("s2") && col("a") < col("b"))
-      .groupBy("a", "b").agg((-count(lit(1))).as("c"))
-    // additions: on still-rare shingles, batch docs pair with every older
-    // posting doc and with each other
-    val still = j.filter(col("df1") <= cap).select("s")
-    val bpr = bp.join(still, "s").select("d", "s").localCheckpoint()
-    val oldPost = post.join(still, "s").select("d", "s")
-    val crossPairs = bpr.select(col("d").as("x"), col("s"))
-      .join(oldPost.select(col("d").as("y"), col("s").as("s2")),
-        col("s") === col("s2"))
-      .select(least(col("x"), col("y")).as("a"),
-        greatest(col("x"), col("y")).as("b"))
-    val withinPairs = bpr.select(col("d").as("a"), col("s"))
-      .join(bpr.select(col("d").as("b"), col("s").as("s2")),
-        col("s") === col("s2") && col("a") < col("b"))
-      .select("a", "b")
-    val inc = crossPairs.union(withinPairs)
-      .groupBy("a", "b").agg(count(lit(1)).as("c"))
+    // the batch postings this update appends: on still-rare shingles
+    val fresh = bp.join(broadcast(j.filter(col("df1") <= cap).select("s")),
+      "s").select("d", "s")
+    // the tagged frame of the class doc: fresh postings (old = false) and
+    // committed postings on shingles rare before this batch (old = true,
+    // crossed = this batch pushes the shingle over the cap)
+    val tagged = fresh.select(col("d"), col("s"), lit(false).as("old"),
+        lit(false).as("crossed"))
+      .union(log.read(spark, path, "post", postSchema)
+        .join(broadcast(j.filter(col("df0") <= cap)
+          .select(col("s"), (col("df1") > cap).as("crossed"))), "s")
+        .select(col("d"), col("s"), lit(true).as("old"), col("crossed")))
+    // −1 per pair on a crossed shingle, +1 per pair with a fresh doc on a
+    // still-rare one (class doc)
+    val deltas = tagged.select(col("d").as("a"), col("s"),
+        col("old").as("oa"), col("crossed"))
+      .join(tagged.select(col("d").as("b"), col("s").as("s2"),
+        col("old").as("ob")), col("s") === col("s2") && col("a") < col("b"))
+      .filter(col("crossed") || !(col("oa") && col("ob")))
+      .groupBy(col("a"), col("b"),
+        when(col("crossed"), lit(-1L)).otherwise(lit(1L)).as("sign"))
+      .agg(count(lit(1)).as("n"))
+      .select(col("a"), col("b"), (col("sign") * col("n")).as("c"))
     // appends into this batch's own bid= partition (orphaned on a crash —
     // invisible until the marker commits, wiped by the retry's cleanup).
     // The three sub-dataset writes are independent until the marker (the
     // commit point), so they run CONCURRENTLY (guide §2.6) — their
-    // inputs are checkpointed (j, bpr) or derived from them plus the
-    // committed store, and they land in disjoint directories.
+    // inputs are the checkpoints (bp, j) plus the committed store, and
+    // they land in disjoint directories.
     graft.sources.ParJobs.run(Seq(
-      () => dec.union(inc).withColumn("bid", lit(bid))
+      () => deltas.withColumn("bid", lit(bid))
         .write.mode("append").partitionBy("bid").parquet(s"$path/edges"),
       () => j.select(col("s"), col("dd").as("df")).withColumn("bid", lit(bid))
         .write.mode("append").partitionBy("bid").parquet(s"$path/df"),
-      () => bpr.withColumn("bid", lit(bid))
+      () => fresh.withColumn("bid", lit(bid))
         .write.mode("append").partitionBy("bid").parquet(s"$path/post")))
-    log.commit(spark, path, bid, AppendLog.batchSig(batch, idCol, textCol))
+    log.commit(spark, path, bid, observed.sig)
     bid
   }
 

@@ -1542,13 +1542,15 @@ object TextOps {
     * first-occurrence order (`sh`) plus their SORTED FNV-64 fingerprints
     * (`hs`) — the shared kernel of [[ngramContainmentPairs]] and the
     * persisted [[ShingleIndex]]. Docs shorter than n tokens drop out.
-    * Map-only (one row per doc in, one out). */
+    * Map-only (one row per doc in, one out), and kept inside `df`'s plan
+    * (not an RDD round trip), so an observation on `df` completes with
+    * the action that reads the result. */
   private[llm] def shingleSigs(df: DataFrame, idCol: String,
       textCol: String, n: Int): DataFrame = {
     val sigSchema = StructType(Seq(StructField("id", LongType),
       StructField("sh", ArrayType(StringType)),
       StructField("hs", ArrayType(LongType))))
-    val rdd = df.select(col(idCol).cast(LongType), col(textCol)).rdd
+    df.select(col(idCol).cast(LongType), col(textCol))
       .mapPartitions { rows =>
         rows.flatMap { r =>
           val toks = Option(r.getString(1)).map(_.trim.split(" "))
@@ -1565,8 +1567,7 @@ object TextOps {
             Some(org.apache.spark.sql.Row(r.getLong(0), seen.toSeq, hs.toSeq))
           }
         }
-      }
-    df.sparkSession.createDataFrame(rdd, sigSchema)
+      }(org.apache.spark.sql.Encoders.row(sigSchema))
   }
 
   /** Containment candidate join: probe prefix rows (ida, sza, s, rna)

@@ -1,9 +1,11 @@
 package graft.sources
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructType}
+import scala.concurrent.Future
+import scala.concurrent.duration.FiniteDuration
 
 /** The marker-committed append log behind the id-disciplined stores
   * ([[graft.llm.SimGraphStore]], [[graft.llm.ShingleIndex]], the
@@ -26,6 +28,14 @@ import org.apache.spark.sql.types.{LongType, StructType}
   *    be replayed (foreachBatch replays at most the one in-flight batch),
   *    a replay is skipped only when its rows carry the committed
   *    signature, and an older id fails loudly.
+  *
+  * The signature rides a pass the append already runs: [[observeSig]]
+  * attaches [[batchSig]]'s aggregates to the batch with `Dataset.observe`,
+  * the append's first checkpoint carries them, and the commit reads the
+  * observed value with a bounded wait ([[Observed.bound]]) — past it, the
+  * commit pays [[batchSig]]'s own job for the same value and logs the
+  * miss. The replay path ([[resolveId]]) still evaluates [[batchSig]] by
+  * name, since it runs before any pass over the batch.
   *
   * Methods take the root, so a compaction commits into its rewrite temp
   * ([[ParquetCompaction.rewrite]]) with the signature of the id it folds
@@ -93,27 +103,66 @@ final case class AppendLog(markerDir: String, key: String,
 object AppendLog {
 
   /** Order-free signature of a batch's (id, text) multiset — what a replay
-    * skip verifies. SUM + bit_xor of per-row hashes: both commutative
-    * (order-free under any partitioning), and the sum term is
-    * cancellation-free — bit_xor alone lets any row repeated an even
-    * number of times vanish, so {r1, r1, r2} and {r3, r3, r2} would
-    * collide. The hash is summed as two 32-bit halves (each sum ≤
-    * 2³²·rows, overflow-safe under ANSI mode for any batch under 2³¹
-    * rows) and recombined. One map-only pass. */
-  def batchSig(batch: DataFrame, idCol: String, textCol: String): Long = {
-    val row = batch
-      .select(xxhash64(col(idCol).cast(LongType), col(textCol)).as("h"))
-      .agg(coalesce(expr("bit_xor(h)"), lit(0L)).as("bx"),
-        coalesce(expr("sum(h & 4294967295)"), lit(0L)).as("slo"),
-        coalesce(expr("sum(shiftright(h, 32) & 4294967295)"), lit(0L))
-          .as("shi"),
-        count(lit(1)).as("bn"))
-      .collect()(0)
+    * skip verifies. One map-only pass; [[observeSig]] computes the same
+    * value on a pass that already runs. */
+  def batchSig(batch: DataFrame, idCol: String, textCol: String): Long =
+    hashSig(batch, rowHash(idCol, textCol))
+
+  /** The signature of the multiset of per-row hashes `h` over `frame`:
+    * SUM + bit_xor of the hashes, both commutative (order-free under any
+    * partitioning), and the sum term is cancellation-free — bit_xor alone
+    * lets any row repeated an even number of times vanish, so {r1, r1, r2}
+    * and {r3, r3, r2} would collide. The hash is summed as two 32-bit
+    * halves (each sum ≤ 2³²·rows, overflow-safe under ANSI mode for any
+    * batch under 2³¹ rows) and recombined. */
+  def hashSig(frame: DataFrame, h: Column): Long = {
+    val aggs = sigAggs(h)
+    sigOf(frame.agg(aggs.head, aggs.tail: _*).collect()(0))
+  }
+
+  /** `batch` with [[batchSig]]'s aggregates attached by `Dataset.observe`,
+    * so the signature rides a pass the caller already runs. */
+  def observeSig(batch: DataFrame, idCol: String,
+      textCol: String): ObservedSig =
+    observeHashSig(batch, rowHash(idCol, textCol))
+
+  /** [[hashSig]]'s aggregates over `frame` attached by `Dataset.observe`. */
+  def observeHashSig(frame: DataFrame, h: Column): ObservedSig =
+    new ObservedSig(Observed(frame, sigAggs(h)))
+
+  /** A signature observed on the pass that reads [[frame]] (see
+    * [[Observed]] for where that pass must put the observation, and for
+    * the bounded wait and the same-value fallback). */
+  final class ObservedSig private[AppendLog] (observed: Observed) {
+    def frame: DataFrame = observed.frame
+
+    /** The signature: [[hashSig]]'s value on the rows [[frame]] read. */
+    def sig: Long = sigOf(observed.row)
+
+    /** How many rows [[frame]] read. */
+    def rows: Long = observed.row.getLong(3)
+
+    /** The same signature read from `observation` with `wait`. */
+    private[graft] def awaiting(observation: Future[Row],
+        wait: FiniteDuration): ObservedSig =
+      new ObservedSig(observed.awaiting(observation, wait))
+  }
+
+  private def rowHash(idCol: String, textCol: String): Column =
+    xxhash64(col(idCol).cast(LongType), col(textCol))
+
+  private def sigAggs(h: Column): Seq[Column] = Seq(
+    coalesce(bit_xor(h), lit(0L)).as("bx"),
+    coalesce(sum(h.bitwiseAND(lit(0xffffffffL))), lit(0L)).as("slo"),
+    coalesce(sum(shiftright(h, 32).bitwiseAND(lit(0xffffffffL))), lit(0L))
+      .as("shi"),
+    count(lit(1)).as("bn"))
+
+  private def sigOf(row: Row): Long =
     row.getLong(0) ^ java.lang.Long.rotateLeft(row.getLong(1), 13) ^
       java.lang.Long.rotateLeft(row.getLong(2), 27) ^
       java.lang.Long.rotateLeft(row.getLong(3), 45) ^
       0x5851f42d4c957f2dL
-  }
 
   /** The replay rule. `latest` is the highest committed id, `explicit` the
     * caller's (engine) batch id, None to auto-increment. Returns the id to

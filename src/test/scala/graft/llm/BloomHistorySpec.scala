@@ -329,46 +329,6 @@ class BloomHistorySpec extends SparkTestBase {
     assert(BloomHistory.readMeta(spark, sh)._4 == 2L)
   }
 
-  test("pre-nb sidecar partitions (legacy bid=/bkt= layout) are read " +
-      "with the fixed legacy fan-out, and compaction migrates them") {
-    val docs = spark.read.parquet(s"$sf/documents.parquet")
-    val history = docs.filter(col("doc_id") < 300)
-    val batch = docs.filter(col("doc_id") < 400)
-    val dir = tmp("legacy")
-    BloomHistory.init(spark, dir, mBits = 1 << 16, k = 5)
-    BloomHistory.append(spark, dir, history, "text")
-    val want = BloomHistory.dedupFromStore(spark, dir, batch,
-      "doc_id", "text").collect().map(_.getLong(0)).toSet
-    assert(want.nonEmpty)
-    // rewrite the committed partition into the PRE-nb layout this store
-    // shipped before r14: bid=<b>/bkt=<x> with the fixed 64-bucket
-    // fan-out (ADVICE r14: readers must not treat it as empty history)
-    val fpRoot = new org.apache.hadoop.fs.Path(BloomHistory.fpPath(dir))
-    val fs = fpRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val fps = spark.read.schema("fp STRING, nb BIGINT, bkt BIGINT")
-      .parquet(s"${BloomHistory.fpPath(dir)}/bid=0")
-      .select("fp").localCheckpoint()
-    fs.delete(new org.apache.hadoop.fs.Path(fpRoot, "bid=0"), true)
-    fps.withColumn("bkt", pmod(xxhash64(col("fp")), lit(64)))
-      .repartition(col("bkt"))
-      .write.partitionBy("bkt")
-      .parquet(s"${BloomHistory.fpPath(dir)}/bid=0")
-    assert(BloomHistory.dedupFromStore(spark, dir, batch,
-      "doc_id", "text").collect().map(_.getLong(0)).toSet == want)
-    // a rebuild folds the legacy sidecar too (same fingerprints)
-    BloomHistory.rebuild(spark, dir, newMBits = 1 << 17)
-    assert(BloomHistory.readMeta(spark, dir)._3 == history.count())
-    assert(BloomHistory.dedupFromStore(spark, dir, batch,
-      "doc_id", "text").collect().map(_.getLong(0)).toSet == want)
-    // compaction migrates to the current bid=/nb=/bkt= layout
-    BloomHistory.compactFingerprints(spark, dir)
-    val subs = fs.listStatus(new org.apache.hadoop.fs.Path(fpRoot, "bid=0"))
-      .map(_.getPath.getName).filter(_.startsWith("nb="))
-    assert(subs.length == 1, subs.toSeq)
-    assert(BloomHistory.dedupFromStore(spark, dir, batch,
-      "doc_id", "text").collect().map(_.getLong(0)).toSet == want)
-  }
-
   test("dedupFromStore drops the broadcast hint past the threshold: the " +
       "verify join plans as a shuffle join with identical output") {
     val docs = spark.read.parquet(s"$sf/documents.parquet")
