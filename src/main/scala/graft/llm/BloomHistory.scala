@@ -467,18 +467,19 @@ object BloomHistory {
     readText(spark, path, metaFile).flatMap(longField(_, "lastSig"))
   }
 
-  /** Shard count; 1 for a store written before sharding existed. */
-  private[graft] def readShards(spark: SparkSession, path: String): Int = {
-    import graft.sources.MetaSidecar._
-    readText(spark, path, metaFile).flatMap(longField(_, "nShards"))
-      .getOrElse(1L).toInt
-  }
+  private def metaText(spark: SparkSession, path: String): String =
+    graft.sources.MetaSidecar.readText(spark, path, metaFile).getOrElse(
+      throw new IllegalStateException(s"no bloom history store at $path"))
+
+  /** Shard count. */
+  private[graft] def readShards(spark: SparkSession, path: String): Int =
+    graft.sources.MetaSidecar.requireLong(metaText(spark, path), path,
+      "nShards").toInt
 
   private[graft] def readMeta(spark: SparkSession,
       path: String): (Int, Int, Long, Long) = {
     import graft.sources.MetaSidecar._
-    val txt = readText(spark, path, metaFile).getOrElse(
-      throw new IllegalStateException(s"no bloom history store at $path"))
+    val txt = metaText(spark, path)
     (requireLong(txt, path, "mBits").toInt, requireLong(txt, path, "k").toInt,
       requireLong(txt, path, "nItems"), requireLong(txt, path, "lastBid"))
   }

@@ -1,6 +1,6 @@
 package graft.llm
 
-import graft.{Q, T}
+import graft.{Q, Scratch, T}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -21,61 +21,42 @@ object LlmQueries {
       fn: (SparkSession, String) => DataFrame): Q =
     Q(name, Some(sql), bench = true, maint = true)(fn)
 
-  /** Once-per-dataset-per-JVM persisted IVF index (seed centroids, so the
-    * DuckDB oracle rebuilds it identically). First use in a JVM always
-    * rebuilds, so a stale on-disk index from an earlier run can't leak in. */
-  private val ivfIndexes = scala.collection.concurrent.TrieMap.empty[String, String]
+  /** Persisted IVF index (seed centroids, so the DuckDB oracle rebuilds
+    * it identically), built once per data dir ([[graft.Scratch.once]]). */
   private def ivfIndexFor(dir: String, emb: DataFrame): String =
-    ivfIndexes.getOrElseUpdate(dir, {
-      val path = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft-ivf-" + dir.replaceAll("[^A-Za-z0-9]", "_")).getAbsolutePath
+    Scratch.once("ivf", dir) { path =>
       AnnOps.buildIvfIndex(emb, path, dim = 64, nCentroids = 16,
         centroids = Some(AnnOps.seedCentroids(emb, 16, 64)),
         // inline payload for the FILTERED probe path (q158); columnar
         // parquet means unfiltered probes never read the extra column
         payloadCols = Seq("label"))
-      path
-    })
+    }
 
-  /** Once-per-dataset-per-JVM persisted inverted text index (TextIndex).
-    * Same contract as [[ivfIndexFor]]: first use in a JVM rebuilds. */
-  private val textIndexes = scala.collection.concurrent.TrieMap.empty[String, String]
+  /** Persisted inverted text index (TextIndex), built once per data dir. */
   private def textIndexFor(dir: String, docs: DataFrame): String =
-    textIndexes.getOrElseUpdate(dir, {
-      val path = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft-textidx-" + dir.replaceAll("[^A-Za-z0-9]", "_")).getAbsolutePath
+    Scratch.once("textidx", dir) { path =>
       TextIndex.buildIndex(docs, "doc_id", "text", path, nBuckets = 64)
-      path
-    })
+    }
 
-  /** Once-per-dataset-per-JVM persisted DETERMINISTIC IVF-PQ index
+  /** Persisted DETERMINISTIC IVF-PQ index
     * (AnnOps.buildIvfPqIndexDeterministic — seed cells, zero means, hash
-    * codebooks, so the DuckDB oracle rebuilds it identically). Same
-    * contract as [[ivfIndexFor]]: first use in a JVM rebuilds. */
-  private val ivfPqIndexes = scala.collection.concurrent.TrieMap.empty[String, String]
+    * codebooks, so the DuckDB oracle rebuilds it identically), built once
+    * per data dir. */
   private def ivfPqIndexFor(dir: String, emb: DataFrame): String =
-    ivfPqIndexes.getOrElseUpdate(dir, {
-      val path = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft-ivfpq-" + dir.replaceAll("[^A-Za-z0-9]", "_")).getAbsolutePath
+    Scratch.once("ivfpq", dir) { path =>
       AnnOps.buildIvfPqIndexDeterministic(emb, path, dim = 64,
         nCentroids = 16, m = 8, kCodes = 16,
         // inline payload for the FILTERED compressed probe (q159);
         // columnar parquet means unfiltered probes never read it
         payloadCols = Seq("label"))
-      path
-    })
+    }
 
-  /** Once-per-dataset-per-JVM persisted shingle-postings index
-    * (ShingleIndex) for the containment family. Same contract as
-    * [[ivfIndexFor]]: first use in a JVM rebuilds. */
-  private val shingleIndexes = scala.collection.concurrent.TrieMap.empty[String, String]
+  /** Persisted shingle-postings index (ShingleIndex) for the containment
+    * family, built once per data dir. */
   private def shingleIndexFor(dir: String, docs: DataFrame): String =
-    shingleIndexes.getOrElseUpdate(dir, {
-      val path = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft-shidx-" + dir.replaceAll("[^A-Za-z0-9]", "_")).getAbsolutePath
+    Scratch.once("shidx", dir) { path =>
       ShingleIndex.build(docs, "doc_id", "text", path, n = 3, nBuckets = 64)
-      path
-    })
+    }
 
   /** Doc-similarity graph shared by q115/q125: unique edges between docs
     * with ≥2 shared RARE 3-shingles (df ≤ 50 — the stop-shingle cap that
@@ -98,23 +79,16 @@ object LlmQueries {
       .filter(col("c") >= 2).select("a", "b")
   }
 
-  /** Once-per-(JVM, dir) MATERIALIZED similarity graph — the same
-    * build-once-serve-many contract as the persisted IVF/text indexes
-    * (ivfIndexFor/textIndexFor): the near-dup graph is a pipeline
-    * artifact consumed by several downstream analytics (triangles q115,
-    * k-core q125, CC), so the candidate-join build cost is paid once per
-    * corpus and each consumer reads an edge-list parquet. */
-  private val simGraphs = scala.collection.concurrent.TrieMap.empty[String, String]
+  /** MATERIALIZED similarity graph, built once per data dir: the near-dup
+    * graph is a pipeline artifact consumed by several downstream
+    * analytics (triangles q115, k-core q125, CC), so the candidate-join
+    * build cost is paid once per corpus and each consumer reads an
+    * edge-list parquet. */
   private def simGraphFor(s: org.apache.spark.sql.SparkSession,
-      dir: String): org.apache.spark.sql.DataFrame = {
-    val path = simGraphs.getOrElseUpdate(dir, {
-      val p = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft-simgraph-" + dir.replaceAll("[^A-Za-z0-9]", "_")).getAbsolutePath
-      docSimilarityEdges(s, dir).write.mode("overwrite").parquet(p)
-      p
+      dir: String): org.apache.spark.sql.DataFrame =
+    s.read.parquet(Scratch.once("simgraph", dir) { p =>
+      docSimilarityEdges(s, dir).write.parquet(p)
     })
-    s.read.parquet(path)
-  }
 
   // DuckDB spelling of TextOps.tokens / wordShingles(3)
   private val sqlToks = "string_split(trim(text), ' ')"
@@ -518,34 +492,27 @@ object LlmQueries {
     * admission night, append, optionally run a FORCED maintenance slot
     * (q147 — every dial tripped; serves must be unchanged), then serve
     * from every store into one tagged frame. */
-  /** One bootstrapped five-store fixture per (JVM, sf dir), shared by
-    * every nightly-cycle entry (q144/q147/q152/q157 — same lake, same
+  /** One bootstrapped five-store fixture per data dir, shared by every
+    * nightly-cycle entry (q144/q147/q152/q157 — same lake, same
     * initStores arguments): the first entry builds it, the rest COPY it
     * to their own mutable root (VERDICT r13 #7 — 3 bench passes × 4
     * entries used to pay 12 identical lake-sized bootstraps; now one
     * build per bench/verify run, and per-entry numbers price the night +
-    * serves + a directory copy, which is the lifecycle-honest split).
-    * JVM-scoped (a fresh tmpdir per process), so a code change can never
-    * serve a stale fixture to the correctness gate. */
+    * serves + a directory copy, which is the lifecycle-honest split). */
   private object NightlyBootCache {
-    private val built = scala.collection.mutable.Map[String, String]()
-    def fixtureFor(s: SparkSession, dir: String): String = synchronized {
-      built.getOrElseUpdate(dir, {
-        val p = java.nio.file.Files
-          .createTempDirectory("graft-nightboot").toString + "/stores"
+    def fixtureFor(s: SparkSession, dir: String): String =
+      Scratch.once("nightboot", dir) { p =>
         val docs = T.documents(s, dir)
         val emb = T.embeddings(s, dir)
         NightlyCuration.initStores(s, NightlyCuration.Stores(p),
           docs.filter(pmod(col("doc_id"), lit(3)) =!= 0),
           emb.filter(pmod(col("vec_id"), lit(3)) =!= 0), "doc_id", "text")
-        p
-      })
-    }
-    /** Copy the fixture to `root` (deleted first). The Bloom fingerprint
-      * sidecar lives at `<root>/bloom__fp`, inside the tree, so one
-      * recursive copy moves the whole store state. The tree is thousands
-      * of small bucket files (five partitioned stores), so the copy runs
-      * file-parallel on a small pool — FileUtil.copy walked it
+      }
+    /** Copy the fixture into `root`, which is empty or absent. The Bloom
+      * fingerprint sidecar lives at `<root>/bloom__fp`, inside the tree,
+      * so one recursive copy moves the whole store state. The tree is
+      * thousands of small bucket files (five partitioned stores), so the
+      * copy runs file-parallel on a small pool — FileUtil.copy walked it
       * single-threaded and the per-entry copy was pure latency (guide
       * §2.6's overlap idiom applied to driver-side fs work). */
     def copyTo(s: SparkSession, dir: String, root: String): Unit = {
@@ -554,7 +521,6 @@ object LlmQueries {
       val src = new Path(fixtureFor(s, dir))
       val dst = new Path(root)
       val fs = dst.getFileSystem(conf)
-      if (fs.exists(dst)) fs.delete(dst, true)
       // collect (srcFile, dstFile) pairs; create dirs up front (cheap)
       val files = scala.collection.mutable.ArrayBuffer.empty[(Path, Path)]
       def walk(p: Path, d: Path): Unit = {
@@ -603,9 +569,7 @@ object LlmQueries {
 
   private def nightlyCurationGate(s: SparkSession, dir: String,
       tag: String, maintain: Boolean, streamed: Boolean = false): DataFrame = {
-      val root = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft-" + tag + "-" + dir.replaceAll("[^A-Za-z0-9]", "_"))
-        .getAbsolutePath
+      val root = Scratch.fresh(tag, dir)
       val stores = NightlyCuration.Stores(root)
       val rootPath = new org.apache.hadoop.fs.Path(root)
       val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
@@ -1837,13 +1801,7 @@ object LlmQueries {
          |GROUP BY 1, 2
          |HAVING count(*) >= 2
          |ORDER BY a NULLS FIRST, b NULLS FIRST""".stripMargin) { (s, dir) =>
-      import org.apache.hadoop.fs.Path
-      val p = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft-simstore-" + dir.replaceAll("[^A-Za-z0-9]", "_")).getAbsolutePath
-      graft.sources.ParquetCompaction.recover(s, p)
-      val root = new Path(p)
-      val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(root)) fs.delete(root, true)
+      val p = Scratch.fresh("simstore", dir) + "/store"
       val docs = T.documents(s, dir)
       SimGraphStore.init(s, p, n = 3, cap = 50L, minCommon = 2L)
       SimGraphStore.update(s, p,
@@ -2046,13 +2004,7 @@ object LlmQueries {
          |      >= 0.8 * len(a.shingles)
          |ORDER BY ida NULLS FIRST, idb NULLS FIRST""".stripMargin) {
       (s, dir) =>
-        val p = new java.io.File(sys.props("java.io.tmpdir"),
-          "graft-shappend-" + dir.replaceAll("[^A-Za-z0-9]", "_"))
-          .getAbsolutePath
-        graft.sources.ParquetCompaction.recover(s, p)
-        val root = new org.apache.hadoop.fs.Path(p)
-        val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-        if (fs.exists(root)) fs.delete(root, true)
+        val p = Scratch.fresh("shappend", dir) + "/store"
         val docs = T.documents(s, dir)
         ShingleIndex.build(docs.filter(pmod(col("doc_id"), lit(5)) =!= 0),
           "doc_id", "text", p, n = 3, nBuckets = 64)
@@ -2079,13 +2031,7 @@ object LlmQueries {
          |  AND EXISTS (SELECT 1 FROM fp h
          |              WHERE h.doc_id % 3 != 0 AND h.fp = b.fp)
          |ORDER BY doc_id NULLS FIRST""".stripMargin) { (s, dir) =>
-      val p = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft-bloomstore-" + dir.replaceAll("[^A-Za-z0-9]", "_"))
-        .getAbsolutePath
-      graft.sources.ParquetCompaction.recover(s, p)
-      val root = new org.apache.hadoop.fs.Path(p)
-      val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(root)) fs.delete(root, true)
+      val p = Scratch.fresh("bloomstore", dir) + "/store"
       val docs = T.documents(s, dir)
       val history = docs.filter(pmod(col("doc_id"), lit(3)) =!= 0)
       BloomHistory.init(s, p)
@@ -2312,13 +2258,9 @@ object LlmQueries {
          |HAVING count(*) >= 2
          |ORDER BY a NULLS FIRST, b NULLS FIRST""".stripMargin) { (s, dir) =>
       import org.apache.hadoop.fs.Path
-      val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-      val base = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft-simstream-" + tag).getAbsolutePath
+      val base = Scratch.fresh("simstream", dir)
       val (src, store, ck) = (s"$base/src", s"$base/store", s"$base/ck")
-      graft.sources.ParquetCompaction.recover(s, store)
       val fs = new Path(base).getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(new Path(base))) fs.delete(new Path(base), true)
       val docs = T.documents(s, dir)
       // stage each slice as one file: the file source delivers one file
       // per AvailableNow trigger = one deterministic micro-batch
@@ -2401,9 +2343,7 @@ object LlmQueries {
     // admitted row all hash-mismatch here while q152 stays green.
     qm("q157_continuous_night_log", continuousNightOracle) { (s, dir) =>
       import org.apache.hadoop.fs.Path
-      val root = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft-contnight-" + dir.replaceAll("[^A-Za-z0-9]", "_"))
-        .getAbsolutePath
+      val root = Scratch.fresh("contnight", dir)
       val stores = NightlyCuration.Stores(root)
       val fs = new Path(root)
         .getFileSystem(s.sparkContext.hadoopConfiguration)
@@ -2472,24 +2412,27 @@ object LlmQueries {
     // peel CTEs whether or not the peel converges early, because a
     // fixpoint is stable under further rounds). The surviving dense cores
     // are near-dup template families; core_deg ranks how embedded each
-    // doc is.
+    // doc is. The oracle declares every CTE MATERIALIZED: each peel reads
+    // the previous one several times, and DuckDB without the hint never
+    // finished (spilling past 8 GB at sf0.001). A materialization hint
+    // only says a CTE is computed once; it cannot change the rows.
     q("q125_kcore", {
       val peels = (1 to 4).map { r =>
-        s"""d$r AS (SELECT v, count(*) AS dg FROM (
+        s"""d$r AS MATERIALIZED (SELECT v, count(*) AS dg FROM (
            |    SELECT a AS v FROM e${r - 1} UNION ALL SELECT b FROM e${r - 1})
            |  GROUP BY v),
-           |k$r AS (SELECT v FROM d$r WHERE dg >= 4),
-           |e$r AS (SELECT e${r - 1}.a, e${r - 1}.b FROM e${r - 1}
+           |k$r AS MATERIALIZED (SELECT v FROM d$r WHERE dg >= 4),
+           |e$r AS MATERIALIZED (SELECT e${r - 1}.a, e${r - 1}.b FROM e${r - 1}
            |  JOIN k$r x ON e${r - 1}.a = x.v
            |  JOIN k$r y ON e${r - 1}.b = y.v)""".stripMargin
       }.mkString(",\n")
-      s"""WITH sh AS (
+      s"""WITH sh AS MATERIALIZED (
          |  SELECT doc_id, unnest($sqlShingles) AS s
          |  FROM (SELECT doc_id, $sqlToks AS toks FROM documents)
          |),
-         |rare AS (SELECT s FROM sh GROUP BY s HAVING count(*) <= 50),
-         |p AS (SELECT doc_id, s FROM sh JOIN rare USING (s)),
-         |e0 AS (SELECT a.doc_id AS a, b.doc_id AS b
+         |rare AS MATERIALIZED (SELECT s FROM sh GROUP BY s HAVING count(*) <= 50),
+         |p AS MATERIALIZED (SELECT doc_id, s FROM sh JOIN rare USING (s)),
+         |e0 AS MATERIALIZED (SELECT a.doc_id AS a, b.doc_id AS b
          |      FROM p a JOIN p b ON a.s = b.s AND a.doc_id < b.doc_id
          |      GROUP BY a.doc_id, b.doc_id
          |      HAVING count(*) >= 2),
@@ -3001,14 +2944,7 @@ object LlmQueries {
          |  CASE WHEN substr(md5(CAST(cluster AS VARCHAR)), 1, 4) < 'cccd'
          |       THEN 'train' ELSE 'test' END AS split
          |FROM lab ORDER BY doc_id NULLS FIRST""".stripMargin) { (s, dir) =>
-      import org.apache.hadoop.fs.Path
-      val p = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft-splitstore-" + dir.replaceAll("[^A-Za-z0-9]", "_"))
-        .getAbsolutePath
-      graft.sources.ParquetCompaction.recover(s, p)
-      val root = new Path(p)
-      val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(root)) fs.delete(root, true)
+      val p = Scratch.fresh("splitstore", dir) + "/store"
       val docs = T.documents(s, dir)
       SimGraphStore.init(s, p, n = 3, cap = 50L, minCommon = 2L)
       SimGraphStore.update(s, p,

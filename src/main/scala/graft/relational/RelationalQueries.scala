@@ -26,17 +26,13 @@ object RelationalQueries {
       fn: (SparkSession, String) => DataFrame): Q =
     Q(name, Some(sql), bench = true, maint = true)(fn)
 
-  /** Once-per-(JVM, dir) Morton-clustered lineitem copy (q130) — the same
-    * build-once contract as the persisted indexes. */
-  private val zorders = scala.collection.concurrent.TrieMap.empty[String, String]
+  /** Morton-clustered lineitem copy (q130), built once per data dir
+    * ([[graft.Scratch.once]]). */
   private def zorderFor(s: SparkSession, dir: String): String =
-    zorders.getOrElseUpdate(dir, {
-      val p = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft-zorder-" + dir.replaceAll("[^A-Za-z0-9]", "_")).getAbsolutePath
+    graft.Scratch.once("zorder", dir) { p =>
       graft.sources.ZOrder.writeZOrdered(lineitem(s, dir),
         "l_partkey", "l_suppkey", p, numFiles = 32)
-      p
-    })
+    }
 
   val all: Seq[Q] = Seq(
     // ---- §2.4 aggregation: GROUP BY with SUM/AVG/COUNT (TPC-H Q1 shape).
@@ -1146,15 +1142,8 @@ object RelationalQueries {
         |FROM orders
         |GROUP BY o_orderpriority
         |ORDER BY pri NULLS FIRST""".stripMargin) { (s, dir) =>
-      import org.apache.hadoop.fs.Path
-      val p = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft-cmpgate-" + dir.replaceAll("[^A-Za-z0-9]", "_")).getAbsolutePath
-      // recover-before-first-touch (the ParquetCompaction invariant),
-      // then rebuild the append-grown sink fresh for this invocation
-      graft.sources.ParquetCompaction.recover(s, p)
-      val root = new Path(p)
-      val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(root)) fs.delete(root, true)
+      // the append-grown sink, rebuilt fresh for this invocation
+      val p = graft.Scratch.fresh("cmpgate", dir) + "/store"
       val src = orders(s, dir)
       (0 until 3).foreach { r =>
         src.filter(pmod(col("o_orderkey"), lit(3)) === r)

@@ -63,10 +63,7 @@ object ParquetCompaction {
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     rewrite(spark, path) { tmp =>
       require(fs.exists(root), s"nothing to compact at $path")
-      // mergeSchema: an append-grown sink may hold files written before a
-      // column existed (the shards table's batch_id migration) — the
-      // rewrite must carry the union schema, with old rows null-filled
-      val df = spark.read.option("mergeSchema", "true").parquet(path)
+      val df = spark.read.parquet(path)
       if (partitionCols.nonEmpty)
         df.repartition(partitionCols.map(col): _*)
           .write.partitionBy(partitionCols: _*).parquet(tmp)

@@ -159,24 +159,20 @@ object TpchGraph {
     TriplesGraph.fromLazySlices(s, slices, Some(ts))
   }
 
-  /** Once-per-(JVM, dir) N-Triples round trip of the graph's DIMENSION
-    * slices (names, region/nation edges, acctbal): export through the
-    * distributed typed sink, parse back through `sources.NTriples`, and
-    * re-type via `toGraph` — q123's serialize→parse→re-type surface. The
-    * fact/sensor slices are excluded to keep the interchange file
-    * dimension-sized; they round-trip the same way (NTriplesSpec). */
-  private val roundTripped =
-    scala.collection.concurrent.TrieMap.empty[String, String]
+  /** N-Triples round trip of the graph's DIMENSION slices (names,
+    * region/nation edges, acctbal), written once per data dir
+    * ([[graft.Scratch.once]]): export through the distributed typed sink,
+    * parse back through `sources.NTriples`, and re-type via `toGraph` —
+    * q123's serialize→parse→re-type surface. The fact/sensor slices are
+    * excluded to keep the interchange file dimension-sized; they
+    * round-trip the same way (NTriplesSpec). */
   def roundTrippedGraph(s: SparkSession, dir: String): TriplesGraph = {
     val keep = Set(name, inRegion, nationOf, acctbal)
-    val path = roundTripped.getOrElseUpdate(dir, {
+    val path = graft.Scratch.once("ntrt", dir) { out =>
       val g0 = graph(s, dir)
-      val out = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft-ntrt-" + dir.replaceAll("[^A-Za-z0-9]", "_")).getAbsolutePath
       g0.writeNTriplesDistributed(out,
         excluded = (g0.slices.keySet -- keep).toSeq)
-      out
-    })
+    }
     graft.sources.NTriples.toGraph(s, graft.sources.NTriples.read(s, path))
   }
 

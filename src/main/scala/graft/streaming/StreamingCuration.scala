@@ -53,14 +53,10 @@ import org.apache.spark.sql.types._
   * metadata (Delta/Iceberg); the batch-id tag is the parquet-only
   * equivalent.
   *
-  * Two operational seams (round 11): a shards table written before the
-  * batch-id tag existed (no `batch_id` column) degrades gracefully — all
-  * of its rows count toward the lifetime total, since none can be this
-  * batch's; and because engine batch ids restart at 0 when a checkpoint
-  * dir is reset, resuming a FRESH checkpoint against an EXISTING sink is
-  * detected (own-tagged rows the deterministic re-pack does not
-  * reproduce) and fails loudly — checkpoint and sink dirs must be reset
-  * together. */
+  * Because engine batch ids restart at 0 when a checkpoint dir is reset,
+  * resuming a FRESH checkpoint against an EXISTING sink is detected
+  * (own-tagged rows the deterministic re-pack does not reproduce) and
+  * fails loudly — checkpoint and sink dirs must be reset together. */
 object StreamingCuration {
 
   /** Drain currently-available input through the curation pipeline:
@@ -89,6 +85,11 @@ object StreamingCuration {
       graft.sources.ParquetCompaction.compact(spark, shardsDir,
         targetFiles = targetFiles)
   }
+
+  /** The shards table's one layout: [[SampleOps.packIntoShards]]' rows
+    * tagged with the micro-batch id. */
+  private val shardsSchema = StructType.fromDDL(
+    "doc_id BIGINT, n_tok BIGINT, cum_tok BIGINT, shard BIGINT, batch_id BIGINT")
 
   private def exists(spark: SparkSession, dir: String): Boolean = {
     val p = new org.apache.hadoop.fs.Path(dir)
@@ -150,28 +151,17 @@ object StreamingCuration {
     //    replay's offsets (ADVICE r9). Other batches' rows always count,
     //    even for re-delivered doc_ids.
     val haveShards = exists(spark, shardsDir)
-    val ownRows: Option[DataFrame] = if (haveShards) {
-      val raw = spark.read.option("mergeSchema", "true").parquet(shardsDir)
-      // a shards table written before the batch-id tag existed has no
-      // batch_id column (VERDICT r10): its rows are by definition not
-      // this batch's, so they all count toward the lifetime total
-      val shards =
-        if (raw.columns.contains("batch_id")) raw
-        else raw.withColumn("batch_id", lit(null).cast(LongType))
-      Some(shards)
-    } else None
+    val ownRows = Option.when(haveShards)(
+      spark.read.schema(shardsSchema).parquet(shardsDir))
     // one lifetime-table scan per batch: the other-batches max and the
     // own-row count come out of a single aggregation (the guard below
     // only pays its exceptAll when own rows actually exist — the rare
-    // replay case, not every batch). Null-safe inequality: pre-upgrade
-    // files under a merged schema read batch_id as null — those are
-    // other batches' rows and must stay in the max (plain =!= would
-    // null them out of the filter).
+    // replay case, not every batch)
     val (startAt, ownCount) = ownRows.fold((0L, 0L)) { shards =>
       val r = shards.agg(
-        coalesce(max(when(!(col("batch_id") <=> lit(batchId)),
+        coalesce(max(when(col("batch_id") =!= lit(batchId),
           col("cum_tok"))), lit(0L)),
-        count(when(col("batch_id") <=> lit(batchId), lit(1)))).head
+        count(when(col("batch_id") === lit(batchId), lit(1)))).head
       (r.getLong(0), r.getLong(1))
     }
     // materialized once: both the stale-row guard and the sink append
@@ -193,7 +183,7 @@ object StreamingCuration {
     // sink dirs must always be reset TOGETHER.)
     ownRows.foreach { shards =>
       if (ownCount > 0) {
-        val own = shards.filter(col("batch_id") <=> lit(batchId))
+        val own = shards.filter(col("batch_id") === lit(batchId))
           .select("doc_id", "n_tok", "cum_tok", "shard")
         val stale = own.exceptAll(
           packed.select("doc_id", "n_tok", "cum_tok", "shard"))

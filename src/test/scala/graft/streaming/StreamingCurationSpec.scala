@@ -146,31 +146,6 @@ class StreamingCurationSpec extends SparkTestBase {
     }
   }
 
-  test("a pre-batch_id shards table degrades gracefully: all old rows " +
-      "count toward the lifetime total (VERDICT r10)") {
-    import spark.implicits._
-    val (idx, out) = (tmp("idx6"), tmp("out6"))
-    // a shards dir written by pre-r10 code: no batch_id column
-    Seq((9000001L, 100L, 4900L, 9L), (9000002L, 100L, 5000L, 9L))
-      .toDF("doc_id", "n_tok", "cum_tok", "shard")
-      .write.mode("overwrite").parquet(s"$out/shards")
-    val batch = spark.read.parquet(s"$sf/documents.parquet")
-      .filter(col("doc_id") < 150)
-    StreamingCuration.processBatch(batch, 0L, s"$idx/fp", s"$out/shards",
-      512L, 0.5)
-    val all = spark.read.option("mergeSchema", "true")
-      .parquet(s"$out/shards")
-    val newRows = all.filter(col("doc_id") < 9000000L)
-    assert(newRows.count() > 0)
-    // the old rows' max(cum_tok)=5000 seeded the pack — no overlap
-    assert(newRows.agg(min("cum_tok")).head.getLong(0) > 5000L)
-    // and a replay over the now-mixed-schema table is still a no-op
-    val once = canonShards(s"$out/shards")
-    StreamingCuration.processBatch(batch, 0L, s"$idx/fp", s"$out/shards",
-      512L, 0.5)
-    assert(canonShards(s"$out/shards") == once)
-  }
-
   test("a fresh checkpoint against an existing sink fails loudly " +
       "(ADVICE r10: engine batch ids restart at 0)") {
     import spark.implicits._
