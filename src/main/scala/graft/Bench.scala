@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Headline benchmark: one warmup pass (JIT + codegen + file-listing caches)
@@ -17,53 +16,19 @@ import java.nio.file.{Files, Paths}
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val passes = sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // start every shuffle wide and let AQE coalesce: with only
-      // shuffle.partitions=cpus, a 100× corpus forces GB-scale partitions
-      // that spill (the 100× rehearsal measured q67 4× over linear on
-      // exactly this); 256 initial partitions cost nothing at sf0.1
-      // (AQE merges them back) and are the cluster-realistic shape
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        sys.env.getOrElse("SPARK_GRAFT_INIT_PARTS", "256"))
-      // parallelismFirst=false (coalesce to the 64MB advisory size) was
-      // A/B'd at sf0.1: it recovers the iterative entries' 256-partition
-      // overhead (q90 0.65×, q116 0.81×) but starves cheap CPU-heavy
-      // map stages of parallelism (q70 2.8×, q07 2.1×) for a net +8%
-      // total — Spark's default (true) wins on this catalog; the env
-      // knob keeps the experiment repeatable
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_PARALLELISM_FIRST", "true"))
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    // ERROR, not WARN: the driver keeps only a bounded tail of stdout, and
-    // localCheckpoint-unpersist WARN spam was crowding the per-query
-    // summary line (below) out of that window
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(GraftSession.cpus)
 
-    def runOnce(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): (Double, Boolean) = {
+    def runOnce(q: Q): (Double, Boolean) = {
       val t0 = System.nanoTime()
       val out =
         try {
-          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+          q.fn(spark, sfDir).write.format("noop").mode("overwrite").save()
           ((System.nanoTime() - t0) / 1e9, true)
         } catch {
           case _: Throwable => ((System.nanoTime() - t0) / 1e9, false)
         }
-      // UNTIMED cleanup: release the query's localCheckpoint blocks.
-      // Checkpointed RDDs are only freed when the driver GC notices the
-      // DataFrame is unreachable — across 78 entries × 4 passes the leaked
-      // blocks thrash the block manager and pass-3 timings explode (q67
-      // measured 7.7s → 328s before this). Queries never share persisted
-      // state, so dropping everything between runs is safe.
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      GraftSession.release(spark) // untimed
       out
     }
 
@@ -130,18 +95,14 @@ object Bench {
     // the query group's medians are store-churn-free, and the two
     // subtotals are reported separately so the headline is comparable
     // across rounds on the common query set.
-    val allEntries = SparkEntry.catalog.filter(_.bench)
-    // A/B knob (VERDICT r11 #4b): skip the maintenance group entirely to
-    // attribute any query-median delta to the split itself
-    val skipMaint = sys.env.get("SPARK_GRAFT_BENCH_SKIP_MAINT").contains("1")
-    val queryEntries = allEntries.filterNot(_.maint)
-    val maintEntries = if (skipMaint) Seq.empty else allEntries.filter(_.maint)
+    val (maintEntries, queryEntries) =
+      SparkEntry.catalog.filter(_.bench).partition(_.maint)
     // Warmup: full pass, unmeasured (calibrations too — first run JITs +
     // warms the calibration slice's file listing and page cache).
     calibrate()
     calibrateCpu()
-    queryEntries.foreach(q => runOnce(q.fn))
-    maintEntries.foreach(q => runOnce(q.fn))
+    queryEntries.foreach(runOnce)
+    maintEntries.foreach(runOnce)
     // Measured passes are INTERLEAVED (pass 1 runs every query, then pass 2,
     // ...) so a JIT/GC hiccup lands on one pass of many queries, not three
     // back-to-back samples of one query. A wall-clock budget bounds the
@@ -161,7 +122,7 @@ object Bench {
     while (pass < passes && (pass == 0 || withinBudget)) {
       calibSamples += calibrate()
       calibCpuSamples += calibrateCpu()
-      samples += queryEntries.map(q => runOnce(q.fn))
+      samples += queryEntries.map(runOnce)
       pass += 1
     }
     // the maintenance tail: same interleaved-median protocol, after every
@@ -179,7 +140,7 @@ object Bench {
     while (maintEntries.nonEmpty && pass < passes &&
         (pass < minMaintPasses || withinBudget)) {
       maintCalibSamples += calibrate()
-      maintSamples += maintEntries.map(q => runOnce(q.fn))
+      maintSamples += maintEntries.map(runOnce)
       pass += 1
     }
     def medians(entries: Seq[Q],

@@ -32,4 +32,19 @@ object Catalog {
     graft.relational.RelationalQueries.all ++
       graft.sparql.SparqlQueries.all ++
       graft.llm.LlmQueries.all
+
+  /** The entries `tokens` name, in catalog order: a token names every
+    * entry whose name it equals or prefixes (`q144` selects
+    * q144_nightly_curation_stores). Empty tokens are dropped, so
+    * `q144,,q147` stays targeted; a token that names nothing fails,
+    * naming it. */
+  def select(tokens: Seq[String]): Seq[Q] = {
+    val toks = tokens.map(_.trim).filter(_.nonEmpty)
+    require(toks.nonEmpty, "no catalog entry token given")
+    val entries = all
+    val unknown = toks.filterNot(t => entries.exists(_.name.startsWith(t)))
+    require(unknown.isEmpty,
+      s"no catalog entry matches ${unknown.mkString("'", "', '", "'")}")
+    entries.filter(q => toks.exists(q.name.startsWith))
+  }
 }

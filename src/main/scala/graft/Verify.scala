@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types._
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
@@ -146,54 +145,30 @@ object Verify {
     }
   }
   def main(args: Array[String]): Unit = {
-    // optional third arg: comma-separated entry names — a targeted local
-    // re-check without paying the full catalog (the driver passes two)
-    val (sfDir, outDir, only) = args match {
-      case Array(a, b)    => (a, b, None)
-      // drop empty tokens: `q144,,q147` must stay targeted, not silently
-      // widen to the whole catalog via a startsWith("") match-all
-      case Array(a, b, c) =>
-        (a, b, Some(c.split(",").map(_.trim).filter(_.nonEmpty).toSet))
-    }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      // start shuffles wide, let AQE coalesce (see Bench for rationale)
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "256")
-      // events.parquet carries TIMESTAMP(NANOS) — read as Long nanos.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // write micros (not INT96) so the driver-side reader sees plain int64.
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .getOrCreate()
+    // optional third arg: comma-separated entry tokens (Catalog.select) —
+    // a targeted local re-check without paying the full catalog (the
+    // driver passes two)
+    val (sfDir, outDir) = (args(0), args(1))
+    val entries =
+      args.lift(2).fold(Catalog.all)(c => Catalog.select(c.split(",")))
+    val spark = GraftSession.local(GraftSession.cpus)
+    // write micros (not INT96) so the driver-side reader sees plain int64
+    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // each requested token matches an exact name or a name prefix, so a
-    // targeted re-check can say `q144,q147` without the full suffixes (a
-    // bare prefix used to match nothing — a silently empty run)
-    def selected(name: String): Boolean =
-      only.forall(_.exists(tok => name == tok || name.startsWith(tok)))
-    SparkEntry.queries
-      .filter { case (name, _) => selected(name) }
-      .foreach { case (name, fn) =>
+    entries.foreach { q =>
       // repartition(1): single output file for the driver, but behind a
       // shuffle so the query itself keeps its parallelism (coalesce(1)
       // would collapse the whole upstream plan to one task)
       try {
-        val df = fn(spark, sfDir)
-        assertScalarSchema(name, df.schema)
-        df.repartition(1).write.mode("overwrite").parquet(s"$outDir/$name")
+        val df = q.fn(spark, sfDir)
+        assertScalarSchema(q.name, df.schema)
+        df.repartition(1).write.mode("overwrite").parquet(s"$outDir/${q.name}")
       }
       catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        System.err.println(s"[verify] ${q.name} failed: ${e.getMessage}")
       }
-      // release localCheckpoint blocks between entries (same hygiene as
-      // Bench: queries never share persisted state)
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      GraftSession.release(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
@@ -212,9 +187,8 @@ object Verify {
     SparkEntry.oracleSql.foreach { case (k, v) =>
       lintOracleSql(k, v).foreach(msg => System.err.println(s"[verify] $msg"))
     }
-    val json = SparkEntry.oracleSql
-      .filter { case (k, _) => selected(k) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val json = entries.flatMap(e => e.sql.map(v => s"${q(e.name)}: ${q(v)}"))
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

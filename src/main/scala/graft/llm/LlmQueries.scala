@@ -95,19 +95,19 @@ object LlmQueries {
   private val sqlShingles =
     s"list_distinct([array_to_string(toks[i:i+2], ' ') for i in range(1, len(toks) - 1)])"
 
-  // Oracle spelling of TextOps.simhash (64 md5-derived bit sums)
-  private def simhashOracle: String = {
+  // Oracle spelling of TextOps.simhash (64 md5-derived bit sums): one
+  // (doc_id, <alias>) row per document that the FROM clause `docs` yields
+  private def simhashSql(alias: String, docs: String = "documents"): String = {
     val sums = (0 until 64).map { b =>
       val k = b / 4 + 1
       val div = 1 << (3 - (b % 4))
       s"SUM(2 * ((CAST(strpos('0123456789abcdef', substr(md5(t), $k, 1)) - 1 AS INT) // $div) % 2) - 1) AS s$b"
     }
     val bits = (0 until 64).map(b => s"(CASE WHEN s$b >= 0 THEN '1' ELSE '0' END)")
-    s"""SELECT doc_id, ${bits.mkString(" || ")} AS simhash FROM (
+    s"""SELECT doc_id, ${bits.mkString(" || ")} AS $alias FROM (
        |  SELECT doc_id, ${sums.mkString(", ")}
-       |  FROM (SELECT doc_id, unnest(list_distinct($sqlToks)) AS t FROM documents)
-       |  GROUP BY doc_id)
-       |ORDER BY doc_id NULLS FIRST""".stripMargin
+       |  FROM (SELECT doc_id, unnest(list_distinct($sqlToks)) AS t FROM $docs)
+       |  GROUP BY doc_id)""".stripMargin
   }
 
   // Oracle spelling of AnnOps.lshThresholdPairs band keys. Plane component
@@ -567,12 +567,28 @@ object LlmQueries {
     }
   }
 
+  /** Stages one feed slice as the single file `<src>/<name>.parquet`. The
+    * file source reads whole files, so a slice staged as one file stays
+    * one unit of a micro-batch. The slice is written to a sibling temp dir
+    * and its one part renamed in, so a stream never lists a half-written
+    * file. */
+  private def stageFeed(slice: DataFrame, src: String, name: String): Unit = {
+    import org.apache.hadoop.fs.Path
+    val tmp = new Path(s"$src-stage-$name")
+    slice.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+    val fs = tmp.getFileSystem(
+      slice.sparkSession.sparkContext.hadoopConfiguration)
+    val part = fs.listStatus(tmp).map(_.getPath)
+      .find(_.getName.endsWith(".parquet")).get
+    fs.mkdirs(new Path(src))
+    fs.rename(part, new Path(src, s"$name.parquet"))
+    fs.delete(tmp, true)
+  }
+
   private def nightlyCurationGate(s: SparkSession, dir: String,
       tag: String, maintain: Boolean, streamed: Boolean = false): DataFrame = {
       val root = Scratch.fresh(tag, dir)
       val stores = NightlyCuration.Stores(root)
-      val rootPath = new org.apache.hadoop.fs.Path(root)
-      val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
       val docs = T.documents(s, dir)
       val emb = T.embeddings(s, dir)
       val history = docs.filter(pmod(col("doc_id"), lit(3)) =!= 0)
@@ -584,18 +600,10 @@ object LlmQueries {
         // state, so the staged union == the batch cycle's admitted set
         // for any split (StreamingNightlyCuration scaladoc) — which is
         // why this path shares q144's oracle verbatim.
-        import org.apache.hadoop.fs.Path
         val src = s"$root/feed"
-        def stage(slice: org.apache.spark.sql.DataFrame, name: String): Unit = {
-          val tmp = s"$root/feed-stage-$name"
-          slice.select(col("doc_id").cast("long").as("doc_id"), col("text"))
-            .coalesce(1).write.mode("overwrite").parquet(tmp)
-          val part = fs.listStatus(new Path(tmp)).map(_.getPath)
-            .find(_.getName.endsWith(".parquet")).get
-          fs.mkdirs(new Path(src))
-          fs.rename(part, new Path(src, s"$name.parquet"))
-          fs.delete(new Path(tmp), true)
-        }
+        def stage(slice: DataFrame, name: String): Unit = stageFeed(
+          slice.select(col("doc_id").cast("long").as("doc_id"), col("text")),
+          src, name)
         stage(batch.filter(pmod(col("doc_id"), lit(9)) === 0), "b0")
         stage(batch.filter(pmod(col("doc_id"), lit(9)) === 3), "b1")
         // maxFilesPerTrigger=2: drain the currently-available slices in
@@ -795,7 +803,8 @@ object LlmQueries {
     },
 
     // ---- 64-bit SimHash fingerprints (md5-bit-derived, engine-portable).
-    q("q48_simhash", simhashOracle) { (s, dir) =>
+    q("q48_simhash",
+      s"${simhashSql("simhash")}\nORDER BY doc_id NULLS FIRST") { (s, dir) =>
       TextOps.simhash(T.documents(s, dir), "doc_id", "text").orderBy("doc_id")
     },
 
@@ -809,27 +818,16 @@ object LlmQueries {
     // all pairs with per-character hamming, so a missed candidate
     // (pigeonhole bug), a wrong block split, or a verify off-by-one all
     // hash-mismatch.
-    q("q154_simhash_neardup", {
-      val sums = (0 until 64).map { b =>
-        val k = b / 4 + 1
-        val div = 1 << (3 - (b % 4))
-        s"SUM(2 * ((CAST(strpos('0123456789abcdef', substr(md5(t), $k, 1)) - 1 AS INT) // $div) % 2) - 1) AS s$b"
-      }
-      val bits = (0 until 64).map(b => s"(CASE WHEN s$b >= 0 THEN '1' ELSE '0' END)")
+    q("q154_simhash_neardup",
       s"""WITH sh AS (
-         |  SELECT doc_id, ${bits.mkString(" || ")} AS s FROM (
-         |    SELECT doc_id, ${sums.mkString(", ")}
-         |    FROM (SELECT doc_id, unnest(list_distinct($sqlToks)) AS t
-         |          FROM documents)
-         |    GROUP BY doc_id)),
+         |${simhashSql("s")}),
          |p AS (SELECT a.doc_id AS ida, b.doc_id AS idb,
          |        CAST(len([i for i in range(1, 65)
          |                  if substr(a.s, i, 1) != substr(b.s, i, 1)])
          |          AS BIGINT) AS hd
          |      FROM sh a, sh b WHERE a.doc_id < b.doc_id)
          |SELECT ida, idb, hd FROM p WHERE hd <= 3
-         |ORDER BY ida NULLS FIRST, idb NULLS FIRST""".stripMargin
-    }) { (s, dir) =>
+         |ORDER BY ida NULLS FIRST, idb NULLS FIRST""".stripMargin) { (s, dir) =>
       TextOps.simhashNearDupPairs(T.documents(s, dir), "doc_id", "text",
           maxHamming = 3)
         .orderBy("ida", "idb")
@@ -846,13 +844,7 @@ object LlmQueries {
     // fp families, per-rep simhash, brute-force hamming, recursive
     // closure, replica attach — so a wrong family min, a missed pair,
     // or a dropped singleton all hash-mismatch.
-    q("q155_simhash_clusters", {
-      val sums = (0 until 64).map { b =>
-        val k = b / 4 + 1
-        val div = 1 << (3 - (b % 4))
-        s"SUM(2 * ((CAST(strpos('0123456789abcdef', substr(md5(t), $k, 1)) - 1 AS INT) // $div) % 2) - 1) AS s$b"
-      }
-      val bits = (0 until 64).map(b => s"(CASE WHEN s$b >= 0 THEN '1' ELSE '0' END)")
+    q("q155_simhash_clusters",
       s"""WITH RECURSIVE fp AS (
          |  SELECT doc_id,
          |    md5(array_to_string(list_sort(list_distinct($sqlToks)), ' ')) AS f
@@ -860,12 +852,8 @@ object LlmQueries {
          |rep AS (SELECT f, MIN(doc_id) AS rep FROM fp GROUP BY f),
          |docrep AS (SELECT fp.doc_id, rep.rep FROM fp JOIN rep USING (f)),
          |sh AS (
-         |  SELECT doc_id, ${bits.mkString(" || ")} AS s FROM (
-         |    SELECT doc_id, ${sums.mkString(", ")}
-         |    FROM (SELECT doc_id, unnest(list_distinct($sqlToks)) AS t
-         |          FROM documents JOIN (SELECT rep FROM rep) r
-         |            ON doc_id = r.rep)
-         |    GROUP BY doc_id)),
+         |${simhashSql("s",
+              "documents JOIN (SELECT rep FROM rep) r ON doc_id = r.rep")}),
          |pr AS (SELECT a.doc_id AS ida, b.doc_id AS idb
          |       FROM sh a, sh b WHERE a.doc_id < b.doc_id
          |         AND len([i for i in range(1, 65)
@@ -881,8 +869,7 @@ object LlmQueries {
          |       FROM reach GROUP BY a)
          |SELECT d.doc_id, coalesce(cc.cluster, d.rep) AS cluster
          |FROM docrep d LEFT JOIN cc USING (rep)
-         |ORDER BY doc_id NULLS FIRST""".stripMargin
-    }) { (s, dir) =>
+         |ORDER BY doc_id NULLS FIRST""".stripMargin) { (s, dir) =>
       TextOps.simhashNearDupClusters(T.documents(s, dir), "doc_id", "text",
           maxHamming = 3)
         .withColumnRenamed("id", "doc_id")
@@ -2257,28 +2244,17 @@ object LlmQueries {
          |GROUP BY 1, 2
          |HAVING count(*) >= 2
          |ORDER BY a NULLS FIRST, b NULLS FIRST""".stripMargin) { (s, dir) =>
-      import org.apache.hadoop.fs.Path
       val base = Scratch.fresh("simstream", dir)
       val (src, store, ck) = (s"$base/src", s"$base/store", s"$base/ck")
-      val fs = new Path(base).getFileSystem(s.sparkContext.hadoopConfiguration)
       val docs = T.documents(s, dir)
       // stage each slice as one file: the file source delivers one file
       // per AvailableNow trigger = one deterministic micro-batch
-      def stage(slice: org.apache.spark.sql.DataFrame, name: String): Unit = {
-        val tmp = s"$base/stage-$name"
-        slice.coalesce(1).write.mode("overwrite").parquet(tmp)
-        val part = fs.listStatus(new Path(tmp)).map(_.getPath)
-          .find(_.getName.endsWith(".parquet")).get
-        fs.mkdirs(new Path(src))
-        fs.rename(part, new Path(src, s"$name.parquet"))
-        fs.delete(new Path(tmp), true)
-      }
-      stage(docs.filter(pmod(col("doc_id"), lit(3)) === 0), "b0")
-      stage(docs.filter(pmod(col("doc_id"), lit(3)) === 1), "b1")
+      stageFeed(docs.filter(pmod(col("doc_id"), lit(3)) === 0), src, "b0")
+      stageFeed(docs.filter(pmod(col("doc_id"), lit(3)) === 1), src, "b1")
       SimGraphStore.init(s, store, n = 3, cap = 50L, minCommon = 2L)
       graft.streaming.StreamingSimGraph.run(s, src, store, ck)
       SimGraphStore.compact(s, store) // the between-batches maintenance slot
-      stage(docs.filter(pmod(col("doc_id"), lit(3)) === 2), "b2")
+      stageFeed(docs.filter(pmod(col("doc_id"), lit(3)) === 2), src, "b2")
       graft.streaming.StreamingSimGraph.run(s, src, store, ck)
       SimGraphStore.edges(s, store).orderBy("a", "b")
     },
@@ -2342,11 +2318,8 @@ object LlmQueries {
     // night attributed to the wrong commit id, or a lost/duplicated
     // admitted row all hash-mismatch here while q152 stays green.
     qm("q157_continuous_night_log", continuousNightOracle) { (s, dir) =>
-      import org.apache.hadoop.fs.Path
       val root = Scratch.fresh("contnight", dir)
       val stores = NightlyCuration.Stores(root)
-      val fs = new Path(root)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
       val docs = T.documents(s, dir)
       val emb = T.embeddings(s, dir)
       NightlyBootCache.copyTo(s, dir, root)
@@ -2354,15 +2327,9 @@ object LlmQueries {
       // drained in order by a real AvailableNow stream
       val src = s"$root/feed"
       (0 until 3).foreach { b =>
-        val tmp = s"$root/feed-stage-$b"
-        docs.filter(pmod(col("doc_id"), lit(9)) === 3 * b)
-          .select(col("doc_id").cast("long").as("doc_id"), col("text"))
-          .coalesce(1).write.mode("overwrite").parquet(tmp)
-        val part = fs.listStatus(new Path(tmp)).map(_.getPath)
-          .find(_.getName.endsWith(".parquet")).get
-        fs.mkdirs(new Path(src))
-        fs.rename(part, new Path(src, s"b$b.parquet"))
-        fs.delete(new Path(tmp), true)
+        stageFeed(docs.filter(pmod(col("doc_id"), lit(9)) === 3 * b)
+          .select(col("doc_id").cast("long").as("doc_id"), col("text")),
+          src, s"b$b")
       }
       graft.streaming.StreamingNightlyCuration.runContinuous(s, src,
         stores, emb, s"$root/ck")

@@ -2,7 +2,6 @@ package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
   SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 /** Per-JOB wall-time attribution inside one catalog entry — the
   * measure-first tool for the composite lifecycle entries (q144/q147/
@@ -12,32 +11,24 @@ import org.apache.spark.sql.SparkSession
   * exactly the bench's timed region), then prints jobs sorted by time
   * with a per-call-site rollup.
   *
-  * Run: runMain graft.tools.EntryProfile <sfDir> <entry>[,entry...] [passes]
+  * Run: runMain graft.tools.EntryProfile <sfDir> <entry>[,entry...]
+  *        [passes] [planDir]
+  *
+  * Entries are named as `Catalog.select` reads tokens. With a plan dir,
+  * the first pass also writes each entry's `explain("formatted")` to
+  * `<planDir>/<entry>.txt`, untimed — the optimization rounds' evidence
+  * trail (plans/rNN/). Building an entry's DataFrame runs whatever
+  * lifecycle work the entry does before it returns its final frame (store
+  * bootstraps, streamed nights), so that file is the SERVE plan.
   */
 object EntryProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
-    val names = args(1).split(",").map(_.trim).filter(_.nonEmpty).toSeq
+    val entries = graft.Catalog.select(args(1).split(","))
     val passes = args.lift(2).map(_.toInt).getOrElse(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        sys.env.getOrElse("SPARK_GRAFT_INIT_PARTS", "256"))
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // conf A/B seam: SPARK_GRAFT_CONF="key=value;key=value" overlays any
-    // session conf, so a config experiment (guide §1.2 step 3) runs the
-    // same binary twice instead of editing session builders
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").foreach { kv =>
-      val Array(k, v) = kv.split("=", 2)
-      builder.config(k.trim, v.trim)
-    })
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val planDir = args.lift(3)
+    planDir.foreach(d => new java.io.File(d).mkdirs())
+    val spark = graft.GraftSession.local(graft.GraftSession.cpus)
 
     final case class Rec(id: Int, site: String, var startNs: Long,
       var durMs: Long)
@@ -67,15 +58,12 @@ object EntryProfile {
       }
     }
     spark.sparkContext.addSparkListener(listener)
-    val byName = graft.SparkEntry.catalog.map(q => q.name -> q).toMap
-    names.foreach { tok =>
-      val q = byName.getOrElse(tok,
-        graft.SparkEntry.catalog.find(_.name.startsWith(tok)).getOrElse(
-          sys.error(s"no catalog entry matches '$tok'")))
+    entries.foreach { q =>
       (1 to passes).foreach { p =>
         jobs.clear(); order.clear()
         val t0 = System.nanoTime()
-        q.fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+        val df = q.fn(spark, sfDir)
+        df.write.format("noop").mode("overwrite").save()
         val total = (System.nanoTime() - t0) / 1e9
         // give in-flight listener events a beat to land
         Thread.sleep(300)
@@ -91,8 +79,13 @@ object EntryProfile {
         }.toSeq.sortBy(-_._1).take(30).foreach { case (ms, n, s) =>
           println(f"  ${ms / 1e3}%7.2f s  n=$n%-4d $s")
         }
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
+        planDir.filter(_ => p == 1).foreach { d =>
+          java.nio.file.Files.writeString(
+            java.nio.file.Paths.get(s"$d/${q.name}.txt"),
+            df.queryExecution.explainString(
+              org.apache.spark.sql.execution.FormattedMode))
+        }
+        graft.GraftSession.release(spark)
       }
     }
     spark.stop()

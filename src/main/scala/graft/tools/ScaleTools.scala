@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-rehearsal tooling (VERDICT r6 #4): the provisioned testdata stops
@@ -21,17 +21,7 @@ object MakeScaledData {
     val Array(srcDir, outDir, factorS) = args
     val factor = factorS.toInt
     require(factor >= 1 && factor <= 64, "factor in [1, 64]")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "256")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(graft.GraftSession.cpus)
     def read(t: String) = spark.read.parquet(s"$srcDir/$t.parquet")
     def write(df: DataFrame, t: String): Unit =
       df.write.mode("overwrite").parquet(s"$outDir/$t.parquet")
@@ -133,27 +123,13 @@ object ScaleRehearsal {
     val Array(dirA, dirB, namesCsv) = args
     val bigPasses = sys.env.getOrElse("SPARK_GRAFT_REHEARSE_BIG_PASSES", "1").toInt
     require(bigPasses >= 1 && bigPasses <= 5, "big passes in [1, 5]")
-    val wanted = namesCsv.split(",").map(_.trim).filter(_.nonEmpty)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "256")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val entries = graft.SparkEntry.catalog.filter(q => wanted.contains(q.name))
-    val missing = wanted.toSet -- entries.map(_.name).toSet
-    require(missing.isEmpty, s"unknown entries: $missing")
+    val entries = graft.Catalog.select(namesCsv.split(","))
+    val spark = graft.GraftSession.local(graft.GraftSession.cpus)
     def runOnce(q: graft.Q, dir: String): Double = {
       val t0 = System.nanoTime()
       q.fn(spark, dir).write.format("noop").mode("overwrite").save()
       val dt = (System.nanoTime() - t0) / 1e9
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      graft.GraftSession.release(spark)
       dt
     }
     val bigCols = (1 to bigPasses).map(i => f"${s"big${i}_s"}%8s").mkString(" ")

@@ -12,19 +12,10 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkTestBase {
-  // One shared session across all suites (sbt forks a single test JVM).
+  // One shared session across all suites (sbt forks a single test JVM),
+  // planned the way the harnesses plan; 4 cores whatever the box has.
   lazy val session: SparkSession = {
     java.util.TimeZone.setDefault(java.util.TimeZone.getTimeZone("UTC"))
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
+    GraftSession.local(4)
   }
 }
