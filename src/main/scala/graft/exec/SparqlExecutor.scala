@@ -423,18 +423,17 @@ final class SparqlExecutor(
   }
 
   private def valuesSol(vars: Seq[String], rows: Seq[Seq[Option[Term]]]): Sol = {
+    // a column takes the kind of its first bound term
     val kinds: Seq[OKind] = vars.indices.map { i =>
-      rows.flatMap(r => r.lift(i).flatten).collectFirst {
-        case Lit(_, dt, _) => OKind.ofDatatype(dt)
-        case _: Iri | _: Blank => OKind.KIri
-      }.getOrElse(OKind.KStr)
+      rows.flatMap(r => r.lift(i).flatten).headOption.map(OKind.of)
+        .getOrElse(OKind.KStr)
     }
     val schema = StructType(vars.zip(kinds).map { case (v, k) =>
       StructField(v, OKind.sparkType(k))
     })
     val data = rows.map { r =>
       Row(vars.indices.map { i =>
-        r.lift(i).flatten.map(t => termToScala(t, kinds(i))).orNull
+        r.lift(i).flatten.map(t => OKind.scalaValue(t, kinds(i))).orNull
       }: _*)
     }
     Sol(spark.createDataFrame(spark.sparkContext.parallelize(data, 1), schema), vars)
@@ -695,7 +694,7 @@ final class SparqlExecutor(
           case V(_) =>
         }
         o match {
-          case T(t) => df = df.filter(col("o") === lit(termToScala(t, slice.kind)))
+          case T(t) => df = df.filter(col("o") === lit(OKind.scalaValue(t, slice.kind)))
           case V(v) => s match {
             case V(sv) if sv == v => df = df.filter(col("s") === col("o"))
             case _ =>
@@ -779,7 +778,7 @@ final class SparqlExecutor(
                 case V(ov) =>
                   vars += ov; cols += col(m.objCol).as(ov)
                 case T(t) =>
-                  df = df.filter(col(m.objCol) === lit(termToScala(t, slice.kind)))
+                  df = df.filter(col(m.objCol) === lit(OKind.scalaValue(t, slice.kind)))
               }
             }
             Sol(df.select(cols.toSeq: _*), vars.toSeq)
@@ -1760,13 +1759,5 @@ object SparqlExecutor {
     case EAgg(a) => a.expr.map(exprVars).getOrElse(Set.empty)
     case EExists(_, _) => Set.empty // handled via marker joins on shared vars
     case ETerm(_) => Set.empty
-  }
-
-  def termToScala(t: Term, kind: OKind): Any = (kind, t) match {
-    case (OKind.KLong, Lit(lex, _, _)) => lex.toLong
-    case (OKind.KDbl, Lit(lex, _, _)) => lex.toDouble
-    case (OKind.KBool, Lit(lex, _, _)) => lex.toBoolean
-    case (OKind.KTs, Lit(lex, _, _)) => Xsd.parseTimestamp(lex)
-    case (_, t0) => t0.canonical
   }
 }

@@ -1,6 +1,7 @@
 package graft.graph
 
 import graft.rdf._
+import graft.sources.{MetaSidecar, ParquetCompaction}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -21,6 +22,35 @@ object OKind {
     case Xsd.boolean => KBool
     case Xsd.dateTime | Xsd.date => KTs
     case _ => KStr
+  }
+
+  /** The kind of one object, as the lexical frames spell it: a resource
+    * (null `datatype`, no language tag) is KIri, a language-tagged literal
+    * KStr, a typed literal its datatype's kind. */
+  def of(datatype: String, langTagged: Boolean): OKind =
+    if (langTagged) KStr else if (datatype == null) KIri else ofDatatype(datatype)
+
+  def of(t: Term): OKind = t match {
+    case Lit(_, dt, lang) => of(dt, lang.isDefined)
+    case _ => of(null, langTagged = false)
+  }
+
+  /** The kind of a predicate slice: its objects' one kind, or KStr when
+    * they have more than one (the reference stores plain Utf8). Every
+    * graph constructor types its slices through [[of]] and this. */
+  def ofSlice(kinds: Iterable[OKind]): OKind = kinds.toSet.toSeq match {
+    case Seq(k) => k
+    case _ => KStr
+  }
+
+  /** A term as the Scala value a `kind` column holds: typed literals
+    * parse their lexical, everything else is its canonical string. */
+  def scalaValue(t: Term, kind: OKind): Any = (kind, t) match {
+    case (KLong, Lit(lex, _, _)) => lex.toLong
+    case (KDbl, Lit(lex, _, _)) => lex.toDouble
+    case (KBool, Lit(lex, _, _)) => lex.toBoolean
+    case (KTs, Lit(lex, _, _)) => Xsd.parseTimestamp(lex)
+    case (_, t0) => t0.canonical
   }
   def sparkType(k: OKind): DataType = k match {
     case KIri | KStr => StringType
@@ -597,6 +627,35 @@ final class TriplesGraph(
       touched = touched ++ changed)
   }
 
+  /** The persisted wide-row form of one slice (all branches), shared by
+    * [[save]] and [[saveDelta]]: the objects land in the kind's typed
+    * column of [[TriplesGraph.storedKinds]], every other one is null. */
+  private def storeRows(p: String, sl: PredicateSlice, nBuckets: Int): Seq[DataFrame] = {
+    val stored = TriplesGraph.storedKind(sl.kind, sl.hasLang)
+    val branches: Seq[(String, DataFrame)] =
+      if (sl.byClass.nonEmpty) sl.byClass.toSeq
+      else Seq((sl.subjectClasses.toSeq match {
+        case Seq(one) => one
+        case _ => "__all"
+      }) -> sl.df)
+    branches.map { case (cls, df) =>
+      val typed = TriplesGraph.storeColumns.map { case (c, t) =>
+        (if (c == stored.column) col("o") else lit(null)).cast(t).as(c)
+      }
+      val lang = if (sl.hasLang) col("o_lang") else lit(null)
+      // named-graph tag rides along as a data column (null = default
+      // graph) so quad graphs round-trip; partitioning stays on
+      // (p, kind, cls, sb) — named graphs can be many and skewed, a poor
+      // partition key
+      val gtag = if (sl.hasGraph) col("g") else lit(null)
+      df.select(Seq(col("s").cast(StringType).as("s")) ++ typed ++ Seq(
+        lang.cast(StringType).as("o_lang"), gtag.cast(StringType).as("g"),
+        lit(p).as("p"), lit(stored.tag).as("kind"), lit(cls).as("cls"),
+        pmod(xxhash64(col("s").cast(StringType)), lit(nBuckets))
+          .cast(IntegerType).as("sb")): _*)
+    }
+  }
+
   /** Persist the graph as ONE parquet dataset partitioned by
     * (predicate, object-kind, subject-class, subject-bucket) — the 100 TB
     * storage layout: a constant-predicate scan is partition pruning, a
@@ -605,60 +664,8 @@ final class TriplesGraph(
     * their hash buckets, and the typed object columns keep every slice's
     * native type. Class branches come from `byClass` (single-class slices
     * write their one class; slices with no declaration write `__all`).
-    * `nBuckets` is part of the layout contract — reload with the same
-    * value via [[TriplesGraph.load]], which cross-checks it against the
-    * partition inventory. */
-  /** The persisted wide-row form of one slice (all branches), shared by
-    * [[save]] and [[saveDelta]]. */
-  private def storeRows(p: String, sl: PredicateSlice, nBuckets: Int): Seq[DataFrame] = {
-    def nullc(t: DataType) = lit(null).cast(t)
-    val kindTag = sl.kind match {
-      case OKind.KIri => "iri"
-      case OKind.KStr => if (sl.hasLang) "strlang" else "str"
-      case OKind.KLong => "long"
-      case OKind.KDbl => "dbl"
-      case OKind.KBool => "bool"
-      case OKind.KTs => "ts"
-    }
-    val branches: Seq[(String, DataFrame)] =
-      if (sl.byClass.nonEmpty) sl.byClass.toSeq
-      else Seq((sl.subjectClasses.toSeq match {
-        case Seq(one) => one
-        case _ => "__all"
-      }) -> sl.df)
-    branches.map { case (cls, df) =>
-      val o = col("o")
-      val typed = sl.kind match {
-        case OKind.KIri | OKind.KStr => Seq(o.cast(StringType).as("o_str"),
-          nullc(LongType).as("o_long"), nullc(DoubleType).as("o_dbl"),
-          nullc(BooleanType).as("o_bool"), nullc(TimestampType).as("o_ts"))
-        case OKind.KLong => Seq(nullc(StringType).as("o_str"), o.cast(LongType).as("o_long"),
-          nullc(DoubleType).as("o_dbl"), nullc(BooleanType).as("o_bool"),
-          nullc(TimestampType).as("o_ts"))
-        case OKind.KDbl => Seq(nullc(StringType).as("o_str"), nullc(LongType).as("o_long"),
-          o.cast(DoubleType).as("o_dbl"), nullc(BooleanType).as("o_bool"),
-          nullc(TimestampType).as("o_ts"))
-        case OKind.KBool => Seq(nullc(StringType).as("o_str"), nullc(LongType).as("o_long"),
-          nullc(DoubleType).as("o_dbl"), o.cast(BooleanType).as("o_bool"),
-          nullc(TimestampType).as("o_ts"))
-        case OKind.KTs => Seq(nullc(StringType).as("o_str"), nullc(LongType).as("o_long"),
-          nullc(DoubleType).as("o_dbl"), nullc(BooleanType).as("o_bool"),
-          o.cast(TimestampType).as("o_ts"))
-      }
-      val lang = if (sl.hasLang) col("o_lang").cast(StringType) else nullc(StringType)
-      // named-graph tag rides along as a data column (null = default
-      // graph) so quad graphs round-trip; partitioning stays on
-      // (p, kind, cls, sb) — named graphs can be many and skewed, a poor
-      // partition key
-      val gtag = if (sl.hasGraph) col("g").cast(StringType) else nullc(StringType)
-      df.select(Seq(col("s").cast(StringType).as("s")) ++ typed ++ Seq(
-        lang.as("o_lang"), gtag.as("g"), lit(p).as("p"), lit(kindTag).as("kind"),
-        lit(cls).as("cls"),
-        pmod(xxhash64(col("s").cast(StringType)), lit(nBuckets))
-          .cast(IntegerType).as("sb")): _*)
-    }
-  }
-
+    * `nBuckets` is part of the layout contract: it is recorded in the
+    * store's sidecar, the one place [[TriplesGraph.load]] reads it from. */
   def save(path: String, nBuckets: Int = TriplesGraph.defaultSubjectBuckets): Unit = {
     val parts = slices.toSeq.flatMap { case (p, sl) => storeRows(p, sl, nBuckets) }
     parts.reduce(_.unionByName(_))
@@ -672,7 +679,7 @@ final class TriplesGraph(
     // drop most of a node's triples). Underscore prefix = invisible to
     // Spark's parquet listing; written via the Hadoop FS API so the
     // sidecar lands on whatever filesystem holds the store (HDFS/S3A/local).
-    graft.sources.MetaSidecar.write(spark, path, TriplesGraph.metaFileName,
+    MetaSidecar.write(spark, path, TriplesGraph.metaFileName,
       Seq("nBuckets" -> nBuckets.toString))
   }
 
@@ -706,9 +713,7 @@ final class TriplesGraph(
     TriplesGraph.recoverStore(spark, path)
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val nBuckets = TriplesGraph.readMeta(spark, path).getOrElse(
-      throw new IllegalArgumentException(
-        s"no store sidecar at $path — saveDelta needs a store written by save()"))
+    val nBuckets = TriplesGraph.storeBuckets(spark, path)
     // 1. stage: write every touched slice's new contents BEFORE touching
     // the live directories. The write also materializes the slices' lazy
     // localCheckpoints, so their plans stop depending on the files the
@@ -720,7 +725,7 @@ final class TriplesGraph(
     parts.reduceOption(_.unionByName(_)).foreach(
       _.repartition(col("p"), col("kind"), col("cls"), col("sb"))
         .write.partitionBy("p", "kind", "cls", "sb").parquet(staging.toString))
-    TriplesGraph.crashHook("after-staging")
+    ParquetCompaction.crashHook("after-staging")
     // 2. commit marker: predicates with staged content are swaps, touched
     // predicates with no staged rows (fully deleted) are drops
     val staged: Set[String] =
@@ -739,7 +744,7 @@ final class TriplesGraph(
     try out.write(
       s"""{"swap": ${jarr(swaps)}, "drop": ${jarr(drops)}}""".getBytes("UTF-8"))
     finally out.close()
-    TriplesGraph.crashHook("after-marker")
+    ParquetCompaction.crashHook("after-marker")
     // 3+4. swap to completion, then clean up marker + staging
     TriplesGraph.completeDeltaSwap(spark, path, swaps, drops)
   }
@@ -759,9 +764,15 @@ object TriplesGraph {
 
   /** The store sidecar's recorded bucket count, if the sidecar exists. */
   private[graft] def readMeta(spark: SparkSession, path: String): Option[Int] =
-    graft.sources.MetaSidecar.readText(spark, path, metaFileName)
-      .flatMap(graft.sources.MetaSidecar.longField(_, "nBuckets"))
+    MetaSidecar.readText(spark, path, metaFileName)
+      .flatMap(MetaSidecar.longField(_, "nBuckets"))
       .map(_.toInt)
+
+  /** [[readMeta]] for a store a method needs: one without a sidecar was
+    * not written by [[TriplesGraph#save]], so fail, naming it. */
+  private def storeBuckets(spark: SparkSession, path: String): Int =
+    readMeta(spark, path).getOrElse(throw new IllegalArgumentException(
+      s"no store sidecar at $path — not a store written by save()"))
 
   /** Decode Spark's partition-directory escaping (%xx sequences) — the
     * inverse of the encoding `partitionBy` applies to special characters
@@ -786,47 +797,25 @@ object TriplesGraph {
     * partition key, so every (p, kind, cls, sb) directory lands in exactly
     * one task → one file. Layout, sidecar, and contents are unchanged —
     * the classic small-files maintenance job of any partitioned lake
-    * table. Crash-safe rewrite-then-swap: the sibling temp dir gets a
-    * READY marker only once fully written (sidecar included); the old
-    * root is deleted only after that marker exists, and
-    * [[recoverStore]] promotes a ready temp whose root vanished — so a
-    * kill at any point leaves the old store or the promoted new one. */
+    * table. The swap is [[ParquetCompaction.rewrite]]'s crash-safe
+    * rewrite-then-swap, with the sidecar written into the temp beside the
+    * data, so a kill at any point leaves the old store or the new one. */
   def compact(spark: SparkSession, path: String): Unit = {
-    import org.apache.hadoop.fs.Path
     recoverStore(spark, path)
-    val root = new Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val nBuckets = readMeta(spark, path).getOrElse(
-      throw new IllegalArgumentException(
-        s"no store sidecar at $path — compact only handles save()-written stores"))
-    val tmp = new Path(path + compactingSuffix)
-    if (fs.exists(tmp)) fs.delete(tmp, true)
-    spark.read.parquet(path)
-      .repartition(col("p"), col("kind"), col("cls"), col("sb"))
-      .write.partitionBy("p", "kind", "cls", "sb").parquet(tmp.toString)
-    graft.sources.MetaSidecar.write(spark, tmp.toString, metaFileName,
-      Seq("nBuckets" -> nBuckets.toString))
-    val ready = fs.create(new Path(tmp, compactReadyFileName), true)
-    ready.close()
-    crashHook("compact-ready")
-    fs.delete(root, true)
-    crashHook("compact-after-delete")
-    if (!fs.rename(tmp, root))
-      throw new IllegalStateException(s"rename $tmp -> $root failed")
-    spark.catalog.refreshByPath(path)
+    val nBuckets = storeBuckets(spark, path)
+    ParquetCompaction.rewrite(spark, path) { tmp =>
+      spark.read.parquet(path)
+        .repartition(col("p"), col("kind"), col("cls"), col("sb"))
+        .write.partitionBy("p", "kind", "cls", "sb").parquet(tmp)
+      MetaSidecar.write(spark, tmp, metaFileName,
+        Seq("nBuckets" -> nBuckets.toString))
+    }
   }
-
-  /** Test failpoint: throws at named protocol points when a spec installs
-    * a hook; a no-op in production. The crash-consistency specs use it to
-    * kill saveDelta/compact mid-protocol and assert [[recoverStore]]
-    * lands on a whole state. */
-  private[graft] var crashHook: String => Unit = _ => ()
 
   /** Bring a store back to a whole state after a crashed [[compact]] or
     * [[TriplesGraph#saveDelta]]. Idempotent; called by [[load]] and by the
-    * mutators before they start. Three cases:
-    *  - root missing but a READY `…__compacting` sibling exists → the
-    *    crash hit between compact's delete and rename; finish the rename.
+    * mutators before they start. [[ParquetCompaction.recover]] finishes or
+    * discards a crashed compact; then the delta marker decides:
     *  - a delta commit marker exists → the delta was fully staged and
     *    committed; re-execute the swap to completion (directories already
     *    swapped are detected by their staging source being gone).
@@ -835,21 +824,9 @@ object TriplesGraph {
     */
   private[graft] def recoverStore(spark: SparkSession, path: String): Unit = {
     import org.apache.hadoop.fs.Path
+    ParquetCompaction.recover(spark, path)
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new Path(path + compactingSuffix)
-    if (!fs.exists(root)) {
-      if (fs.exists(tmp) && fs.exists(new Path(tmp, compactReadyFileName))) {
-        if (!fs.rename(tmp, root))
-          throw new IllegalStateException(s"recovery rename $tmp -> $root failed")
-        fs.delete(new Path(root, compactReadyFileName), false)
-        spark.catalog.refreshByPath(path)
-      }
-      return
-    }
-    // root exists: a ready-but-unswapped (or stale partial) compact temp is
-    // redundant — contents are identical to root or garbage — drop it
-    if (fs.exists(tmp)) fs.delete(tmp, true)
     val marker = new Path(root, deltaCommitFileName)
     val staging = new Path(root, stagingDirName)
     if (fs.exists(marker)) {
@@ -898,7 +875,7 @@ object TriplesGraph {
         if (!fs.rename(src, new Path(root, src.getName)))
           throw new IllegalStateException(s"delta rename of $src failed")
         n += 1
-        if (n == 1) crashHook("mid-swap")
+        if (n == 1) ParquetCompaction.crashHook("mid-swap")
       }
     }
     drops.toSeq.sorted.foreach(p => rootDirs.get(p).foreach(d => fs.delete(d, true)))
@@ -908,13 +885,6 @@ object TriplesGraph {
     // delta would otherwise chase swapped-out part files
     spark.catalog.refreshByPath(path)
   }
-
-  /** Sibling-directory suffix for [[compact]]'s rewrite-then-swap. */
-  private[graft] val compactingSuffix = "__compacting"
-
-  /** Marker inside a compact temp dir: contents are complete and
-    * promotable. */
-  private[graft] val compactReadyFileName = "_GRAFT_COMPACT_READY"
 
   /** Commit marker for [[TriplesGraph#saveDelta]]'s staged swap (JSON:
     * swap/drop predicate lists). Its existence means the delta is
@@ -938,37 +908,9 @@ object TriplesGraph {
 
   /** Build from an in-memory triple list (fixtures, mapper output). */
   def fromTerms(spark: SparkSession, triples: Seq[(Term, String, Term)],
-      ts: Option[TsProvider] = None): TriplesGraph = {
-    val byPred = triples.groupBy(_._2)
-    val slices = byPred.map { case (p, ts0) =>
-      val kinds = ts0.map {
-        case (_, _, Iri(_)) | (_, _, Blank(_)) => OKind.KIri
-        case (_, _, Lit(_, dt, _)) => OKind.ofDatatype(dt)
-      }.distinct
-      // Mixed object kinds degrade to string (rare; reference stores plain Utf8)
-      val kind = if (kinds.size == 1) kinds.head else OKind.KStr
-      val hasLang = ts0.exists { case (_, _, Lit(_, _, l)) => l.isDefined; case _ => false }
-      val sparkT = OKind.sparkType(kind)
-      val rows = ts0.map { case (s, _, o) =>
-        val ov: Any = (kind, o) match {
-          case (OKind.KLong, Lit(lex, _, _)) => lex.toLong
-          case (OKind.KDbl, Lit(lex, _, _)) => lex.toDouble
-          case (OKind.KBool, Lit(lex, _, _)) => lex.toBoolean
-          case (OKind.KTs, Lit(lex, _, _)) => Xsd.parseTimestamp(lex)
-          case (_, t) => t.canonical
-        }
-        val lang: Any = o match { case Lit(_, _, l) => l.orNull; case _ => null }
-        if (hasLang) Row(s.canonical, ov, lang) else Row(s.canonical, ov)
-      }
-      val schema = StructType(
-        Seq(StructField("s", StringType), StructField("o", sparkT)) ++
-          (if (hasLang) Seq(StructField("o_lang", StringType)) else Nil))
-      p -> PredicateSlice(
-        spark.createDataFrame(spark.sparkContext.parallelize(rows.toSeq, 1), schema),
-        kind, hasLang)
-    }
-    new TriplesGraph(spark, slices, ts)
-  }
+      ts: Option[TsProvider] = None): TriplesGraph =
+    fromObjects(spark, triples.map { case (s, p, o) => (s, p, o, None) },
+      withGraph = false, ts)
 
   /** Build from an in-memory QUAD list — (s, p, o, named graph), graph None
     * for the default graph. Slices carry the `g` column (hasGraph), giving
@@ -976,31 +918,76 @@ object TriplesGraph {
     * untagged triples, `GRAPH ?g/<iri>` sees the named ones. */
   def fromQuads(spark: SparkSession,
       quads: Seq[(Term, String, Term, Option[String])],
-      ts: Option[TsProvider] = None): TriplesGraph = {
-    val byPred = quads.groupBy(_._2)
-    val slices = byPred.map { case (p, qs) =>
-      val kinds = qs.map {
-        case (_, _, Iri(_), _) | (_, _, Blank(_), _) => OKind.KIri
-        case (_, _, Lit(_, dt, _), _) => OKind.ofDatatype(dt)
-      }.distinct
-      val kind = if (kinds.size == 1) kinds.head else OKind.KStr
-      val sparkT = OKind.sparkType(kind)
-      val rows = qs.map { case (s, _, o, g) =>
-        val ov: Any = (kind, o) match {
-          case (OKind.KLong, Lit(lex, _, _)) => lex.toLong
-          case (OKind.KDbl, Lit(lex, _, _)) => lex.toDouble
-          case (OKind.KBool, Lit(lex, _, _)) => lex.toBoolean
-          case (OKind.KTs, Lit(lex, _, _)) => Xsd.parseTimestamp(lex)
-          case (_, t) => t.canonical
-        }
-        Row(s.canonical, ov, g.orNull)
+      ts: Option[TsProvider] = None): TriplesGraph =
+    fromObjects(spark, quads, withGraph = true, ts)
+
+  /** [[fromTerms]] and [[fromQuads]]: slices typed on the driver by the
+    * same rule as [[fromLexical]] (and as query constants), so building
+    * one fires no job. */
+  private def fromObjects(spark: SparkSession,
+      quads: Seq[(Term, String, Term, Option[String])], withGraph: Boolean,
+      ts: Option[TsProvider]): TriplesGraph = {
+    val slices = quads.groupBy(_._2).map { case (p, qs) =>
+      val kind = OKind.ofSlice(qs.map(q => OKind.of(q._3)))
+      val langs = qs.map {
+        case (_, _, Lit(_, _, l), _) => l.orNull
+        case _ => null
       }
-      val schema = StructType(Seq(StructField("s", StringType),
-        StructField("o", sparkT), StructField("g", StringType)))
+      val hasLang = langs.exists(_ != null)
+      val rows = qs.zip(langs).map { case ((s, _, o, g), lang) =>
+        Row.fromSeq(Seq(s.canonical, OKind.scalaValue(o, kind)) ++
+          (if (hasLang) Seq(lang) else Nil) ++
+          (if (withGraph) Seq(g.orNull) else Nil))
+      }
+      val schema = StructType(
+        Seq(StructField("s", StringType), StructField("o", OKind.sparkType(kind))) ++
+          (if (hasLang) Seq(StructField("o_lang", StringType)) else Nil) ++
+          (if (withGraph) Seq(StructField("g", StringType)) else Nil))
       p -> PredicateSlice(
-        spark.createDataFrame(spark.sparkContext.parallelize(rows.toSeq, 1), schema),
-        kind, hasGraph = true)
+        spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema),
+        kind, hasLang, hasGraph = withGraph)
     }
+    new TriplesGraph(spark, slices, ts)
+  }
+
+  /** Lift a lexical triples frame into a typed graph — the one
+    * distributed constructor behind `NTriples.toGraph` and
+    * `Mapping.toGraph`. `frame` has columns `s, p, o_lex, o_dt, o_lang`
+    * and optionally `g`, spelled as `NTriples.read` parses them (a
+    * resource has null `o_dt` and `o_lang`; `g` null = default graph).
+    *
+    * One vocabulary-sized aggregate collects each predicate's distinct
+    * (datatype, lang-tagged) pairs and whether it has named-graph triples;
+    * [[OKind.of]]/[[OKind.ofSlice]] type the slice from the pairs, which
+    * also say whether it has lang tags. Each slice is then a filter plus
+    * `try_cast` over `frame` — the same cast contract as SPARQL UPDATE's
+    * insert path — so the slice frames stay lazy and `frame` should be
+    * cheap to re-read (a checkpoint, or a plan as cheap as one). */
+  def fromLexical(spark: SparkSession, frame: DataFrame,
+      ts: Option[TsProvider] = None): TriplesGraph = {
+    val withGraph = frame.columns.contains("g")
+    val langTagged = col("o_lang").isNotNull
+    val meta = frame.groupBy("p").agg(
+      collect_set(struct(when(!langTagged, col("o_dt")), langTagged)).as("terms"),
+      (if (withGraph) max(col("g").isNotNull) else lit(false)).as("hasGraph"))
+      .collect()
+    val slices = meta.map { m =>
+      val p = m.getString(0)
+      val terms = m.getSeq[Row](1)
+      val kind = OKind.ofSlice(
+        terms.map(t => OKind.of(t.getString(0), t.getBoolean(1))))
+      val hasLang = terms.exists(_.getBoolean(1))
+      val hasGraph = m.getBoolean(2)
+      val o = kind match {
+        case OKind.KIri | OKind.KStr => col("o_lex")
+        case k => col("o_lex").try_cast(OKind.sparkType(k))
+      }
+      val cols = Seq(col("s"), o.as("o")) ++
+        (if (hasLang) Seq(col("o_lang")) else Nil) ++
+        (if (hasGraph) Seq(col("g")) else Nil)
+      p -> PredicateSlice(frame.filter(col("p") === lit(p)).select(cols: _*),
+        kind, hasLang = hasLang, hasGraph = hasGraph)
+    }.toMap
     new TriplesGraph(spark, slices, ts)
   }
 
@@ -1020,71 +1007,81 @@ object TriplesGraph {
       ts: Option[TsProvider] = None): TriplesGraph =
     new TriplesGraph(spark, LazyMap(builders), ts)
 
+  /** One kind's persisted form: its `kind` partition tag and the typed
+    * column its objects are stored in. */
+  private[graph] final case class StoredKind(kind: OKind, hasLang: Boolean,
+      tag: String, column: String)
+
+  /** The store's persisted layout, declared once for [[TriplesGraph#save]]
+    * and [[load]]. `strlang` is a KStr slice with language tags; it comes
+    * before `str` so [[storedKind]] finds it first. */
+  private[graph] val storedKinds: Seq[StoredKind] = Seq(
+    StoredKind(OKind.KIri, false, "iri", "o_str"),
+    StoredKind(OKind.KStr, true, "strlang", "o_str"),
+    StoredKind(OKind.KStr, false, "str", "o_str"),
+    StoredKind(OKind.KLong, false, "long", "o_long"),
+    StoredKind(OKind.KDbl, false, "dbl", "o_dbl"),
+    StoredKind(OKind.KBool, false, "bool", "o_bool"),
+    StoredKind(OKind.KTs, false, "ts", "o_ts"))
+
+  /** The typed object columns of a stored row, in schema order. */
+  private[graph] val storeColumns: Seq[(String, DataType)] =
+    storedKinds.map(k => k.column -> OKind.sparkType(k.kind)).distinct
+
+  /** A slice's persisted form; only a KStr slice records its lang tags in
+    * the kind tag. */
+  private[graph] def storedKind(kind: OKind, hasLang: Boolean): StoredKind =
+    storedKinds.find(k => k.kind == kind && (hasLang || !k.hasLang)).get
+
   /** Reload a graph persisted by [[TriplesGraph#save]]. Slice frames are
     * partition-pruned filters over the one dataset (a constant-predicate
     * scan touches only its p=… directories); subject classes and byClass
     * branches are rebuilt from the cls partition values, so class-aware
-    * NPS pruning works identically on a reloaded graph. The partition
-    * inventory is one metadata listing at catalog-build time. */
+    * NPS pruning works identically on a reloaded graph. The bucket count
+    * comes from the store's sidecar, and a store without one fails. The
+    * partition inventory is one metadata listing at catalog-build time. */
   def load(spark: SparkSession, path: String,
-      ts: Option[TsProvider] = None,
-      nBuckets: Int = defaultSubjectBuckets): TriplesGraph = {
+      ts: Option[TsProvider] = None): TriplesGraph = {
     // finish any crashed saveDelta/compact first: readers must only ever
     // see a whole store (old or new), never a half-swapped hybrid
     recoverStore(spark, path)
     val base = spark.read.parquet(path)
-    // layout contract: the save-time sidecar is authoritative for the
-    // bucket count — trusting the caller let a store saved with 8 buckets
+    // layout contract: the save-time sidecar is the one source of the
+    // bucket count — trusting a caller let a store saved with 8 buckets
     // load under the default 16, making every sb.isin probe silently drop
-    // most of a node's triples. The nBuckets parameter is only a fallback
-    // for pre-sidecar stores.
-    val effBuckets = readMeta(spark, path).getOrElse(nBuckets)
+    // most of a node's triples
+    val nBuckets = storeBuckets(spark, path)
     val inventoryRows = base.select("p", "kind", "cls", "sb").distinct().collect()
-    // cross-check against the partition inventory either way: a bucket id
-    // at or past the contract means a corrupt/mixed store — fail loudly,
+    // cross-check against the partition inventory: a bucket id at or past
+    // the contract means a corrupt/mixed store — fail loudly,
     // subject-addressed pruning would otherwise silently miss rows
     val maxSb = inventoryRows.map(_.getInt(3)).max
-    require(maxSb < effBuckets,
+    require(maxSb < nBuckets,
       s"store at $path has subject bucket $maxSb but the layout contract " +
-        s"says $effBuckets buckets; the store is corrupt or was saved " +
-        "by a writer that did not record its bucket count")
+        s"says $nBuckets buckets; the store is corrupt or its sidecar " +
+        "was rewritten")
     val inventory = inventoryRows
       .map(r => (r.getString(0), r.getString(1), r.getString(2))).distinct
     val slices = inventory.groupBy(_._1).map { case (p, rows) =>
       val kindTag = rows.head._2
       val classes = rows.map(_._3).filterNot(_ == "__all").toSet
-      val (kind, hasLang) = kindTag match {
-        case "iri" => (OKind.KIri, false)
-        case "str" => (OKind.KStr, false)
-        case "strlang" => (OKind.KStr, true)
-        case "long" => (OKind.KLong, false)
-        case "dbl" => (OKind.KDbl, false)
-        case "bool" => (OKind.KBool, false)
-        case "ts" => (OKind.KTs, false)
-        case other => throw new IllegalStateException(s"unknown kind tag $other")
-      }
-      val oCol = kind match {
-        case OKind.KIri | OKind.KStr => col("o_str")
-        case OKind.KLong => col("o_long")
-        case OKind.KDbl => col("o_dbl")
-        case OKind.KBool => col("o_bool")
-        case OKind.KTs => col("o_ts")
-      }
+      val stored = storedKinds.find(_.tag == kindTag).getOrElse(
+        throw new IllegalStateException(s"unknown kind tag $kindTag"))
       def sel(df: DataFrame): DataFrame = {
         // g always present in the stored schema; keeping it (hasGraph=true
         // below) gives loaded graphs full dataset semantics — stores with
         // no named triples have all-null g, which the default-graph isNull
         // filter prunes for free via row-group stats
-        val cols = Seq(col("s"), oCol.as("o")) ++
-          (if (hasLang) Seq(col("o_lang")) else Nil) ++ Seq(col("g"))
+        val cols = Seq(col("s"), col(stored.column).as("o")) ++
+          (if (stored.hasLang) Seq(col("o_lang")) else Nil) ++ Seq(col("g"))
         df.select(cols: _*)
       }
       val whole = sel(base.filter(col("p") === p))
       val byClass = classes.map(c =>
         c -> sel(base.filter(col("p") === p && col("cls") === c))).toMap
-      p -> PredicateSlice(whole, kind, hasLang, Nil, classes, byClass,
-        hasGraph = true)
+      p -> PredicateSlice(whole, stored.kind, stored.hasLang, Nil, classes,
+        byClass, hasGraph = true)
     }
-    new TriplesGraph(spark, slices, ts, store = Some((base, effBuckets)))
+    new TriplesGraph(spark, slices, ts, store = Some((base, nBuckets)))
   }
 }

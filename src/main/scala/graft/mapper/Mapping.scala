@@ -1,6 +1,6 @@
 package graft.mapper
 
-import graft.graph.{OKind, PredicateSlice, TriplesGraph}
+import graft.graph.TriplesGraph
 import graft.rdf._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -23,8 +23,9 @@ import org.apache.spark.sql.types._
   * (TimestampType, rendered in [[serializationZone]] with an explicit
   * offset).
   *
-  * The expanded store doubles as a queryable [[TriplesGraph]], which is the
-  * engine's native fixture-ingest path (SURVEY §3.2).
+  * The expanded store doubles as a queryable [[TriplesGraph]] ([[toGraph]],
+  * typed by the graph layer's one slice rule), which is the engine's native
+  * fixture-ingest path (SURVEY §3.2).
   */
 final class Mapping(doc0: Stottr.Document, spark: SparkSession,
     val serializationZone: String = "UTC") {
@@ -440,37 +441,24 @@ final class Mapping(doc0: Stottr.Document, spark: SparkSession,
   }
 
   // ------------------------------------------------------------- exports
-  /** One formatted N-Triples line per triple, as a codegen'd Column —
-    * the distributed serialization kernel shared by [[ntriplesLines]] and
-    * [[writeNTriplesDistributed]] (shared spelling: [[graft.rdf.NtFormat]]). */
-  private def ntLineCol: Column =
-    graft.rdf.NtFormat.line(col("s"), col("p"), col("o_lex"), col("o_dt"),
-      col("o_lang"))
-
-  /** Distributed N-Triples view: one string line per triple, still lazy. */
-  def ntriplesLines: DataFrame = triplesDf.select(ntLineCol.as("value"))
+  /** Distributed N-Triples view: one string line per triple, still lazy —
+    * the one formatter behind [[writeNTriplesDistributed]] and
+    * [[toNTriples]] (shared spelling: [[graft.rdf.NtFormat]]). */
+  def ntriplesLines: DataFrame = triplesDf.select(NtFormat.line(col("s"),
+    col("p"), col("o_lex"), col("o_dt"), col("o_lang")).as("value"))
 
   /** Distributed N-Triples sink: every executor writes its partitions in
     * parallel (`text` sink) — the path a 100 TB graph takes out of the
-    * engine. The driver-side [[writeNTriples]] remains as the small-result
-    * convenience. */
+    * engine. The driver-side [[toNTriples]] collects the same lines for
+    * small results. */
   def writeNTriplesDistributed(path: String): Unit =
     ntriplesLines.write.mode("overwrite").text(path)
 
-  /** N-Triples serialization (reference: mapping/ntriples_write.rs:52).
-    * Driver-side convenience — collects; use [[writeNTriplesDistributed]]
-    * for anything big. */
+  /** N-Triples serialization (reference: mapping/ntriples_write.rs:52):
+    * the [[ntriplesLines]] formatter, collected. Driver-side convenience —
+    * use [[writeNTriplesDistributed]] for anything big. */
   def toNTriples: Seq[String] =
-    triplesDf.collect().toSeq.map { r =>
-      val s = r.getString(0); val p = r.getString(1)
-      val oLex = r.getString(2); val oDt = r.getString(3); val oLang = r.getString(4)
-      def res(x: String) = if (x.startsWith("_:")) x else s"<$x>"
-      val o =
-        if (oDt == null && oLang == null) res(oLex)
-        else if (oLang != null) "\"" + escape(oLex) + "\"@" + oLang
-        else "\"" + escape(oLex) + "\"^^<" + oDt + ">"
-      s"${res(s)} <$p> $o ."
-    }
+    ntriplesLines.collect().toSeq.map(_.getString(0))
 
   /** In-memory term export (reference: mapping/export_triples.rs:7-121). */
   def exportTriples: Seq[(Term, String, Term)] =
@@ -485,38 +473,9 @@ final class Mapping(doc0: Stottr.Document, spark: SparkSession,
     }
 
   /** Distributed handoff to the query engine: per-predicate typed slices
-    * (predicate list is metadata-small; the slice frames stay lazy). */
-  def toGraph: TriplesGraph = {
-    val preds = triplesDf.select("p", "o_dt").distinct().collect()
-      .groupBy(_.getString(0))
-      .map { case (p, rows) => p -> rows.map(r => Option(r.getString(1))).toSeq }
-    val slices = preds.map { case (p, dts) =>
-      val base = triplesDf.filter(col("p") === p)
-      val kind =
-        if (dts.forall(_.isEmpty)) OKind.KIri
-        else if (dts.flatten.distinct.sizeIs == 1 && dts.forall(_.isDefined))
-          OKind.ofDatatype(dts.flatten.head)
-        else OKind.KStr
-      val hasLang = true // o_lang column always present
-      val o = kind match {
-        case OKind.KIri | OKind.KStr => col("o_lex")
-        case k => col("o_lex").cast(OKind.sparkType(k))
-      }
-      p -> PredicateSlice(
-        base.select(col("s"), o.as("o"), col("o_lang")), kind, hasLang)
-    }
-    TriplesGraph.fromSlices(spark, slices)
-  }
-
-  private def escape(s: String): String =
-    s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c => c.toString
-    }
+    * over the expanded triples ([[graft.graph.TriplesGraph.fromLexical]] —
+    * one metadata aggregate; the slice frames stay lazy). */
+  def toGraph: TriplesGraph = TriplesGraph.fromLexical(spark, triplesDf)
 }
 
 object Mapping {

@@ -1,8 +1,7 @@
 package graft.sources
 
-import graft.graph.{OKind, PredicateSlice, TriplesGraph, TsProvider}
+import graft.graph.{TriplesGraph, TsProvider}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Distributed N-Triples / N-Quads SOURCE — the read half of the engine's
@@ -27,9 +26,9 @@ import org.apache.spark.sql.types._
   * o_dt = o_lang = null (blank nodes keep their `_:` spelling in s/o_lex,
   * matching Term.canonical), plain literals are tagged xsd:string per RDF
   * 1.1, the optional 4th N-Quads term lands in `g` (null = default
-  * graph). [[toGraph]] lifts the frame into a typed predicate-sliced
-  * TriplesGraph with the same kind rules as `TriplesGraph.fromQuads`, and
-  * the executor's LOAD update op feeds the same frame through applyDelta.
+  * graph) — the lexical frame `TriplesGraph.fromLexical` types. [[toGraph]]
+  * lifts it into a predicate-sliced TriplesGraph, and the executor's LOAD
+  * update op feeds the same frame through applyDelta.
   */
 object NTriples {
 
@@ -54,50 +53,13 @@ object NTriples {
     spark.createDataFrame(rdd, parsedSchema)
   }
 
-  /** Lift a parsed frame into a typed TriplesGraph. One vocabulary-sized
-    * metadata aggregate decides each predicate's object kind (the
-    * `fromQuads` rules: a single literal datatype kind types the slice,
-    * anything mixed falls back to string; resources make an IRI slice),
-    * then every slice is a filter+cast over ONE localCheckpointed parse —
-    * the corpus parses once, not once per predicate. Lexical→typed
-    * conversion uses `try_cast`, the same cast contract as SPARQL
-    * UPDATE's insert path (an uncastable lexical under a uniformly-typed
-    * predicate raises there; here the kind rule already guarantees every
-    * lexical in a typed slice carries a castable datatype). */
+  /** Lift a parsed frame into a typed TriplesGraph: one localCheckpoint
+    * of the parse, then [[graft.graph.TriplesGraph.fromLexical]] over it —
+    * the corpus parses once, not once per predicate, and every slice is
+    * typed by the graph layer's one kind rule. */
   def toGraph(spark: SparkSession, parsed: DataFrame,
-      ts: Option[TsProvider] = None): TriplesGraph = {
-    val base = parsed.localCheckpoint(false)
-    // "IRI" marks resource objects; literal rows contribute their kind tag
-    val kindTag = when(col("o_dt").isNull && col("o_lang").isNull, lit("IRI"))
-      .when(col("o_lang").isNotNull, lit("KStr"))
-      .otherwise(col("o_dt"))
-    val meta = base.groupBy("p").agg(
-      collect_set(kindTag).as("tags"),
-      max(col("o_lang").isNotNull).as("hasLang"),
-      max(col("g").isNotNull).as("hasGraph")).collect()
-    val slices = meta.map { m =>
-      val p = m.getString(0)
-      val tags = m.getSeq[String](1)
-      val hasLang = m.getBoolean(2)
-      val hasGraph = m.getBoolean(3)
-      val kinds = tags.map {
-        case "IRI" => OKind.KIri
-        case "KStr" => OKind.KStr
-        case dt => OKind.ofDatatype(dt)
-      }.distinct
-      val kind = if (kinds.size == 1) kinds.head else OKind.KStr
-      val oCol = kind match {
-        case OKind.KIri | OKind.KStr => col("o_lex")
-        case k => col("o_lex").try_cast(OKind.sparkType(k))
-      }
-      val cols = Seq(col("s"), oCol.as("o")) ++
-        (if (hasLang) Seq(col("o_lang")) else Nil) ++
-        (if (hasGraph) Seq(col("g")) else Nil)
-      p -> PredicateSlice(base.filter(col("p") === lit(p)).select(cols: _*),
-        kind, hasLang = hasLang, hasGraph = hasGraph)
-    }.toMap
-    TriplesGraph.fromSlices(spark, slices, ts)
-  }
+      ts: Option[TsProvider] = None): TriplesGraph =
+    TriplesGraph.fromLexical(spark, parsed.localCheckpoint(false), ts)
 
   /** One parsed triple/quad; `oDt`/`oLang` empty for resource objects. */
   final case class Parsed(s: String, p: String, oLex: String,

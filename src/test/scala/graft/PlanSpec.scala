@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 
 /** Guards the scale-critical plan properties (SURVEY §4): filter pushdown,
   * column pruning, and shuffle discipline. These are the properties the
@@ -10,8 +10,21 @@ class PlanSpec extends SparkTestBase {
 
   private val sf = "/root/testdata/sf0.001"
 
-  private def executedPlan(name: String): String =
-    SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan.toString
+  private def physicalPlan(name: String): SparkPlan =
+    SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan
+
+  private def executedPlan(name: String): String = physicalPlan(name).toString
+
+  /** The plan's scans under `fragment` all carry a non-empty partition
+    * filter, and there is at least one. */
+  private def assertPruned(plan: SparkPlan, fragment: String,
+      what: String): Seq[FileSourceScanExec] = {
+    val scans = PlanScans.under(plan, fragment)
+    assert(scans.nonEmpty, s"expected a $fragment scan in:\n$plan")
+    assert(scans.forall(_.partitionFilters.nonEmpty),
+      s"$fragment scan must be partition-pruned by $what:\n$plan")
+    scans
+  }
 
   test("q02: predicate and projection reach the parquet scan") {
     val plan = executedPlan("q02_filter_project")
@@ -117,14 +130,9 @@ class PlanSpec extends SparkTestBase {
     // unpruned scan reads the whole index for a 2-cell probe, which at
     // 10^9 vectors is the difference between ~1/8 of the corpus and all
     // of it
-    val plan = executedPlan("q76_ann_ivf_persisted")
-    val cellScans = plan.split("FileScan parquet").toSeq.tail
-      .filter(_.contains("cells"))
-    assert(cellScans.nonEmpty, "expected a persisted-cells scan in the plan")
-    assert(cellScans.forall(s =>
-      s.contains("PartitionFilters") && !s.contains("PartitionFilters: []")),
-      "cells scan must be partition-pruned by probed cid")
-    assert(!plan.contains("CartesianProduct"))
+    val plan = physicalPlan("q76_ann_ivf_persisted")
+    assertPruned(plan, "cells", "probed cid")
+    assert(!plan.toString.contains("CartesianProduct"))
   }
 
   test("bloom fingerprint sidecar: the verify scan is partition-pruned " +
@@ -146,16 +154,11 @@ class PlanSpec extends SparkTestBase {
       .toDF("doc_id", "text")
     val dedup = graft.llm.BloomHistory.dedupFromStore(spark, dir, batch,
       "doc_id", "text")
-    val plan = dedup.queryExecution.executedPlan.toString
-    val fpScans = plan.split("FileScan parquet").toSeq.tail
-      .filter(_.contains("__fp"))
-    assert(fpScans.nonEmpty, s"expected a sidecar scan in:\n$plan")
-    assert(fpScans.forall(s =>
-      s.contains("PartitionFilters") && !s.contains("PartitionFilters: []")),
-      s"sidecar scan must be partition-pruned by hit bucket:\n$plan")
+    val plan = dedup.queryExecution.executedPlan
+    assertPruned(plan, "__fp", "hit bucket")
     // no scan in the verify plan reads a text column — fp-bytes only
-    assert(!plan.split("FileScan parquet").toSeq.tail
-      .exists(_.contains("text")), s"verify plan must not read text:\n$plan")
+    assert(!PlanScans.all(plan).exists(_.output.exists(_.name.contains("text"))),
+      s"verify plan must not read text:\n$plan")
     assert(dedup.collect().map(_.getLong(0)).toSet ==
       Set(1000L, 1001L, 1002L))
   }
@@ -165,16 +168,11 @@ class PlanSpec extends SparkTestBase {
     // the inline-payload thesis: a filtered probe must not join a
     // metadata side table or scan unfiltered rows — the label IN filter
     // rides the already-pruned cells scan as a parquet PushedFilter
-    val plan = executedPlan("q158_ann_filtered")
-    val cellScans = plan.split("FileScan parquet").toSeq.tail
-      .filter(_.contains("cells"))
-    assert(cellScans.nonEmpty, s"expected a cells scan in:\n$plan")
-    assert(cellScans.forall(s =>
-      s.contains("PartitionFilters") && !s.contains("PartitionFilters: []")),
-      s"cells scan must stay partition-pruned by probed cid:\n$plan")
-    assert(cellScans.exists(_.contains("In(label")),
+    val plan = physicalPlan("q158_ann_filtered")
+    val cellScans = assertPruned(plan, "cells", "probed cid")
+    assert(cellScans.exists(_.metadata("PushedFilters").contains("In(label")),
       s"label predicate must push into the cells scan:\n$plan")
-    assert(!plan.contains("CartesianProduct"))
+    assert(!plan.toString.contains("CartesianProduct"))
   }
 
   test("persisted IVF-PQ index: the packed cells scan is partition-pruned " +
@@ -196,13 +194,7 @@ class PlanSpec extends SparkTestBase {
       .map(r => (r.getLong(0), r.getSeq[Float](1)))
     val cells = graft.llm.AnnOps.ivfPqProbedCells(spark, path, model,
       qRows, nProbe = 2)
-    val plan = cells.queryExecution.executedPlan.toString
-    val cellScans = plan.split("FileScan parquet").toSeq.tail
-      .filter(_.contains("cells"))
-    assert(cellScans.nonEmpty, s"expected a packed-cells scan:\n$plan")
-    assert(cellScans.forall(s =>
-      s.contains("PartitionFilters") && !s.contains("PartitionFilters: []")),
-      s"packed cells scan must be partition-pruned by probed cid:\n$plan")
+    assertPruned(cells.queryExecution.executedPlan, "cells", "probed cid")
   }
 
   test("filtered vector search on the COMPRESSED path (q159): the packed " +
@@ -224,30 +216,20 @@ class PlanSpec extends SparkTestBase {
       .map(r => (r.getLong(0), r.getSeq[Float](1)))
     val cells = graft.llm.AnnOps.ivfPqProbedCells(spark, path, model,
       qRows, nProbe = 4, predicate = Some(col("label").isin(1, 4, 7)))
-    val plan = cells.queryExecution.executedPlan.toString
-    val cellScans = plan.split("FileScan parquet").toSeq.tail
-      .filter(_.contains("cells"))
-    assert(cellScans.nonEmpty, s"expected a packed-cells scan:\n$plan")
-    assert(cellScans.forall(s =>
-      s.contains("PartitionFilters") && !s.contains("PartitionFilters: []")),
-      s"packed cells scan must stay partition-pruned by probed cid:\n$plan")
-    assert(cellScans.exists(_.contains("In(label")),
+    val plan = cells.queryExecution.executedPlan
+    val cellScans = assertPruned(plan, "cells", "probed cid")
+    assert(cellScans.exists(_.metadata("PushedFilters").contains("In(label")),
       s"label predicate must push into the packed cells scan:\n$plan")
-    assert(!plan.contains("CartesianProduct"))
+    assert(!plan.toString.contains("CartesianProduct"))
   }
 
   test("persisted text index: the postings scan is partition-pruned to probed buckets") {
     // q120 serves BM25 from the tb-partitioned postings dataset; the scan
     // must carry a non-empty PartitionFilters on tb — unpruned, a 5-term
     // query reads the whole inverted index
-    val plan = executedPlan("q120_bm25_index")
-    val postingScans = plan.split("FileScan parquet").toSeq.tail
-      .filter(_.contains("postings"))
-    assert(postingScans.nonEmpty, "expected a postings scan in the plan")
-    assert(postingScans.forall(s =>
-      s.contains("PartitionFilters") && !s.contains("PartitionFilters: []")),
-      "postings scan must be partition-pruned by term bucket")
-    assert(!plan.contains("CartesianProduct"))
+    val plan = physicalPlan("q120_bm25_index")
+    assertPruned(plan, "postings", "term bucket")
+    assert(!plan.toString.contains("CartesianProduct"))
   }
 
   test("DESCRIBE with class evidence skips fact and sensor slices") {

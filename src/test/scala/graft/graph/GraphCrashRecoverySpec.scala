@@ -3,12 +3,13 @@ package graft.graph
 import graft.SparkTestBase
 import graft.exec.{SparqlExecutor, SparqlUpdate}
 import graft.rdf.{Iri, Lit, Term, Xsd}
+import graft.sources.ParquetCompaction
 
 /** Crash consistency of the persisted store's in-place mutations: a kill
   * at ANY point of saveDelta's staged swap or compact's rewrite-then-swap
   * must leave `load` seeing the complete OLD store or the complete NEW
-  * one, never a hybrid. Crashes are injected through the companion's
-  * crashHook failpoint at each protocol stage. */
+  * one, never a hybrid. Crashes are injected through the store protocol's
+  * one failpoint, ParquetCompaction.crashHook, at each stage. */
 class GraphCrashRecoverySpec extends SparkTestBase {
 
   private val ex = "http://example.net/ns#"
@@ -45,10 +46,10 @@ class GraphCrashRecoverySpec extends SparkTestBase {
          |DELETE DATA { ex:b ex:name "Bob" } ;
          |INSERT DATA { ex:c ex:name "Cara" . ex:b ex:age 40 }""".stripMargin)
     assert(updated.touched == Set(ex + "name", ex + "age"))
-    TriplesGraph.crashHook =
+    ParquetCompaction.crashHook =
       p => if (p == point) throw new RuntimeException(s"injected crash at $p")
     try intercept[RuntimeException] { updated.saveDelta(dir) }
-    finally TriplesGraph.crashHook = _ => ()
+    finally ParquetCompaction.crashHook = _ => ()
   }
 
   private def leftovers(dir: String): Seq[String] = {
@@ -56,7 +57,7 @@ class GraphCrashRecoverySpec extends SparkTestBase {
     val inRoot = Option(root.listFiles()).getOrElse(Array.empty).map(_.getName)
       .filter(n => n == TriplesGraph.deltaCommitFileName ||
         n == TriplesGraph.stagingDirName)
-    val tmp = new java.io.File(dir + TriplesGraph.compactingSuffix)
+    val tmp = new java.io.File(dir + ParquetCompaction.compactingSuffix)
     (inRoot ++ (if (tmp.exists()) Seq(tmp.getName) else Nil)).toSeq
   }
 
@@ -88,21 +89,21 @@ class GraphCrashRecoverySpec extends SparkTestBase {
 
   test("kill after compact temp is ready, before root delete: old store survives") {
     val dir = freshStore()
-    TriplesGraph.crashHook = p =>
+    ParquetCompaction.crashHook = p =>
       if (p == "compact-ready") throw new RuntimeException("injected")
     try intercept[RuntimeException] { TriplesGraph.compact(spark, dir) }
-    finally TriplesGraph.crashHook = _ => ()
-    assert(new java.io.File(dir + TriplesGraph.compactingSuffix).exists())
+    finally ParquetCompaction.crashHook = _ => ()
+    assert(new java.io.File(dir + ParquetCompaction.compactingSuffix).exists())
     assert(state(dir) == oldState)
     assert(leftovers(dir).isEmpty, s"recovery left ${leftovers(dir)}")
   }
 
   test("kill between compact's root delete and rename: new store is promoted") {
     val dir = freshStore()
-    TriplesGraph.crashHook = p =>
+    ParquetCompaction.crashHook = p =>
       if (p == "compact-after-delete") throw new RuntimeException("injected")
     try intercept[RuntimeException] { TriplesGraph.compact(spark, dir) }
-    finally TriplesGraph.crashHook = _ => ()
+    finally ParquetCompaction.crashHook = _ => ()
     // the root is gone; only the ready temp remains
     assert(!new java.io.File(dir).exists())
     assert(state(dir) == oldState) // compaction preserves contents

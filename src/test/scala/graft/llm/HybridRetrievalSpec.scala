@@ -1,6 +1,6 @@
 package graft.llm
 
-import graft.SparkTestBase
+import graft.{PlanScans, SparkTestBase}
 import org.apache.spark.sql.functions._
 
 /** Hybrid retrieval (Retrieval.sharedRareTokenTopK / rrfFuse) and
@@ -65,12 +65,10 @@ class HybridRetrievalSpec extends SparkTestBase {
     assert(idx.nonEmpty && idx == mem)
     // both index scans carry the query-bucket partition filter
     val plan = Retrieval.lexicalScoredFromIndex(spark, dir, queries,
-      "doc_id", "text", 30L).queryExecution.executedPlan.toString
-    val scans = plan.split("FileScan parquet").toSeq.tail
-      .filter(s => s.contains("postings") || s.contains("/df"))
+      "doc_id", "text", 30L).queryExecution.executedPlan
+    val scans = PlanScans.under(plan, "postings", "/df")
     assert(scans.size >= 2, s"expected postings + df scans:\n$plan")
-    assert(scans.forall(s =>
-      s.contains("PartitionFilters") && !s.contains("PartitionFilters: []")),
+    assert(scans.forall(_.partitionFilters.nonEmpty),
       s"index scans must be partition-pruned to the query buckets:\n$plan")
   }
 

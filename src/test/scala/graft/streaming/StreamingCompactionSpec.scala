@@ -1,11 +1,9 @@
 package graft.streaming
 
-import graft.SparkTestBase
+import graft.{PlanScans, SparkTestBase}
 import graft.llm.{AnnOps, TextIndex}
 import graft.sources.ParquetCompaction
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.execution.FileSourceScanExec
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 
 /** Small-files compaction for the append-grown sinks (curation fp index +
@@ -164,12 +162,8 @@ class StreamingCompactionSpec extends SparkTestBase {
     // pruning still plans: tb partition dirs are preserved by the rewrite
     val plan = TextIndex.bm25FromIndex(spark, dir, terms, topK = 5)
       .queryExecution.executedPlan
-    val postings = new Path(s"$dir/postings").toUri.getPath
-    val postingScans = new AdaptiveSparkPlanHelper {}
-      .collectWithSubqueries(plan) {
-        case s: FileSourceScanExec if s.relation.location.rootPaths
-            .exists(_.toUri.getPath.startsWith(postings)) => s
-      }
+    val postingScans = PlanScans.under(plan,
+      new Path(s"$dir/postings").toUri.getPath)
     assert(postingScans.nonEmpty &&
       postingScans.forall(_.partitionFilters.nonEmpty))
   }
