@@ -96,7 +96,7 @@ object Bench {
     // subtotals are reported separately so the headline is comparable
     // across rounds on the common query set.
     val (maintEntries, queryEntries) =
-      SparkEntry.catalog.filter(_.bench).partition(_.maint)
+      SparkEntry.catalog.partition(_.maint)
     // Warmup: full pass, unmeasured (calibrations too — first run JITs +
     // warms the calibration slice's file listing and page cache).
     calibrate()

@@ -138,13 +138,25 @@ object T {
 }
 
 /** One catalog entry: a Spark query plus (optionally) its DuckDB oracle SQL.
-  * `bench` marks it as part of the headline benchmark set; `maint` marks a
-  * MAINTENANCE entry (store build/fold/compact cycles, not queries) — the
-  * bench runs those in a separate tail phase so their store churn can't
-  * perturb the query entries' interleaved medians (VERDICT r11 #4). */
+  * `maint` marks a MAINTENANCE entry (store build/fold/compact cycles, not
+  * queries) — the bench runs those in a separate tail phase so their store
+  * churn can't perturb the query entries' interleaved medians (VERDICT r11
+  * #4). */
 final case class Q(
     name: String,
     sql: Option[String],
-    bench: Boolean = true,
     maint: Boolean = false)(
     val fn: (SparkSession, String) => DataFrame)
+
+object Q {
+
+  /** A query entry with its oracle SQL. */
+  def q(name: String, sql: String)(
+      fn: (SparkSession, String) => DataFrame): Q = Q(name, Some(sql))(fn)
+
+  /** A MAINTENANCE entry with its oracle SQL: a store build/fold/compact
+    * cycle rather than a query, benched in the separate tail phase. */
+  def qm(name: String, sql: String)(
+      fn: (SparkSession, String) => DataFrame): Q =
+    Q(name, Some(sql), maint = true)(fn)
+}

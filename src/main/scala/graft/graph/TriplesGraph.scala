@@ -3,6 +3,7 @@ package graft.graph
 import graft.rdf._
 import graft.sources.{MetaSidecar, ParquetCompaction}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -695,10 +696,12 @@ final class TriplesGraph(
     *
     * CRASH CONSISTENCY (write-ahead staging + commit marker): new contents
     * land first in `_graft_staging_delta/` (underscore prefix → invisible
-    * to Spark's listing, so concurrent readers of `path` never see them);
-    * then a commit-marker JSON naming every swap/drop is written; only
-    * then are the old directories unlinked and the staged ones renamed in;
-    * finally marker and staging are removed. [[TriplesGraph.recoverStore]]
+    * to Spark's listing, so concurrent readers of `path` never see them),
+    * one `p=` directory per touched predicate — an EMPTY one for a
+    * predicate whose rows are all gone; then an empty commit-marker file
+    * is written; only then are the old directories unlinked and the
+    * staged ones renamed in (empty ones are drops); finally marker and
+    * staging are removed. [[TriplesGraph.recoverStore]]
     * (run by [[TriplesGraph.load]] and by the mutators themselves) makes
     * any crash land on a whole state: before the marker exists the store
     * is untouched (staging is discarded); once it exists the swap is
@@ -725,28 +728,16 @@ final class TriplesGraph(
     parts.reduceOption(_.unionByName(_)).foreach(
       _.repartition(col("p"), col("kind"), col("cls"), col("sb"))
         .write.partitionBy("p", "kind", "cls", "sb").parquet(staging.toString))
+    // a fully-deleted predicate stages an empty directory, named as
+    // partitionBy names the live one: the swap below then drops it
+    touched.foreach(p => fs.mkdirs(new Path(staging,
+      ExternalCatalogUtils.getPartitionPathString("p", p))))
     ParquetCompaction.crashHook("after-staging")
-    // 2. commit marker: predicates with staged content are swaps, touched
-    // predicates with no staged rows (fully deleted) are drops
-    val staged: Set[String] =
-      if (!fs.exists(staging)) Set.empty
-      else fs.listStatus(staging).collect {
-        case st if st.isDirectory && st.getPath.getName.startsWith("p=") =>
-          TriplesGraph.unescapePath(st.getPath.getName.drop(2))
-      }.toSet
-    val swaps = touched.intersect(staged)
-    val drops = touched.diff(staged)
-    def jarr(ps: Set[String]) = ps.toSeq.sorted.map(p =>
-      "\"" + p.replace("\\", "\\\\").replace("\"", "\\\"") + "\"")
-      .mkString("[", ",", "]")
-    val marker = new Path(root, TriplesGraph.deltaCommitFileName)
-    val out = fs.create(marker, true)
-    try out.write(
-      s"""{"swap": ${jarr(swaps)}, "drop": ${jarr(drops)}}""".getBytes("UTF-8"))
-    finally out.close()
+    // 2. commit: the marker's existence is the commit point
+    fs.create(new Path(root, TriplesGraph.deltaCommitFileName), true).close()
     ParquetCompaction.crashHook("after-marker")
     // 3+4. swap to completion, then clean up marker + staging
-    TriplesGraph.completeDeltaSwap(spark, path, swaps, drops)
+    TriplesGraph.completeDeltaSwap(spark, path)
   }
 }
 
@@ -773,23 +764,6 @@ object TriplesGraph {
   private def storeBuckets(spark: SparkSession, path: String): Int =
     readMeta(spark, path).getOrElse(throw new IllegalArgumentException(
       s"no store sidecar at $path — not a store written by save()"))
-
-  /** Decode Spark's partition-directory escaping (%xx sequences) — the
-    * inverse of the encoding `partitionBy` applies to special characters
-    * in partition values (e.g. `p=urn%3Agraft%3Aname`). */
-  private[graft] def unescapePath(name: String): String = {
-    val sb = new StringBuilder(name.length)
-    var i = 0
-    while (i < name.length) {
-      val c = name.charAt(i)
-      val hex = if (c == '%' && i + 2 < name.length)
-        name.substring(i + 1, i + 3) else ""
-      if (hex.length == 2 && hex.forall(Character.digit(_, 16) >= 0)) {
-        sb.append(Integer.parseInt(hex, 16).toChar); i += 3
-      } else { sb.append(c); i += 1 }
-    }
-    sb.toString
-  }
 
   /** Compact a persisted store in place: parallel writes and saveDelta
     * cycles leave up to one file per task per partition directory;
@@ -827,58 +801,44 @@ object TriplesGraph {
     ParquetCompaction.recover(spark, path)
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val marker = new Path(root, deltaCommitFileName)
     val staging = new Path(root, stagingDirName)
-    if (fs.exists(marker)) {
-      val in = fs.open(marker)
-      val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      def parse(key: String): Set[String] =
-        (s""""$key"\\s*:\\s*\\[([^\\]]*)\\]""").r.findFirstMatchIn(txt)
-          .map(_.group(1)).filter(_.trim.nonEmpty)
-          .map(_.split("\",\\s*\"").map(
-            _.stripPrefix("\"").stripSuffix("\"")
-              .replace("\\\"", "\"").replace("\\\\", "\\")).toSet)
-          .getOrElse(Set.empty)
-      completeDeltaSwap(spark, path, parse("swap"), parse("drop"))
-    } else if (fs.exists(staging)) {
+    if (fs.exists(new Path(root, deltaCommitFileName)))
+      completeDeltaSwap(spark, path)
+    else if (fs.exists(staging))
       // staged but never committed: the store is whole as-is
       fs.delete(staging, true)
-    }
   }
 
-  /** Execute (or re-execute) a committed delta swap: for each swap
-    * predicate whose staged directory still exists, unlink the live
-    * directory and rename the staged one in; drop predicates are plain
-    * unlinks. Every step is idempotent — a staged dir already renamed in
-    * is simply absent from staging, an already-unlinked drop is a no-op —
-    * so the method can be re-run after a crash at any point. Ends by
-    * removing the commit marker, then the staging dir. */
-  private[graft] def completeDeltaSwap(spark: SparkSession, path: String,
-      swaps: Set[String], drops: Set[String]): Unit = {
+  /** Execute (or re-execute) a committed delta swap: for each staged
+    * `p=` directory, unlink the live directory of the same name, then
+    * rename the staged one in — or, when it is empty (a fully-deleted
+    * predicate), delete it. Every step is idempotent — a staged dir
+    * already renamed in or deleted is simply absent from staging — so the
+    * method can be re-run after a crash at any point. Ends by removing
+    * the commit marker, then the staging dir. */
+  private[graft] def completeDeltaSwap(spark: SparkSession,
+      path: String): Unit = {
     import org.apache.hadoop.fs.Path
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val staging = new Path(root, stagingDirName)
-    def predDirs(dir: Path): Map[String, Path] =
-      if (!fs.exists(dir)) Map.empty
-      else fs.listStatus(dir).collect {
-        case st if st.isDirectory && st.getPath.getName.startsWith("p=") =>
-          unescapePath(st.getPath.getName.drop(2)) -> st.getPath
-      }.toMap
-    val rootDirs = predDirs(root)
-    val stagedDirs = predDirs(staging)
+    val staged =
+      if (!fs.exists(staging)) Seq.empty
+      else fs.listStatus(staging).toSeq
+        .filter(st => st.isDirectory && st.getPath.getName.startsWith("p="))
+        .map(_.getPath).sortBy(_.getName)
     var n = 0
-    swaps.toSeq.sorted.foreach { p =>
-      stagedDirs.get(p).foreach { src =>
-        rootDirs.get(p).foreach(old => fs.delete(old, true))
-        if (!fs.rename(src, new Path(root, src.getName)))
+    staged.foreach { src =>
+      val live = new Path(root, src.getName)
+      if (fs.exists(live)) fs.delete(live, true)
+      if (fs.listStatus(src).isEmpty) fs.delete(src, true)
+      else {
+        if (!fs.rename(src, live))
           throw new IllegalStateException(s"delta rename of $src failed")
         n += 1
         if (n == 1) ParquetCompaction.crashHook("mid-swap")
       }
     }
-    drops.toSeq.sorted.foreach(p => rootDirs.get(p).foreach(d => fs.delete(d, true)))
     fs.delete(new Path(root, deltaCommitFileName), false)
     if (fs.exists(staging)) fs.delete(staging, true)
     // the session caches file listings per path; readers opened before this
@@ -886,9 +846,9 @@ object TriplesGraph {
     spark.catalog.refreshByPath(path)
   }
 
-  /** Commit marker for [[TriplesGraph#saveDelta]]'s staged swap (JSON:
-    * swap/drop predicate lists). Its existence means the delta is
-    * committed; recovery re-executes the swap. */
+  /** Commit marker for [[TriplesGraph#saveDelta]]'s staged swap, an empty
+    * file. Its existence means the delta is committed; recovery
+    * re-executes the swap. */
   private[graft] val deltaCommitFileName = "_graft_delta_commit.json"
 
   /** Staging directory (inside the store root, underscore-prefixed so

@@ -1,6 +1,7 @@
 package graft.llm
 
 import graft.{Q, Scratch, T}
+import graft.Q.{q, qm}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -11,15 +12,6 @@ import org.apache.spark.sql.types._
   * plumbing. Every entry has a DuckDB oracle.
   */
 object LlmQueries {
-
-  private def q(name: String, sql: String, bench: Boolean = true)(
-      fn: (SparkSession, String) => DataFrame): Q = Q(name, Some(sql), bench)(fn)
-
-  /** A MAINTENANCE entry: a store build/fold/compact cycle rather than a
-    * query — benched in the separate tail phase (see [[graft.Q]].maint). */
-  private def qm(name: String, sql: String)(
-      fn: (SparkSession, String) => DataFrame): Q =
-    Q(name, Some(sql), bench = true, maint = true)(fn)
 
   /** Persisted IVF index (seed centroids, so the DuckDB oracle rebuilds
     * it identically), built once per data dir ([[graft.Scratch.once]]). */

@@ -1,6 +1,7 @@
 package graft.relational
 
 import graft.{Q, T}
+import graft.Q.{q, qm}
 import graft.T._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -15,16 +16,6 @@ import org.apache.spark.sql.types._
   * DuckDB oracle SQL is the semantic contract.
   */
 object RelationalQueries {
-
-  private def q(name: String, sql: String, bench: Boolean = true)(
-      fn: (SparkSession, String) => DataFrame): Q =
-    Q(name, Some(sql), bench)(fn)
-
-  /** A MAINTENANCE entry (store rewrite cycle, not a query) — benched in
-    * the separate tail phase (see [[graft.Q]].maint). */
-  private def qm(name: String, sql: String)(
-      fn: (SparkSession, String) => DataFrame): Q =
-    Q(name, Some(sql), bench = true, maint = true)(fn)
 
   /** Morton-clustered lineitem copy (q130), built once per data dir
     * ([[graft.Scratch.once]]). */

@@ -9,7 +9,9 @@ import scala.concurrent.duration.FiniteDuration
 
 /** The marker-committed append log behind the id-disciplined stores
   * ([[graft.llm.SimGraphStore]], [[graft.llm.ShingleIndex]], the
-  * [[graft.streaming.StreamingNightlyCuration]] staging manifest): the
+  * [[graft.streaming.StreamingNightlyCuration]] staging manifest, the
+  * [[graft.streaming.StreamingCuration]] and
+  * [[graft.streaming.StreamingNearDup]] sinks): the
   * Structured Streaming paper's exactly-once sink (SIGMOD 2018), an
   * idempotent append keyed by the engine's batch id.
   *

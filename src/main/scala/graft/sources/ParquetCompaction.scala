@@ -37,13 +37,13 @@ import org.apache.spark.sql.functions.col
   * that blindly append-creates the missing root makes the state
   * ambiguous, and the next [[recover]] — seeing a live root — discards
   * the temp, silently losing the pre-crash history. All in-repo
-  * consumers (StreamingCuration.processBatch, TextIndex
+  * consumers (the [[AppendLog]] stores, TextIndex
   * appendToIndex/bm25FromIndex, AnnOps appendToIvfIndex/
   * ivfTopKFromIndex) recover first; external callers must too.
   *
   * Row-for-row identical contents, so replay/idempotence discipline
-  * built on these sinks (anti-joins on fp / doc_id, batch-id exclusion)
-  * is unchanged — spec-pinned by StreamingCompactionSpec. */
+  * built on these sinks is unchanged — spec-pinned by
+  * StreamingCompactionSpec. */
 object ParquetCompaction {
 
   private val readyFileName = "_graft_compact_ready"
@@ -53,8 +53,9 @@ object ParquetCompaction {
 
   /** Test failpoint: throws at named protocol points when a spec installs
     * a hook; a no-op in production. The crash-consistency specs use it to
-    * kill a rewrite (or the triples store's saveDelta) mid-protocol and
-    * assert recovery lands on a whole state. */
+    * kill a rewrite (or the triples store's saveDelta, or a streaming
+    * sink's append before its marker) mid-protocol and assert recovery
+    * lands on a whole state. */
   private[graft] var crashHook: String => Unit = _ => ()
 
   /** Compact the dataset at `path` in place. `partitionCols` must name

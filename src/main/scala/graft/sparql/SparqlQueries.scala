@@ -22,9 +22,9 @@ object SparqlQueries {
 
   private val texts = scala.collection.mutable.LinkedHashMap.empty[String, String]
 
-  private def sq(name: String, sql: String, sparql: String, bench: Boolean = true): Q = {
+  private def sq(name: String, sql: String, sparql: String): Q = {
     texts(name) = sparql
-    Q(name, Some(sql), bench)((s: SparkSession, dir: String) =>
+    Q(name, Some(sql))((s: SparkSession, dir: String) =>
       new SparqlExecutor(TpchGraph.graph(s, dir)).execute(prologue + sparql))
   }
 

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.llm.TextOps
+import graft.sources.{AppendLog, ParJobs, ParquetCompaction}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -33,15 +34,19 @@ import org.apache.spark.sql.types._
   *
   * Determinism: cross-batch order is arrival order (exactly the contract
   * of dedup-at-ingest); within a batch, the transitive keep-lowest-id rule
-  * is order-free. Restart note: the index append is not atomic with the
-  * checkpoint commit, so a crash between them can re-run a batch whose
-  * survivors are ALREADY indexed. Three guards make the replay a no-op:
-  * the batch×index candidate join drops self-matches (`ida =!= idb` —
-  * otherwise a replayed survivor matches itself at Jaccard 1.0 and is
-  * permanently lost), and both the index and output appends anti-join on
-  * doc_id against what the sink already holds — the idempotent-upsert
-  * discipline any foreachBatch sink needs (a Delta/Iceberg MERGE at lake
-  * scale; parquet anti-join + append here).
+  * is order-free.
+  *
+  * Store layout under one root: `index/` (the band table of emitted docs)
+  * and `out/` (the surviving batch rows), both partitioned under the
+  * [[graft.sources.AppendLog]] whose `_batches/<bid>` markers commit them,
+  * keyed by the engine's batch id. The two appends are not atomic
+  * together, so the marker is the commit point: every batch matches
+  * against the committed index only, a crashed attempt's partitions are
+  * deleted before its id is reused (so a replay re-derives the same
+  * survivors, never matching its own earlier append), a replay of the
+  * latest id with the same rows is skipped, and a fresh checkpoint over
+  * an existing store (engine ids restarting at 0) fails loudly —
+  * checkpoint and store are reset together.
   *
   * Scale: the index is the emitted corpus's band table. At lake scale it
   * would be bucketed by bandHash so step 2's join prunes; the per-batch
@@ -50,61 +55,69 @@ import org.apache.spark.sql.types._
   */
 object StreamingNearDup {
 
-  /** Run near-dup suppression over a document file stream: survivors land
-    * in `outDir` (parquet, append), the band index in `indexDir`. Drains
-    * currently-available input (Trigger.AvailableNow); `maxFilesPerTrigger`
-    * bounds each micro-batch. */
-  def run(spark: SparkSession, srcDir: String, indexDir: String,
-      outDir: String, checkpointDir: String,
+  private val log = AppendLog("_batches", "bid", Seq("index", "out"))
+
+  /** Run near-dup suppression over a document file stream into the store
+    * at `storeDir`. Drains currently-available input
+    * (Trigger.AvailableNow); `maxFilesPerTrigger` bounds each
+    * micro-batch. */
+  def run(spark: SparkSession, srcDir: String, storeDir: String,
+      checkpointDir: String,
       shingleN: Int = 3, numHashes: Int = 128, rowsPerBand: Int = 2,
       threshold: Double = 0.5, maxFilesPerTrigger: Int = 1): Unit = {
     val numBands = numHashes / rowsPerBand
     StreamingFold.drain(spark, StreamingFold.docSchema, srcDir,
-        checkpointDir, maxFilesPerTrigger) { (batch, _) =>
-      processBatch(batch, indexDir, outDir,
+        checkpointDir, maxFilesPerTrigger) { (batch, batchId) =>
+      processBatch(batch, batchId, storeDir,
         shingleN, numHashes, rowsPerBand, threshold, numBands)
     }
   }
 
-  private[streaming] def processBatch(batch: DataFrame, indexDir: String, outDir: String,
-      shingleN: Int, numHashes: Int, rowsPerBand: Int, threshold: Double,
-      numBands: Int): Unit = {
+  /** The committed surviving documents: the stream's rows plus `bid`. */
+  def survivors(spark: SparkSession, storeDir: String): DataFrame =
+    log.read(spark, storeDir, "out",
+      StreamingFold.docSchema.add("bid", LongType))
+
+  /** One micro-batch. `batchId` must be the engine's replay-stable batch
+    * id (foreachBatch's second argument): it is the log's commit id. */
+  private[streaming] def processBatch(batch: DataFrame, batchId: Long,
+      storeDir: String, shingleN: Int, numHashes: Int, rowsPerBand: Int,
+      threshold: Double, numBands: Int): Unit = {
     val spark = batch.sparkSession
+    log.cleanOrphans(spark, storeDir)
+    val latest = log.latest(spark, storeDir)
+    // the band table is built through an RDD, so no pass here could carry
+    // an observed signature: one job computes it for the replay check and
+    // the commit alike
+    lazy val sig = AppendLog.batchSig(batch, "doc_id", "text")
+    val bid = AppendLog.resolveId(latest, Some(batchId),
+      log.sig(spark, storeDir, latest), sig,
+      s"near-dup store at $storeDir").getOrElse(return)
     val banded = TextOps.minhashBandTable(batch, "doc_id", "text",
       shingleN, numHashes, rowsPerBand).localCheckpoint()
-    val fs = new org.apache.hadoop.fs.Path(indexDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val haveIndex = fs.exists(new org.apache.hadoop.fs.Path(indexDir))
-    val index = if (haveIndex) spark.read.parquet(indexDir) else null
+    val index = log.read(spark, storeDir, "index",
+      banded.schema.add("bid", LongType))
 
     def bandLong(df: DataFrame) = df.select(col("id"),
       posexplode(array((0 until numBands).map(j => col(s"b$j")): _*))
         .as(Seq("band", "bh")))
 
     val b = bandLong(banded)
+    val bRight = b.select(col("id").as("idb"), col("band").as("b2"),
+      col("bh").as("h2"))
     // batch×batch (lower id wins inside a cluster) ∪ batch×index
     val bb = b.select(col("id").as("ida"), col("band"), col("bh"))
-      .join(b.select(col("id").as("idb"), col("band").as("b2"), col("bh").as("h2")),
-        col("band") === col("b2") && col("bh") === col("h2") &&
-          col("ida") < col("idb"))
+      .join(bRight, col("band") === col("b2") && col("bh") === col("h2") &&
+        col("ida") < col("idb"))
       .select("ida", "idb")
-    val bi = if (haveIndex) {
-      bandLong(index).select(col("id").as("ida"), col("band"), col("bh"))
-        .join(b.select(col("id").as("idb"), col("band").as("b2"), col("bh").as("h2")),
-          col("band") === col("b2") && col("bh") === col("h2") &&
-            // a replayed batch's survivor is already indexed: without this
-            // guard it self-matches at Jaccard 1.0 and drops forever
-            col("ida") =!= col("idb"))
-        .select("ida", "idb")
-    } else bb.limit(0)
+    val bi = bandLong(index).select(col("id").as("ida"), col("band"), col("bh"))
+      .join(bRight, col("band") === col("b2") && col("bh") === col("h2"))
+      .select("ida", "idb")
     val candidates = bb.unionByName(bi).distinct()
 
     // exact verification against the stored shingle sets
-    val shingleSrc =
-      if (haveIndex)
-        index.select(col("id"), col("shingles"))
-          .unionByName(banded.select(col("id"), col("shingles")))
-      else banded.select(col("id"), col("shingles"))
+    val shingleSrc = index.select(col("id"), col("shingles"))
+      .unionByName(banded.select(col("id"), col("shingles")))
     val verified = candidates
       .join(shingleSrc.select(col("id").as("ida"), col("shingles").as("sha")), "ida")
       .join(shingleSrc.select(col("id").as("idb"), col("shingles").as("shb")), "idb")
@@ -115,11 +128,9 @@ object StreamingNearDup {
     // transitive resolution: a batch doc survives iff its component holds
     // no indexed doc and it is the component's min-id batch doc
     val labels = TextOps.connectedComponents(verified)
-    val indexedIds =
-      if (haveIndex) index.select(col("id")).distinct()
-      else banded.select(col("id")).limit(0)
     val dominated = labels.join(
-        labels.join(indexedIds, "id").select(col("cluster")).distinct(),
+        labels.join(index.select(col("id")).distinct(), "id")
+          .select(col("cluster")).distinct(),
         "cluster")
       .select(col("id"))
     val clusterMin = labels.join(dominated, Seq("id"), "left_anti")
@@ -131,23 +142,16 @@ object StreamingNearDup {
       .unionByName(dominated)
       .distinct()
 
-    // idempotent appends: a replayed batch re-derives the same survivors
-    // (deterministic ids + signatures), so anti-joining on doc_id against
-    // what each sink already holds makes the re-append a no-op
-    val survivors0 = banded.join(dropped, banded("id") === dropped("id"), "left_anti")
-    val survivors = if (haveIndex)
-      survivors0.join(index.select("id").distinct(), Seq("id"), "left_anti")
-    else survivors0
-    survivors.write.mode("append").parquet(indexDir)
-
-    val outPath = new org.apache.hadoop.fs.Path(outDir)
-    val haveOut = outPath.getFileSystem(
-      spark.sparkContext.hadoopConfiguration).exists(outPath)
-    val out0 = batch.join(dropped, batch("doc_id") === dropped("id"), "left_anti")
-    val out = if (haveOut)
-      out0.join(spark.read.parquet(outDir).select("doc_id").distinct(),
-        Seq("doc_id"), "left_anti")
-    else out0
-    out.write.mode("append").parquet(outDir)
+    // both appends land in this id's own bid= partitions (orphans until
+    // the marker commits) — disjoint directories, so they run concurrently
+    ParJobs.run(Seq(
+      () => banded.join(dropped, banded("id") === dropped("id"), "left_anti")
+        .withColumn("bid", lit(bid))
+        .write.mode("append").partitionBy("bid").parquet(s"$storeDir/index"),
+      () => batch.join(dropped, batch("doc_id") === dropped("id"), "left_anti")
+        .withColumn("bid", lit(bid))
+        .write.mode("append").partitionBy("bid").parquet(s"$storeDir/out")))
+    ParquetCompaction.crashHook("append-written")
+    log.commit(spark, storeDir, bid, sig)
   }
 }

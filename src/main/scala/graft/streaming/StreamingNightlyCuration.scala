@@ -47,7 +47,11 @@ import org.apache.spark.sql.types.StructType
   *    already-indexed anti-join (the [[StreamingTextIndex]] /
   *    [[StreamingIvf]] `processBatch` discipline), and the manifest
   *    retires via a single atomic rename AFTER every append committed — a
-  *    kill anywhere re-runs to the identical final state;
+  *    kill anywhere re-runs to the identical final state, except inside
+  *    the text store's append: [[graft.llm.TextIndex.appendToIndex]]
+  *    killed between its postings append and its df/meta rewrite leaves
+  *    the batch's doc_ids indexed, so the re-run's anti-join skips the
+  *    batch and df, nDocs and totLen stay short of it;
   *  - a completed fold advances the night floor (`_night_floor`) and
   *    keeps each folded bid's signature (`_folded_bids/<b>`), so the
   *    engine replaying a folded bid no-ops when its rows match and fails

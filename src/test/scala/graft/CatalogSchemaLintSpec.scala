@@ -8,7 +8,6 @@ package graft
   */
 class CatalogSchemaLintSpec extends SparkTestBase {
 
-  private val sf = "/root/testdata/sf0.001"
 
   test("every catalog entry emits a scalar-only schema") {
     Catalog.all.foreach { q =>

@@ -9,7 +9,6 @@ import org.apache.spark.sql.types.{LongType, TimestampType}
   * encoding the file holds. */
 class DeclaredSchemaSpec extends SparkTestBase {
 
-  private val sf = new java.io.File("perfbench/data/sf0.001").getAbsolutePath
   /** Five rows of sf0.001's events with `ts` as INT64 TIMESTAMP(NANOS),
     * written once with pyarrow. */
   private val nanosDir = new java.io.File(

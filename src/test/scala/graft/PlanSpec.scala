@@ -8,7 +8,6 @@ import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
   * results stay correct. */
 class PlanSpec extends SparkTestBase {
 
-  private val sf = "/root/testdata/sf0.001"
 
   private def physicalPlan(name: String): SparkPlan =
     SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan
@@ -182,8 +181,7 @@ class PlanSpec extends SparkTestBase {
     // PartitionFilters on cid; unpruned, a 2-cell probe reads the whole
     // packed corpus
     import org.apache.spark.sql.functions.col
-    val dir = "/root/testdata/sf0.001"
-    val emb = spark.read.parquet(s"$dir/embeddings.parquet")
+    val emb = spark.read.parquet(s"$sf/embeddings.parquet")
     val path = java.nio.file.Files
       .createTempDirectory("graft-planspec-ivfpq").toString + "/idx"
     graft.llm.AnnOps.buildIvfPqIndexDeterministic(emb, path, dim = 64,
@@ -204,8 +202,7 @@ class PlanSpec extends SparkTestBase {
     // deployment serves from (VERDICT r14 #6): the label filter must ride
     // the pruned packed scan as a PushedFilter, never a side-table join
     import org.apache.spark.sql.functions.col
-    val dir = "/root/testdata/sf0.001"
-    val emb = spark.read.parquet(s"$dir/embeddings.parquet")
+    val emb = spark.read.parquet(s"$sf/embeddings.parquet")
     val path = java.nio.file.Files
       .createTempDirectory("graft-planspec-ivfpq-filt").toString + "/idx"
     graft.llm.AnnOps.buildIvfPqIndexDeterministic(emb, path, dim = 64,

@@ -334,7 +334,7 @@ class ScaleHardeningSpec extends SparkTestBase {
     // declaring byClass, the class branches are disjoint and union to the
     // full slice — otherwise a typed NPS/var-predicate scan would silently
     // drop or duplicate rows
-    val g = graft.sparql.TpchGraph.graph(spark, "/root/testdata/sf0.001")
+    val g = graft.sparql.TpchGraph.graph(spark, sf)
     for ((p, sl) <- g.slices if sl.byClass.nonEmpty) {
       val full = sl.df.count()
       val parts = sl.byClass.values.map(_.count()).sum

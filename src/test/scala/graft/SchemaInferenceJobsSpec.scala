@@ -11,7 +11,6 @@ import graft.sparql.{SparqlQueries, TpchGraph}
   * constant datatype declaration needs no metadata collect. */
 class SchemaInferenceJobsSpec extends SparkTestBase {
 
-  private val sf = new java.io.File("perfbench/data/sf0.001").getAbsolutePath
 
   /** Call sites of the schema-inference jobs `body` fired: one-stage
     * `parquet at …` jobs that write nothing (a parquet write has output),

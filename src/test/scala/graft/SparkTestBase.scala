@@ -8,6 +8,10 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
 
   lazy val spark: SparkSession = SparkTestBase.session
 
+  /** The sf0.001 tables the specs read: the copy the benchmark ships. */
+  protected final val sf: String =
+    new java.io.File("perfbench/data/sf0.001").getAbsolutePath
+
   override def afterAll(): Unit = super.afterAll()
 }
 

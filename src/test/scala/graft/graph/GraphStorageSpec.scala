@@ -8,7 +8,6 @@ import graft.exec.SparqlExecutor
   * over the loaded graph must be partition pruning, not a full scan. */
 class GraphStorageSpec extends SparkTestBase {
 
-  private val sf = "/root/testdata/sf0.001"
 
   test("saved graph reloads query-equivalent with partition-pruned scans") {
     val derived = graft.sparql.TpchGraph.graph(spark, sf)

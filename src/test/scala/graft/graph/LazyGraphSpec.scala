@@ -11,7 +11,6 @@ import org.apache.spark.sql.{DataFrame, Row}
   * patterns touch — with the same rows as a graph built whole. */
 class LazyGraphSpec extends SparkTestBase {
 
-  private val sf = new java.io.File("perfbench/data/sf0.001").getAbsolutePath
 
   private def counted(n: AtomicInteger): () => PredicateSlice = () => {
     n.incrementAndGet()

@@ -10,7 +10,6 @@ import org.apache.spark.sql.functions._
   * actual bits. */
 class BloomHistorySpec extends SparkTestBase {
 
-  private val sf = "/root/testdata/sf0.001"
 
   private def tmp(tag: String): String =
     java.nio.file.Files.createTempDirectory(s"graft-bloomstore-$tag").toString

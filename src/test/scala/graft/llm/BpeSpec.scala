@@ -65,7 +65,7 @@ class BpeSpec extends SparkTestBase {
   }
 
   test("each trained merge weakly shrinks the encoded corpus") {
-    val docs = graft.T.documents(spark, "/root/testdata/sf0.001").limit(100)
+    val docs = graft.T.documents(spark, sf).limit(100)
       .localCheckpoint()
     val merges = Bpe.train(docs, "text", 12)
     assert(merges.length == 12)
@@ -78,7 +78,7 @@ class BpeSpec extends SparkTestBase {
   }
 
   test("training is deterministic and single-pass count matches a fold") {
-    val docs = graft.T.documents(spark, "/root/testdata/sf0.001").limit(60)
+    val docs = graft.T.documents(spark, sf).limit(60)
       .localCheckpoint()
     val a = Bpe.train(docs, "text", 8)
     val b = Bpe.train(docs.repartition(5), "text", 8)

@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
 class IvfPqSpec extends SparkTestBase {
 
   private lazy val emb =
-    graft.T.embeddings(spark, "/root/testdata/sf0.001").localCheckpoint()
+    graft.T.embeddings(spark, sf).localCheckpoint()
 
   private def recallOf(df: org.apache.spark.sql.DataFrame,
       exact: Map[Long, Set[Long]]): Double = {

@@ -5,7 +5,6 @@ import org.apache.spark.sql.functions._
 
 class LlmOpsSpec extends SparkTestBase {
 
-  private val sf = "/root/testdata/sf0.001"
 
   test("multimodal decode stub: schema, batch plumbing, deterministic features") {
     import spark.implicits._

@@ -7,8 +7,7 @@ import org.apache.spark.sql.functions._
   * trained-codebook recall against the exact brute-force ranking. */
 class PqSpec extends SparkTestBase {
 
-  private val dir = "/root/testdata/sf0.001"
-  private lazy val emb = graft.T.embeddings(spark, dir)
+  private lazy val emb = graft.T.embeddings(spark, sf)
 
   test("hash codebooks are deterministic and shaped (m x k x dim/m)") {
     val a = AnnOps.hashPqCodebooks(64, 8, 16)

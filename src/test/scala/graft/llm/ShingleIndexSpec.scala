@@ -329,7 +329,7 @@ class ShingleIndexSpec extends SparkTestBase {
 
   test("a rebuilt index round-trips the gate corpus: served output " +
       "matches the in-memory operator on real documents") {
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    val docs = spark.read.parquet(s"$sf/documents.parquet")
       .filter(col("doc_id") < 200)
     val dir = tmp("gate")
     ShingleIndex.build(docs, "doc_id", "text", dir, n = 3, nBuckets = 64)

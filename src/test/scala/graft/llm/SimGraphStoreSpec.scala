@@ -259,7 +259,7 @@ class SimGraphStoreSpec extends SparkTestBase {
     // support rows than the budget (stored rows are the post-aggregation
     // side of the volume the walk bounds)
     val docs = spark.read
-      .parquet("/root/testdata/sf0.001/documents.parquet")
+      .parquet(s"$sf/documents.parquet")
     val budget = 20000L
     val cap = SimGraphStore.capForEdgeBudget(
       SimGraphStore.postingsOf(docs, "doc_id", "text", 3), budget)

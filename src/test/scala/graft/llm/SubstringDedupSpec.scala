@@ -122,7 +122,7 @@ class SubstringDedupSpec extends SparkTestBase {
       i -> (0 until n).map(_ => vocab(rnd.nextInt(vocab.size))).mkString(" ")
     }
     val gate = spark.read
-      .parquet("/root/testdata/sf0.001/documents.parquet")
+      .parquet(s"$sf/documents.parquet")
       .select(col("doc_id"), col("text"))
       .collect().map(r => r.getLong(0) -> r.getString(1)).toSeq
     for ((docs, name) <- Seq((rand, "colliding"), (gate, "gate"))) {

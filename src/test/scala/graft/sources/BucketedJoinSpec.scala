@@ -7,7 +7,6 @@ import graft.SparkTestBase
   * exchanges, and the result must equal the plain shuffled join. */
 class BucketedJoinSpec extends SparkTestBase {
 
-  private val sf = "/root/testdata/sf0.001"
 
   test("bucketed tables join with zero shuffle exchanges") {
     val orders = spark.read.parquet(s"$sf/orders.parquet")

@@ -15,7 +15,6 @@ import org.apache.spark.sql.functions._
   */
 class JdbcTsProviderSpec extends SparkTestBase {
 
-  private val sf = "/root/testdata/sf0.001"
   private val derbyDriver = "org.apache.derby.jdbc.EmbeddedDriver"
 
   test("hybrid TS catalog queries run unchanged through a JDBC provider") {

@@ -135,7 +135,6 @@ class HasDatatypeSpec extends SparkTestBase {
 
   test("a compatible constant declaration fires no job and keeps the time " +
       "filter in the events scan") {
-    val sf = new java.io.File("perfbench/data/sf0.001").getAbsolutePath
     val text = SparqlQueries.prologue +
       SparqlQueries.sparqlTexts("q42_sparql_hybrid_ts")
     var df: DataFrame = null

@@ -13,7 +13,7 @@ import org.apache.spark.sql.types._
 class StreamingAsOfSpec extends SparkTestBase {
 
   private def events(): DataFrame =
-    graft.T.events(spark, "/root/testdata/sf0.001")
+    graft.T.events(spark, sf)
       .select(col("event_type").as("id"), col("ts"), col("value"))
 
   private def stage(df: DataFrame): (String, StructType) = {

@@ -9,7 +9,6 @@ import org.apache.spark.sql.functions._
   * exactly once, fresh checkpoint against an existing store fails loudly. */
 class StreamingBloomHistorySpec extends SparkTestBase {
 
-  private val sf = "/root/testdata/sf0.001"
 
   private def tmp(tag: String): String =
     java.nio.file.Files.createTempDirectory(s"graft-bloomstream-$tag").toString

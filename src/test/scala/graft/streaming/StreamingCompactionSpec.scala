@@ -11,13 +11,12 @@ import org.apache.spark.sql.functions._
   * row-identical contents, replay discipline unchanged. */
 class StreamingCompactionSpec extends SparkTestBase {
 
-  private val sf = "/root/testdata/sf0.001"
 
   private def tmp(tag: String): String =
     java.nio.file.Files.createTempDirectory(s"graft-cmp-$tag").toString
 
-  private def canonShards(dir: String): Seq[(Long, Long, Long, Long, Long)] =
-    spark.read.parquet(dir)
+  private def canonShards(store: String): Seq[(Long, Long, Long, Long, Long)] =
+    StreamingCuration.shards(spark, store)
       .select("doc_id", "n_tok", "cum_tok", "shard", "batch_id").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4)))
@@ -26,36 +25,46 @@ class StreamingCompactionSpec extends SparkTestBase {
   test("curation sinks compact to one file each; contents identical; " +
       "replay discipline unchanged") {
     val docs = spark.read.parquet(s"$sf/documents.parquet")
-    val (idx, out) = (tmp("idx"), tmp("out"))
+    // an empty store compacts to nothing, so engine batch 0 still lands
+    val empty = tmp("empty")
+    StreamingCuration.compactSinks(spark, empty)
+    StreamingCuration.processBatch(docs.filter(col("doc_id") < 150), 0L,
+      empty, 512L, 0.5)
+    assert(canonShards(empty).nonEmpty)
+
+    val store = tmp("store")
     // three micro-batches → ≥3 files per sink
     Seq((0L, 0L, 150L), (1L, 150L, 300L), (2L, 300L, 450L)).foreach {
       case (b, lo, hi) =>
         StreamingCuration.processBatch(
           docs.filter(col("doc_id") >= lo && col("doc_id") < hi),
-          b, s"$idx/fp", s"$out/shards", 512L, 0.5)
+          b, store, 512L, 0.5)
     }
-    val fpBefore = spark.read.parquet(s"$idx/fp").collect()
+    val fpBefore = spark.read.parquet(s"$store/fp").collect()
       .map(r => (r.get(0).toString, r.getLong(1))).sorted.toSeq
-    val shBefore = canonShards(s"$out/shards")
-    assert(ParquetCompaction.dataFileCount(spark, s"$out/shards") >= 3)
+    val shBefore = canonShards(store)
+    assert(ParquetCompaction.dataFileCount(spark, s"$store/shards") >= 3)
 
-    StreamingCuration.compactSinks(spark, s"$idx/fp", s"$out/shards")
-    assert(ParquetCompaction.dataFileCount(spark, s"$out/shards") == 1)
-    assert(ParquetCompaction.dataFileCount(spark, s"$idx/fp") == 1)
-    val fpAfter = spark.read.parquet(s"$idx/fp").collect()
+    StreamingCuration.compactSinks(spark, store)
+    assert(ParquetCompaction.dataFileCount(spark, s"$store/shards") == 1)
+    assert(ParquetCompaction.dataFileCount(spark, s"$store/fp") == 1)
+    val fpAfter = spark.read.parquet(s"$store/fp").collect()
       .map(r => (r.get(0).toString, r.getLong(1))).sorted.toSeq
-    assert(fpAfter == fpBefore && canonShards(s"$out/shards") == shBefore)
+    assert(fpAfter == fpBefore && canonShards(store) == shBefore)
+    // the folded marker keeps batch 2's signature: its replay still no-ops
+    StreamingCuration.processBatch(
+      docs.filter(col("doc_id") >= 300 && col("doc_id") < 450), 2L, store,
+      512L, 0.5)
+    assert(canonShards(store) == shBefore)
 
     // the pipeline continues over the compacted sinks...
     val b3 = docs.filter(col("doc_id") >= 450 && col("doc_id") < 600)
-    StreamingCuration.processBatch(b3, 3L, s"$idx/fp", s"$out/shards",
-      512L, 0.5)
-    val once = canonShards(s"$out/shards")
+    StreamingCuration.processBatch(b3, 3L, store, 512L, 0.5)
+    val once = canonShards(store)
     assert(once.size > shBefore.size)
     // ...and a replayed batch is still a no-op
-    StreamingCuration.processBatch(b3, 3L, s"$idx/fp", s"$out/shards",
-      512L, 0.5)
-    assert(canonShards(s"$out/shards") == once)
+    StreamingCuration.processBatch(b3, 3L, store, 512L, 0.5)
+    assert(canonShards(store) == once)
   }
 
   test("a kill between compaction stages always recovers to a whole " +
@@ -93,33 +102,32 @@ class StreamingCompactionSpec extends SparkTestBase {
   test("a writer arriving after a mid-swap crash recovers first and " +
       "loses no history (recover-before-first-touch invariant)") {
     val docs = spark.read.parquet(s"$sf/documents.parquet")
-    val (idx, out) = (tmp("idx2"), tmp("out2"))
+    val store = tmp("store2")
     Seq((0L, 0L, 150L), (1L, 150L, 300L)).foreach { case (b, lo, hi) =>
       StreamingCuration.processBatch(
         docs.filter(col("doc_id") >= lo && col("doc_id") < hi),
-        b, s"$idx/fp", s"$out/shards", 512L, 0.5)
+        b, store, 512L, 0.5)
     }
-    val before = canonShards(s"$out/shards")
+    val before = canonShards(store)
     // compaction killed between root-delete and rename: ALL history now
     // lives only in the READY __compacting temp
     ParquetCompaction.crashHook = p =>
       if (p == "compact-after-delete") throw new RuntimeException("kill@del")
     try intercept[RuntimeException] {
-      ParquetCompaction.compact(spark, s"$out/shards")
+      StreamingCuration.compactSinks(spark, store)
     } finally ParquetCompaction.crashHook = _ => ()
-    assert(!new java.io.File(s"$out/shards").exists())
+    assert(!new java.io.File(s"$store/shards").exists())
     // the NEXT micro-batch (no manual recover) must promote the temp —
     // a blind append would recreate an empty root and the following
     // recover()/compact() would then discard the temp with all history
     val b2 = docs.filter(col("doc_id") >= 300 && col("doc_id") < 450)
-    StreamingCuration.processBatch(b2, 2L, s"$idx/fp", s"$out/shards",
-      512L, 0.5)
-    val after = canonShards(s"$out/shards")
+    StreamingCuration.processBatch(b2, 2L, store, 512L, 0.5)
+    val after = canonShards(store)
     assert(after.filter(_._5 != 2L) == before, "pre-crash history lost")
     assert(after.exists(_._5 == 2L), "post-crash batch missing")
     // and the next maintenance compaction keeps everything
-    StreamingCuration.compactSinks(spark, s"$idx/fp", s"$out/shards")
-    assert(canonShards(s"$out/shards") == after)
+    StreamingCuration.compactSinks(spark, store)
+    assert(canonShards(store) == after)
   }
 
   test("index append after a mid-swap crash recovers the index first") {

@@ -1,7 +1,8 @@
 package graft.streaming
 
 import graft.SparkTestBase
-import graft.llm.{SampleOps, TextOps}
+import graft.llm.TextOps
+import graft.sources.ParquetCompaction
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -9,7 +10,6 @@ import org.apache.spark.sql.functions._
   * pack) against q121's batch plan. */
 class StreamingCurationSpec extends SparkTestBase {
 
-  private val sf = "/root/testdata/sf0.001"
 
   private def tmp(tag: String): String =
     java.nio.file.Files.createTempDirectory(s"graft-cur-$tag").toString
@@ -17,11 +17,8 @@ class StreamingCurationSpec extends SparkTestBase {
   private def q121(dir: String): DataFrame =
     graft.SparkEntry.queries("q121_curation_pipeline")(spark, dir)
 
-  private def canonShards(dir: String): Seq[(Long, Long, Long, Long)] =
-    spark.read.parquet(dir).select("doc_id", "n_tok", "cum_tok", "shard")
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-      .sortBy(_._1).toSeq
+  private def canonShards(store: String): Seq[(Long, Long, Long, Long)] =
+    canonDf(StreamingCuration.shards(spark, store))
 
   private def canonDf(df: DataFrame): Seq[(Long, Long, Long, Long)] =
     df.select("doc_id", "n_tok", "cum_tok", "shard").collect()
@@ -29,11 +26,11 @@ class StreamingCurationSpec extends SparkTestBase {
       .sortBy(_._1).toSeq
 
   test("one micro-batch reproduces the q121 batch plan exactly") {
-    val (idx, out) = (tmp("idx1"), tmp("out1"))
+    val store = tmp("store1")
     val batch = spark.read.parquet(s"$sf/documents.parquet")
-    StreamingCuration.processBatch(batch, 0L, s"$idx/fp", s"$out/shards",
+    StreamingCuration.processBatch(batch, 0L, store,
       budget = 512L, rate = 0.5)
-    val got = canonShards(s"$out/shards")
+    val got = canonShards(store)
     val exp = canonDf(q121(sf))
     assert(got.nonEmpty && got == exp)
   }
@@ -52,20 +49,20 @@ class StreamingCurationSpec extends SparkTestBase {
     val srcUniq = tmp("srcu")
     uniq.write.mode("overwrite").parquet(s"$srcUniq/documents.parquet")
 
-    val (idx, out) = (tmp("idx2"), tmp("out2"))
+    val store = tmp("store2")
     // three doc_id-range batches in ascending order = the stream's
     // arrival order matches the batch plan's doc_id pack order
     val cuts = Seq(0L, 170L, 340L, Long.MaxValue)
     cuts.sliding(2).zipWithIndex.foreach { case (Seq(lo, hi), b) =>
       StreamingCuration.processBatch(
         uniq.filter(col("doc_id") >= lo && col("doc_id") < hi),
-        b.toLong, s"$idx/fp", s"$out/shards", budget = 512L, rate = 0.5)
+        b.toLong, store, budget = 512L, rate = 0.5)
     }
-    val got = canonShards(s"$out/shards")
+    val got = canonShards(store)
     val exp = canonDf(q121(srcUniq))
     assert(got.nonEmpty && got == exp)
     // continuation really happened: batches 2..3 packed at nonzero offsets
-    val perBatchMax = spark.read.parquet(s"$out/shards")
+    val perBatchMax = StreamingCuration.shards(spark, store)
       .groupBy(when(col("doc_id") < 170, 0).when(col("doc_id") < 340, 1)
         .otherwise(2).as("b"))
       .agg(min("cum_tok").as("lo"), max("cum_tok").as("hi"))
@@ -84,25 +81,25 @@ class StreamingCurationSpec extends SparkTestBase {
       (20L, "theta eta zeta epsilon delta gamma beta alpha alpha beta gamma delta", "en"),
       (30L, "one two three four five six seven eight nine", "en"))
       .toDF("doc_id", "text", "lang")
-    val (idx, out) = (tmp("idx3"), tmp("out3"))
-    StreamingCuration.processBatch(b1, 0L, s"$idx/fp", s"$out/shards", 512L, 1.0)
-    StreamingCuration.processBatch(b2, 1L, s"$idx/fp", s"$out/shards", 512L, 1.0)
-    val ids = spark.read.parquet(s"$out/shards")
+    val store = tmp("store3")
+    StreamingCuration.processBatch(b1, 0L, store, 512L, 1.0)
+    StreamingCuration.processBatch(b2, 1L, store, 512L, 1.0)
+    val ids = StreamingCuration.shards(spark, store)
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(ids == Set(10L, 30L))
   }
 
   test("a replayed micro-batch is a no-op (idempotent sinks)") {
-    val (idx, out) = (tmp("idx4"), tmp("out4"))
+    val store = tmp("store4")
     val batch = spark.read.parquet(s"$sf/documents.parquet")
       .filter(col("doc_id") < 100)
     // a replay re-runs the SAME engine batch id
-    StreamingCuration.processBatch(batch, 7L, s"$idx/fp", s"$out/shards", 512L, 0.5)
-    val once = canonShards(s"$out/shards")
-    val idxOnce = spark.read.parquet(s"$idx/fp").count()
-    StreamingCuration.processBatch(batch, 7L, s"$idx/fp", s"$out/shards", 512L, 0.5)
-    assert(canonShards(s"$out/shards") == once)
-    assert(spark.read.parquet(s"$idx/fp").count() == idxOnce)
+    StreamingCuration.processBatch(batch, 7L, store, 512L, 0.5)
+    val once = canonShards(store)
+    val idxOnce = spark.read.parquet(s"$store/fp").count()
+    StreamingCuration.processBatch(batch, 7L, store, 512L, 0.5)
+    assert(canonShards(store) == once)
+    assert(spark.read.parquet(s"$store/fp").count() == idxOnce)
   }
 
   test("a crash mid shard-append replays at the original offsets " +
@@ -112,35 +109,30 @@ class StreamingCurationSpec extends SparkTestBase {
     val b2 = docs.filter(col("doc_id") >= 150 && col("doc_id") < 300)
 
     // clone run: both batches complete — the expected end state
-    val (idxA, outA) = (tmp("idxA"), tmp("outA"))
-    StreamingCuration.processBatch(b1, 0L, s"$idxA/fp", s"$outA/shards", 512L, 0.5)
-    StreamingCuration.processBatch(b2, 1L, s"$idxA/fp", s"$outA/shards", 512L, 0.5)
-    val expected = canonShards(s"$outA/shards")
+    val storeA = tmp("storeA")
+    StreamingCuration.processBatch(b1, 0L, storeA, 512L, 0.5)
+    StreamingCuration.processBatch(b2, 1L, storeA, 512L, 0.5)
+    val expected = canonShards(storeA)
 
-    // crashed run: batch 0 completes; batch 1's first attempt finished the
-    // fp-index append (index-first discipline) but crashed mid shard
-    // append, leaving a PARTIAL set of its shard rows visible
-    val (idxB, outB) = (tmp("idxB"), tmp("outB"))
-    StreamingCuration.processBatch(b1, 0L, s"$idxB/fp", s"$outB/shards", 512L, 0.5)
-    // fp index: bring B to A's post-batch-1 state (the completed append)
-    spark.read.parquet(s"$idxA/fp")
-      .join(spark.read.parquet(s"$idxB/fp").select("fp"), Seq("fp"), "left_anti")
-      .write.mode("append").parquet(s"$idxB/fp")
-    // shards: append just ONE of batch 1's rows, tagged batch_id = 1 —
-    // and make it the row with the LARGEST cum_tok, the worst case for a
-    // max(cum_tok)-derived total
-    val b2rows = spark.read.parquet(s"$outA/shards").filter(col("batch_id") === 1L)
-    b2rows.orderBy(col("cum_tok").desc).limit(1)
-      .write.mode("append").parquet(s"$outB/shards")
-    assert(spark.read.parquet(s"$outB/shards").count() < expected.size)
+    // crashed run: batch 0 completes; batch 1's first attempt wrote both
+    // its fp and its shard partitions, then died before the marker
+    val storeB = tmp("storeB")
+    StreamingCuration.processBatch(b1, 0L, storeB, 512L, 0.5)
+    ParquetCompaction.crashHook =
+      p => if (p == "append-written") throw new RuntimeException("kill")
+    try intercept[RuntimeException] {
+      StreamingCuration.processBatch(b2, 1L, storeB, 512L, 0.5)
+    } finally ParquetCompaction.crashHook = _ => ()
+    assert(new java.io.File(s"$storeB/shards/bid=1").exists())
+    assert(StreamingCuration.shards(spark, storeB).count() < expected.size)
 
     // replay of batch 1 under the same engine batch id
-    StreamingCuration.processBatch(b2, 1L, s"$idxB/fp", s"$outB/shards", 512L, 0.5)
-    assert(canonShards(s"$outB/shards") == expected,
-      "replay after a partial shard append must reproduce the clean run")
+    StreamingCuration.processBatch(b2, 1L, storeB, 512L, 0.5)
+    assert(canonShards(storeB) == expected,
+      "replay after a crash before the marker must reproduce the clean run")
     // and the running total is contiguous: each row's cum_tok is the
     // previous row's plus its own n_tok (global doc_id pack order)
-    val rows = canonShards(s"$outB/shards")
+    val rows = canonShards(storeB)
     rows.foldLeft(0L) { case (prev, (_, n, cum, _)) =>
       assert(cum == prev + n, s"discontinuity at cum_tok=$cum"); cum
     }
@@ -148,31 +140,30 @@ class StreamingCurationSpec extends SparkTestBase {
 
   test("a fresh checkpoint against an existing sink fails loudly " +
       "(ADVICE r10: engine batch ids restart at 0)") {
-    import spark.implicits._
-    val (idx, out) = (tmp("idx7"), tmp("out7"))
-    // a previous run's batch-0 rows: doc_ids disjoint from the new batch
-    Seq((9000001L, 10L, 10L, 0L, 0L))
-      .toDF("doc_id", "n_tok", "cum_tok", "shard", "batch_id")
-      .write.mode("overwrite").parquet(s"$out/shards")
-    val batch = spark.read.parquet(s"$sf/documents.parquet")
-      .filter(col("doc_id") < 150)
-    val e = intercept[IllegalStateException] {
-      StreamingCuration.processBatch(batch, 0L, s"$idx/fp", s"$out/shards",
-        512L, 0.5)
+    val store = tmp("store7")
+    val docs = spark.read.parquet(s"$sf/documents.parquet")
+    // a previous run's batch 0: doc_ids disjoint from the new batch
+    StreamingCuration.processBatch(
+      docs.filter(col("doc_id") >= 150 && col("doc_id") < 300), 0L, store,
+      512L, 0.5)
+    val before = canonShards(store)
+    val batch = docs.filter(col("doc_id") < 150)
+    val e = intercept[IllegalArgumentException] {
+      StreamingCuration.processBatch(batch, 0L, store, 512L, 0.5)
     }
     assert(e.getMessage.contains("checkpoint"))
     // nothing was appended past the guard
-    assert(spark.read.parquet(s"$out/shards").count() == 1)
+    assert(canonShards(store) == before)
   }
 
   test("the full streaming entry point drains a file source end-to-end") {
     val src = tmp("src5")
     spark.read.parquet(s"$sf/documents.parquet")
       .repartition(3).write.mode("overwrite").parquet(src)
-    val (idx, out, ck) = (tmp("idx5"), tmp("out5"), tmp("ck5"))
-    StreamingCuration.run(spark, src, s"$idx/fp", s"$out/shards",
+    val (store, ck) = (tmp("store5"), tmp("ck5"))
+    StreamingCuration.run(spark, src, store,
       s"$ck/ck", budget = 512L, rate = 0.5, maxFilesPerTrigger = 1)
-    val got = spark.read.parquet(s"$out/shards")
+    val got = StreamingCuration.shards(spark, store)
     assert(got.count() > 0)
     // every shipped row passed the gate and the sample, and shard ids are
     // consistent with the packed running total

@@ -8,7 +8,7 @@ class StreamingIngestSpec extends SparkTestBase {
   test("streaming windowed agg over a file source equals the batch computation") {
     val src = java.nio.file.Files.createTempDirectory("graft-stream").toString
     // stage the sf0.001 events as the "landed" sensor files
-    val batchRaw = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
+    val batchRaw = spark.read.parquet(s"$sf/events.parquet")
     batchRaw.write.mode("overwrite").parquet(src)
 
     val streamed = StreamingIngest.runAvailableNow(
@@ -16,7 +16,7 @@ class StreamingIngestSpec extends SparkTestBase {
         StreamingIngest.readEvents(spark, src), "1 hour", "30 minutes"),
       "events_hourly")
 
-    val batch = graft.T.events(spark, "/root/testdata/sf0.001")
+    val batch = graft.T.events(spark, sf)
       .select(col("event_type").as("id"), col("ts"), col("value"))
       .groupBy(window(col("ts"), "1 hour").as("w"), col("id"))
       .agg(count(lit(1)).as("n"), sum(col("value")).as("sum_value"),
@@ -38,14 +38,14 @@ class StreamingIngestSpec extends SparkTestBase {
 
   test("streaming session windows equal the batch session computation") {
     val src = java.nio.file.Files.createTempDirectory("graft-sess").toString
-    spark.read.parquet("/root/testdata/sf0.001/events.parquet")
+    spark.read.parquet(s"$sf/events.parquet")
       .write.mode("overwrite").parquet(src)
 
     val streamed = StreamingIngest.runAvailableNow(
       StreamingIngest.sessionAgg(StreamingIngest.readEvents(spark, src)),
       "events_sessions")
 
-    val batch = graft.T.events(spark, "/root/testdata/sf0.001")
+    val batch = graft.T.events(spark, sf)
       .select(col("event_type").as("id"), col("ts"), col("value"))
       .groupBy(session_window(col("ts"), "30 minutes").as("w"), col("id"))
       .agg(count(lit(1)).as("n"), sum(col("value")).as("sum_value"))
@@ -63,9 +63,9 @@ class StreamingIngestSpec extends SparkTestBase {
 
   test("stream-static hybrid join: graph-enriched streaming agg equals batch") {
     val src = java.nio.file.Files.createTempDirectory("graft-hybrid").toString
-    spark.read.parquet("/root/testdata/sf0.001/events.parquet")
+    spark.read.parquet(s"$sf/events.parquet")
       .write.mode("overwrite").parquet(src)
-    val g = graft.sparql.TpchGraph.graph(spark, "/root/testdata/sf0.001")
+    val g = graft.sparql.TpchGraph.graph(spark, sf)
 
     // stream: events → static-graph sensor enrichment → per-sensor windows
     val enriched = StreamingIngest
@@ -75,7 +75,7 @@ class StreamingIngestSpec extends SparkTestBase {
       StreamingIngest.windowedAgg(enriched), "hybrid_hourly")
 
     // batch truth: identical transform over the batch frame
-    val batchEvents = graft.T.events(spark, "/root/testdata/sf0.001")
+    val batchEvents = graft.T.events(spark, sf)
       .select(col("event_type").as("id"), col("ts"), col("value"))
     val batch = StreamingIngest.enrichWithSensors(batchEvents, g)
       .select(col("sensor").as("id"), col("ts"), col("value"))
@@ -98,7 +98,7 @@ class StreamingIngestSpec extends SparkTestBase {
 
   test("streaming dedup emits exactly one document per fingerprint (stream == batch)") {
     val src = java.nio.file.Files.createTempDirectory("graft-docs").toString
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    val docs = spark.read.parquet(s"$sf/documents.parquet")
     docs.write.mode("overwrite").parquet(src)
 
     val streamed = StreamingDedup.runAvailableNow(
@@ -124,7 +124,7 @@ class StreamingIngestSpec extends SparkTestBase {
 
   test("stream-stream interval join equals the batch interval join") {
     val src = java.nio.file.Files.createTempDirectory("graft-ssj").toString
-    spark.read.parquet("/root/testdata/sf0.001/events.parquet")
+    spark.read.parquet(s"$sf/events.parquet")
       .write.mode("overwrite").parquet(src)
 
     val streamed = StreamingIngest.runAvailableNow(
@@ -135,7 +135,7 @@ class StreamingIngestSpec extends SparkTestBase {
       "events_interval_join", mode = "append")
 
     // batch truth: the same per-series bounded-interval pairing
-    val base = graft.T.events(spark, "/root/testdata/sf0.001")
+    val base = graft.T.events(spark, sf)
       .select(col("event_type").as("id"), col("ts"), col("value"))
     val l = base.select(col("id"), col("ts").as("l_ts"), col("value").as("l_value"))
     val r = base.select(col("id").as("r_id"), col("ts").as("r_ts"),

@@ -20,7 +20,7 @@ class StreamingIvfSpec extends SparkTestBase {
   }
 
   test("streamed vectors serve identically to a batch append; replay is a no-op") {
-    val emb = graft.T.embeddings(spark, "/root/testdata/sf0.001")
+    val emb = graft.T.embeddings(spark, sf)
       .localCheckpoint()
     val first = emb.filter(col("vec_id") % 2 === 0)
     val late = emb.filter(col("vec_id") % 2 === 1 && col("vec_id") < 200)

@@ -51,8 +51,67 @@ class StreamingNearDupSpec extends SparkTestBase {
     kept.keys.toSeq
   }
 
+  private def docs(rows: (Long, String)*) = spark.createDataFrame(
+    spark.sparkContext.parallelize(rows.map(d => Row(d._1, d._2, "en")), 1),
+    StreamingFold.docSchema)
+
+  private def processBatch(batch: org.apache.spark.sql.DataFrame,
+      batchId: Long, store: String): Unit =
+    StreamingNearDup.processBatch(batch, batchId, store, shingleN = 3,
+      numHashes = 128, rowsPerBand = 2, threshold = 0.5, numBands = 64)
+
+  private def survivorIds(store: String): Set[Long] =
+    StreamingNearDup.survivors(spark, store).select("doc_id").collect()
+      .map(_.getLong(0)).toSet
+
+  private val fox = "the quick brown fox jumps over the lazy dog"
+  private val b0 = docs(1L -> "pack my box with five dozen liquor jugs now")
+  // doc 11 is doc 10's text plus one word: J = 7/8, a near-dup of 10
+  private val b1 = docs(10L -> fox, 11L -> s"$fox brown",
+    12L -> "how vexingly quick daft zebras jump over walls")
+
+  private def tmpStore(tag: String): String =
+    java.nio.file.Files.createTempDirectory(s"graft-neardup-$tag").toString
+
+  test("a batch replayed after a crash before the marker keeps its " +
+      "survivors (its own index partition never counts against it)") {
+    val clean = tmpStore("clean")
+    processBatch(b0, 0L, clean)
+    processBatch(b1, 1L, clean)
+    assert(survivorIds(clean) == Set(1L, 10L, 12L))
+
+    // the index append landed, the output append was lost, and the
+    // marker never committed; then the engine replays batch 1
+    val crashed = tmpStore("crashed")
+    processBatch(b0, 0L, crashed)
+    graft.sources.ParquetCompaction.crashHook =
+      p => if (p == "append-written") throw new RuntimeException("kill")
+    try intercept[RuntimeException](processBatch(b1, 1L, crashed))
+    finally graft.sources.ParquetCompaction.crashHook = _ => ()
+    assert(new java.io.File(s"$crashed/index/bid=1").exists())
+    org.apache.commons.io.FileUtils.deleteDirectory(
+      new java.io.File(s"$crashed/out/bid=1"))
+    processBatch(b1, 1L, crashed)
+    assert(survivorIds(crashed) == Set(1L, 10L, 12L))
+  }
+
+  test("a fresh checkpoint against a committed store fails loudly") {
+    val store = tmpStore("fresh")
+    processBatch(b0, 0L, store)
+    processBatch(b1, 1L, store)
+    // engine batch ids restart at 0 under a reset checkpoint
+    val e0 = intercept[IllegalArgumentException](
+      processBatch(docs(20L -> "sphinx of black quartz judge my vow"), 0L,
+        store))
+    assert(e0.getMessage.contains("reset the checkpoint and the"))
+    // one batch behind: the same id as the latest, different rows
+    val e1 = intercept[IllegalArgumentException](processBatch(b0, 1L, store))
+    assert(e1.getMessage.contains("rows differ from the committed batch"))
+    assert(survivorIds(store) == Set(1L, 10L, 12L))
+  }
+
   test("streamed near-dup suppression equals the sequential reference") {
-    val base = graft.T.documents(spark, "/root/testdata/sf0.001")
+    val base = graft.T.documents(spark, sf)
       .select("doc_id", "text", "lang").limit(30).collect()
       .map(r => (r.getLong(0), r.getString(1), r.getString(2)))
     val maxId = base.map(_._1).max
@@ -87,11 +146,11 @@ class StreamingNearDupSpec extends SparkTestBase {
     fa.setLastModified(fa.lastModified() - 60000)
     writeFile(fileB, "b.parquet")
 
-    StreamingNearDup.run(spark, src.toString,
-      tmp.resolve("index").toString, tmp.resolve("out").toString,
+    val store = tmp.resolve("store").toString
+    StreamingNearDup.run(spark, src.toString, store,
       tmp.resolve("ckpt").toString)
 
-    val got = spark.read.parquet(tmp.resolve("out").toString)
+    val got = StreamingNearDup.survivors(spark, store)
       .select("doc_id").collect().map(_.getLong(0)).toSet
     val expected = referenceFold(Seq(
       fileA.map(d => (d._1, d._2)), fileB.map(d => (d._1, d._2))), 0.5).toSet
@@ -102,20 +161,18 @@ class StreamingNearDupSpec extends SparkTestBase {
       s"stream=${got.toSeq.sorted} reference=${expected.toSeq.sorted}")
 
     // crash-replay idempotency: re-running an already-committed batch
-    // (index append done, checkpoint commit lost) must not self-match the
-    // replayed survivors out of existence, re-drop them from the output,
-    // or duplicate them in the index/output
+    // (store commit done, checkpoint commit lost) under its engine batch
+    // id must not self-match the replayed survivors out of existence,
+    // re-drop them from the output, or duplicate them in the index/output
     val batchB = spark.createDataFrame(
       spark.sparkContext.parallelize(fileB.map(d => Row(d._1, d._2, d._3)), 1),
       schema)
-    StreamingNearDup.processBatch(batchB, tmp.resolve("index").toString,
-      tmp.resolve("out").toString, shingleN = 3, numHashes = 128,
-      rowsPerBand = 2, threshold = 0.5, numBands = 64)
-    val afterOut = spark.read.parquet(tmp.resolve("out").toString)
+    processBatch(batchB, 1L, store)
+    val afterOut = StreamingNearDup.survivors(spark, store)
       .select("doc_id").collect().map(_.getLong(0)).toSeq
     assert(afterOut.sorted == got.toSeq.sorted,
       "replaying a committed batch changed the output")
-    val idxIds = spark.read.parquet(tmp.resolve("index").toString)
+    val idxIds = spark.read.parquet(s"$store/index")
       .select("id").collect().map(_.getLong(0)).toSeq
     assert(idxIds.distinct.size == idxIds.size,
       "replaying a committed batch duplicated index rows")

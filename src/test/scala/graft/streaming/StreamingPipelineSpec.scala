@@ -19,7 +19,7 @@ class StreamingPipelineSpec extends SparkTestBase {
 
   private def stage(): String = {
     val src = java.nio.file.Files.createTempDirectory("graft-docs").toString
-    spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    spark.read.parquet(s"$sf/documents.parquet")
       .write.mode("overwrite").parquet(src)
     src
   }

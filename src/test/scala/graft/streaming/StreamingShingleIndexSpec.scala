@@ -11,7 +11,6 @@ import org.apache.spark.sql.functions._
   * compaction keeps the epoch mapping intact. */
 class StreamingShingleIndexSpec extends SparkTestBase {
 
-  private val sf = "/root/testdata/sf0.001"
 
   private def tmp(tag: String): String =
     java.nio.file.Files.createTempDirectory(s"graft-shstream-$tag").toString
