@@ -153,7 +153,7 @@ object NightlyCuration {
       () => ShingleIndex.appendToIndex(spark, stores.shingle, admitted,
         idCol, textCol): Unit,
       () => TextIndex.appendToIndex(spark, stores.text, admitted, idCol,
-        textCol),
+        textCol): Unit,
       () => AnnOps.appendToIvfIndex(spark, stores.ivf, admittedEmb,
         dim): Unit,
       () => SimGraphStore.update(spark, stores.graph, admitted, idCol,
@@ -210,8 +210,8 @@ object NightlyCuration {
         SimGraphStore.compact(spark, stores.graph)
         Seq("graph: compacted (delta depth)")
       } else Nil,
-      () => if (graft.sources.ParquetCompaction.dataFileCount(spark,
-          s"${stores.text}/postings") > maxDataFiles) {
+      () => if (TextIndex.postingsFiles(spark, stores.text) >
+          maxDataFiles) {
         TextIndex.compactIndex(spark, stores.text)
         Seq("text: compacted (small files)")
       } else Nil,

@@ -94,8 +94,7 @@ object Retrieval {
       spark: org.apache.spark.sql.SparkSession, path: String,
       queries: DataFrame, idCol: String, textCol: String,
       dfCap: Long): DataFrame = {
-    graft.sources.ParquetCompaction.recover(spark, s"$path/postings")
-    graft.sources.ParquetCompaction.recover(spark, s"$path/df")
+    graft.sources.ParquetCompaction.recover(spark, path)
     val (nBuckets, _, _) = TextIndex.readMeta(spark, path)
     val qtok = queries.select(col(idCol).cast(LongType).as("qid"),
         explode(array_distinct(TextOps.tokens(col(textCol)))).as("term"))
@@ -104,11 +103,12 @@ object Retrieval {
     val buckets = qtok
       .select(pmod(xxhash64(col("term")), lit(nBuckets)).as("tb"))
       .distinct().collect().map(_.getLong(0)).toSeq
-    val rare = spark.read.parquet(s"$path/df")
-      .filter(col("tb").isin(buckets: _*) && col("dfc") <= dfCap)
+    // the cap applies to the df summed over epochs, never to a delta
+    val rare = TextIndex.documentFrequencies(spark, path)
+      .filter(col("tb").isin(buckets: _*)).filter(col("dfc") <= dfCap)
       .select("term")
     val qrare = qtok.join(rare, "term")
-    val postings = spark.read.parquet(s"$path/postings")
+    val postings = TextIndex.postings(spark, path)
       .filter(col("tb").isin(buckets: _*))
       .select(col("term"), col("doc_id").as("nid"))
     qrare.join(postings, "term")

@@ -30,11 +30,8 @@ import org.apache.spark.sql.types._
   *    epochs (Zipf-small work; [[compactIndex]] keeps it merged).
   *  - `sigs/` — per-doc (id, sh, hs) verify signatures
   *    ([[TextOps.shingleSigs]] shape), partitioned by ep.
-  *  - `_epochs/<k>` — the commit markers (build = epoch 0) of the
-  *    [[graft.sources.AppendLog]] the three sub-datasets are partitioned
-  *    under (`ep=<k>/`): an append's three writes are not atomic
-  *    together, so the marker is the commit, and the log's discipline
-  *    makes a crashed append's retry exact.
+  *  - `_epochs/<k>` — the [[graft.sources.AppendLog]] markers that
+  *    commit the (`ep=<k>/`-partitioned) epochs; the build is epoch 0.
   *  - `_graft_shingle_meta.json` — nBuckets, n, layout version.
   *
   * Rank staleness across epochs (the exactness story VERDICT r11 #1 asked
@@ -110,12 +107,8 @@ object ShingleIndex {
     * ranking window. Replaces anything already at `path`. */
   def build(docs: DataFrame, idCol: String, textCol: String, path: String,
       n: Int = 3, nBuckets: Int = 64): Unit = {
-    import org.apache.hadoop.fs.Path
     val spark = docs.sparkSession
-    graft.sources.ParquetCompaction.recover(spark, path)
-    val root = new Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(root)) fs.delete(root, true)
+    log.reset(spark, path)
     // the corpus signature the epoch-0 marker carries rides this pass
     val observed = AppendLog.observeSig(docs, idCol, textCol)
     val base = TextOps.shingleSigs(observed.frame, idCol, textCol, n)
@@ -165,9 +158,7 @@ object ShingleIndex {
     * Batch postings rank in the POST-MERGE df order (current committed df
     * + this batch's own deltas — the snapshot the epoch's commit makes
     * current), df deltas append, signatures append; the `_epochs` marker
-    * is the commit. A crash before the marker leaves invisible orphan
-    * `ep=` partitions that the retry wipes before reusing the id.
-    * Returns the committed epoch id.
+    * is the commit. Returns the committed epoch id.
     *
     * `explicitEp` is the streaming seam: a `foreachBatch` maintainer
     * passes the ENGINE's batch id (offset by the build epoch — see
@@ -177,15 +168,11 @@ object ShingleIndex {
   def appendToIndex(spark: SparkSession, path: String, batch: DataFrame,
       idCol: String, textCol: String,
       explicitEp: Option[Long] = None): Long = {
-    graft.sources.ParquetCompaction.recover(spark, path)
-    val (nBuckets, n) = readMeta(spark, path)
-    log.cleanOrphans(spark, path)
-    val latest = log.latest(spark, path)
-    require(latest >= 0L, s"no built index to append to at $path")
-    val ep = AppendLog.resolveId(latest, explicitEp,
-      log.sig(spark, path, latest),
+    val ep = log.begin(spark, path, explicitEp,
       AppendLog.batchSig(batch, idCol, textCol),
-      s"index at $path").getOrElse(return latest)
+      s"index at $path").getOrElse(return explicitEp.get)
+    // a readable meta means a committed epoch 0: the build writes it last
+    val (nBuckets, n) = readMeta(spark, path)
     // the batch signature the marker carries rides the signature pass
     // (map-only over the batch: the observation is in its result stage)
     val observed = AppendLog.observeSig(batch, idCol, textCol)
@@ -303,35 +290,26 @@ object ShingleIndex {
 
   /** Compact + refresh: merge the df delta ledger, RE-RANK every stored
     * posting under the current global (df asc, shingle asc) order, and
-    * fold all epochs into one (id = the latest committed, the
-    * [[SimGraphStore]] keep-max discipline) — restoring full positional
-    * pruning after a run of appends and resetting the small-files growth.
-    * Whole-store rewrite-then-swap ([[graft.sources.ParquetCompaction
-    * .rewrite]]), so a kill at any stage leaves the old or the new store,
-    * never a mix; output of every serve is unchanged (spec-pinned). */
-  def compactIndex(spark: SparkSession, path: String): Unit = {
-    graft.sources.ParquetCompaction.recover(spark, path)
-    log.cleanOrphans(spark, path)
-    val (nBuckets, n) = readMeta(spark, path)
-    val keep = log.latest(spark, path)
-    if (keep < 0L) return
-    // the kept epoch stays replayable after the fold: carry its replay
-    // signature into the rewritten marker (read BEFORE the swap deletes
-    // the old one), so a post-compaction replay of the last batch still
-    // content-verifies
-    val keepSig = log.sig(spark, path, keep).get
-    // materialize the folds BEFORE the swap deletes their input files
-    val sigs = log.read(spark, path, "sigs", sigsSchema)
-      .select("id", "sh", "hs").localCheckpoint()
-    val dfAll = log.read(spark, path, "df", dfSchema)
-      .groupBy("s").agg(sum("df").as("df")).localCheckpoint()
-    val ranked = log.read(spark, path, "postings", postingsSchema)
-      .select("id", "sz", "s").join(dfAll, "s")
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("id").orderBy(col("df"), col("s"))))
-      .select(col("id"), col("sz"), col("s"), col("rn"))
-      .localCheckpoint()
-    graft.sources.ParquetCompaction.rewrite(spark, path) { tmp =>
+    * fold all epochs into the latest committed one ([[AppendLog.fold]]:
+    * a kill at any stage leaves the old or the new store, never a mix) —
+    * restoring full positional pruning after a run of appends and
+    * resetting the small-files growth. Output of every serve is unchanged
+    * (spec-pinned). */
+  def compactIndex(spark: SparkSession, path: String): Unit =
+    log.fold(spark, path) { (tmp, keep) =>
+      val (nBuckets, n) = readMeta(spark, path)
+      // materialize the folds: the df fold feeds both the df write and
+      // the re-ranking, which then run concurrently
+      val sigs = log.read(spark, path, "sigs", sigsSchema)
+        .select("id", "sh", "hs").localCheckpoint()
+      val dfAll = log.read(spark, path, "df", dfSchema)
+        .groupBy("s").agg(sum("df").as("df")).localCheckpoint()
+      val ranked = log.read(spark, path, "postings", postingsSchema)
+        .select("id", "sz", "s").join(dfAll, "s")
+        .withColumn("rn", row_number().over(
+          Window.partitionBy("id").orderBy(col("df"), col("s"))))
+        .select(col("id"), col("sz"), col("s"), col("rn"))
+        .localCheckpoint()
       // three checkpointed folds into disjoint temp sub-dirs (guide §2.6)
       graft.sources.ParJobs.run(Seq(
         () => sigs.withColumn("ep", lit(keep))
@@ -344,12 +322,8 @@ object ShingleIndex {
           .withColumn("sb", pmod(xxhash64(col("s")), lit(nBuckets)))
           .repartition(col("sb"))
           .write.partitionBy("ep", "sb").parquet(s"$tmp/postings")))
-      graft.sources.MetaSidecar.write(spark, tmp, metaFile,
-        Seq("nBuckets" -> nBuckets.toString, "n" -> n.toString,
-          "v" -> "2"))
-      log.commit(spark, tmp, keep, keepSig)
+      writeMeta(spark, tmp, nBuckets, n)
     }
-  }
 
   /** Operational compaction dial (the [[SimGraphStore.compactionDue]]
     * pattern), set from the r13 cadence rehearsal (10 sequential

@@ -23,13 +23,8 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   *    df, so stale rows are dead weight until [[compact]] drops them).
   *  - `df/`     — (s, df, bid) document-frequency deltas; current df =
   *    SUM per shingle.
-  *  - `_batches/<bid>` — the commit markers of the
-  *    [[graft.sources.AppendLog]] the three sub-datasets are partitioned
-  *    under (`bid=<k>/`): an update's three appends are not atomic
-  *    together, so the marker is the commit point and the log's
-  *    discipline — committed-only reads, orphan cleanup before an id is
-  *    reused, the latest-id replay rule — makes a crashed update's retry
-  *    exact rather than double-counted.
+  *  - `_batches/<bid>` — the [[graft.sources.AppendLog]] markers that
+  *    commit an update's three (`bid=<k>/`-partitioned) appends.
   *
   * Update math (exactness argument): for a pair (a, b) and a common
   * shingle s, a +1 is appended exactly when the LATER of the two arrives
@@ -158,14 +153,10 @@ object SimGraphStore {
   def update(spark: SparkSession, path: String, batch: DataFrame,
       idCol: String, textCol: String,
       explicitBid: Option[Long] = None): Long = {
-    graft.sources.ParquetCompaction.recover(spark, path)
-    log.cleanOrphans(spark, path)
-    val (n, cap, _) = readMeta(spark, path)
-    val latest = log.latest(spark, path)
-    val bid = AppendLog.resolveId(latest, explicitBid,
-      log.sig(spark, path, latest),
+    val bid = log.begin(spark, path, explicitBid,
       AppendLog.batchSig(batch, idCol, textCol),
-      s"store at $path").getOrElse(return latest)
+      s"store at $path").getOrElse(return explicitBid.get)
+    val (n, cap, _) = readMeta(spark, path)
     // batch postings: one row per (doc, DISTINCT shingle); the batch's
     // signature rides this pass (the postings are map-only over the
     // batch, so the observation sits in the checkpoint's result stage)
@@ -203,12 +194,8 @@ object SimGraphStore {
         when(col("crossed"), lit(-1L)).otherwise(lit(1L)).as("sign"))
       .agg(count(lit(1)).as("n"))
       .select(col("a"), col("b"), (col("sign") * col("n")).as("c"))
-    // appends into this batch's own bid= partition (orphaned on a crash —
-    // invisible until the marker commits, wiped by the retry's cleanup).
-    // The three sub-dataset writes are independent until the marker (the
-    // commit point), so they run CONCURRENTLY (guide §2.6) — their
-    // inputs are the checkpoints (bp, j) plus the committed store, and
-    // they land in disjoint directories.
+    // three writes into disjoint bid= partitions, committed by the
+    // marker: they run CONCURRENTLY (guide §2.6)
     graft.sources.ParJobs.run(Seq(
       () => deltas.withColumn("bid", lit(bid))
         .write.mode("append").partitionBy("bid").parquet(s"$path/edges"),
@@ -249,22 +236,10 @@ object SimGraphStore {
   /** Semantic compaction: fold edge deltas (dropping pairs whose support
     * reached 0 — provably final, see the class doc), drop postings whose
     * shingle has crossed the cap, merge the df ledger, and reset the batch
-    * log to a single committed id. Whole-store rewrite-then-swap, so a
-    * kill at any point leaves either the old or the new store. */
-  def compact(spark: SparkSession, path: String): Unit = {
-    graft.sources.ParquetCompaction.recover(spark, path)
-    log.cleanOrphans(spark, path)
-    val (n, cap, minCommon) = readMeta(spark, path)
-    val keepBid = log.latest(spark, path)
-    // no committed batches → nothing to fold, and writing a marker for id
-    // 0 here would make a later stream's FIRST fold (engine batch id 0)
-    // look like a replay and silently skip — so an empty store is a no-op
-    if (keepBid < 0L) return
-    // carry the kept id's replay signature into the rewritten marker
-    // (read BEFORE the swap), so a post-compaction replay of the last
-    // batch still content-verifies
-    val keepSig = log.sig(spark, path, keepBid).get
-    graft.sources.ParquetCompaction.rewrite(spark, path) { tmp =>
+    * log to a single committed id ([[AppendLog.fold]]). */
+  def compact(spark: SparkSession, path: String): Unit =
+    log.fold(spark, path) { (tmp, keepBid) =>
+      val (n, cap, minCommon) = readMeta(spark, path)
       val mergedEdges = log.read(spark, path, "edges", edgeSchema)
         .groupBy("a", "b").agg(sum("c").as("c"))
         .filter(col("c") =!= 0L).withColumn("bid", lit(keepBid))
@@ -282,7 +257,5 @@ object SimGraphStore {
       graft.sources.MetaSidecar.write(spark, tmp, metaFile,
         Seq("n" -> n.toString, "cap" -> cap.toString,
           "minCommon" -> minCommon.toString))
-      log.commit(spark, tmp, keepBid, keepSig)
     }
-  }
 }

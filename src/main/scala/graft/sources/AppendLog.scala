@@ -8,7 +8,8 @@ import scala.concurrent.Future
 import scala.concurrent.duration.FiniteDuration
 
 /** The marker-committed append log behind the id-disciplined stores
-  * ([[graft.llm.SimGraphStore]], [[graft.llm.ShingleIndex]], the
+  * ([[graft.llm.SimGraphStore]], [[graft.llm.ShingleIndex]],
+  * [[graft.llm.TextIndex]], the
   * [[graft.streaming.StreamingNightlyCuration]] staging manifest, the
   * [[graft.streaming.StreamingCuration]] and
   * [[graft.streaming.StreamingNearDup]] sinks): the
@@ -39,10 +40,11 @@ import scala.concurrent.duration.FiniteDuration
   * miss. The replay path ([[resolveId]]) still evaluates [[batchSig]] by
   * name, since it runs before any pass over the batch.
   *
-  * Methods take the root, so a compaction commits into its rewrite temp
-  * ([[ParquetCompaction.rewrite]]) with the signature of the id it folds
-  * into. Callers recover the root before first touch (the
-  * ParquetCompaction invariant). */
+  * Every append starts with [[begin]] and every compaction is a [[fold]],
+  * which own the order of these steps. Methods take the root, so a fold
+  * commits into its rewrite temp ([[ParquetCompaction.rewrite]]) with the
+  * signature of the id it folds into. Readers recover the root before
+  * first touch (the ParquetCompaction invariant). */
 final case class AppendLog(markerDir: String, key: String,
     subs: Seq[String]) {
   import AppendLog._
@@ -98,6 +100,47 @@ final case class AppendLog(markerDir: String, key: String,
   def sig(spark: SparkSession, root: String, id: Long): Option[Long] =
     readLong(spark, new Path(new Path(root, markerDir), id.toString))
 
+  /** Every append's preamble, in the one order that keeps a retry exact:
+    * recover the root before first touch, delete orphans BEFORE their id
+    * is reused, then [[resolveId]] against the latest id. Returns the id
+    * to write, None for a verified replay of `explicit`. */
+  def begin(spark: SparkSession, root: String, explicit: Option[Long],
+      rowsSig: => Long, noun: String): Option[Long] = {
+    ParquetCompaction.recover(spark, root)
+    cleanOrphans(spark, root)
+    val last = latest(spark, root)
+    resolveId(last, explicit, sig(spark, root, last), rowsSig, noun)
+  }
+
+  /** Fold every committed id into the latest, `keep`, by a whole-root
+    * [[ParquetCompaction.rewrite]]: `write(tmp, keep)` fills the temp,
+    * then keep's marker is committed there with its signature read before
+    * the swap, so a replay of the last batch still verifies. A root with
+    * no committed id is left alone: an id-0 marker would make a stream's
+    * first batch look like a replay. */
+  def fold(spark: SparkSession, root: String)(
+      write: (String, Long) => Unit): Unit = {
+    ParquetCompaction.recover(spark, root)
+    cleanOrphans(spark, root)
+    val keep = latest(spark, root)
+    if (keep >= 0L) {
+      val keepSig = sig(spark, root, keep).get
+      ParquetCompaction.rewrite(spark, root) { tmp =>
+        write(tmp, keep)
+        commit(spark, tmp, keep, keepSig)
+      }
+    }
+  }
+
+  /** Delete the store at `root` (and any compaction temp beside it), so a
+    * build starts from nothing and no older marker survives it. */
+  def reset(spark: SparkSession, root: String): Unit = {
+    ParquetCompaction.recover(spark, root)
+    val dir = new Path(root)
+    val fs = fileSystem(spark, dir)
+    if (fs.exists(dir)) fs.delete(dir, true)
+  }
+
   private def subDir(root: String, sub: String): Path =
     if (sub.isEmpty) new Path(root) else new Path(root, sub)
 }
@@ -122,15 +165,18 @@ object AppendLog {
     sigOf(frame.agg(aggs.head, aggs.tail: _*).collect()(0))
   }
 
-  /** `batch` with [[batchSig]]'s aggregates attached by `Dataset.observe`,
-    * so the signature rides a pass the caller already runs. */
-  def observeSig(batch: DataFrame, idCol: String,
-      textCol: String): ObservedSig =
-    observeHashSig(batch, rowHash(idCol, textCol))
+  /** `batch` with [[batchSig]]'s aggregates, and any `extra` named Long
+    * aggregates over its columns, attached by `Dataset.observe`, so the
+    * signature rides a pass the caller already runs. */
+  def observeSig(batch: DataFrame, idCol: String, textCol: String,
+      extra: Column*): ObservedSig =
+    observeHashSig(batch, rowHash(idCol, textCol), extra: _*)
 
-  /** [[hashSig]]'s aggregates over `frame` attached by `Dataset.observe`. */
-  def observeHashSig(frame: DataFrame, h: Column): ObservedSig =
-    new ObservedSig(Observed(frame, sigAggs(h)))
+  /** [[hashSig]]'s aggregates, then `extra`, over `frame` attached by
+    * `Dataset.observe`. */
+  def observeHashSig(frame: DataFrame, h: Column,
+      extra: Column*): ObservedSig =
+    new ObservedSig(Observed(frame, sigAggs(h) ++ extra))
 
   /** A signature observed on the pass that reads [[frame]] (see
     * [[Observed]] for where that pass must put the observation, and for
@@ -143,6 +189,9 @@ object AppendLog {
 
     /** How many rows [[frame]] read. */
     def rows: Long = observed.row.getLong(3)
+
+    /** The value of the `i`-th `extra` aggregate (after sigAggs' four). */
+    def extra(i: Int): Long = observed.row.getLong(4 + i)
 
     /** The same signature read from `observation` with `wait`. */
     private[graft] def awaiting(observation: Future[Row],

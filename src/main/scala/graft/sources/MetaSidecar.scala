@@ -3,12 +3,12 @@ package graft.sources
 import org.apache.spark.sql.SparkSession
 
 /** Tiny flat-JSON sidecar shared by the persisted index layouts (BM25
-  * text index, shingle-postings index, triples store, IVF meta). One
-  * writer at a time; a whole-file rewrite is the commit, like every
-  * non-transactional parquet layout here. Extracted because three
-  * structurally identical copies of the create/open + regex-field logic
-  * had grown (code-review r11) — a quoting or charset fix must land
-  * once, not thrice. */
+  * text index and its per-epoch stats, shingle-postings index, triples
+  * store, IVF meta). One writer at a time; in the [[AppendLog]] stores the
+  * marker written after a sidecar commits it, elsewhere a whole-file
+  * rewrite is the commit. Extracted because three structurally identical
+  * copies of the create/open + regex-field logic had grown (code-review
+  * r11) — a quoting or charset fix must land once, not thrice. */
 object MetaSidecar {
 
   private def fileSystem(spark: SparkSession, dir: String) =

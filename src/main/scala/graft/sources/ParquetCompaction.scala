@@ -37,8 +37,8 @@ import org.apache.spark.sql.functions.col
   * that blindly append-creates the missing root makes the state
   * ambiguous, and the next [[recover]] — seeing a live root — discards
   * the temp, silently losing the pre-crash history. All in-repo
-  * consumers (the [[AppendLog]] stores, TextIndex
-  * appendToIndex/bm25FromIndex, AnnOps appendToIvfIndex/
+  * consumers (the [[AppendLog]] stores, through [[AppendLog.begin]] and
+  * [[AppendLog.fold]] on the write side, and AnnOps appendToIvfIndex/
   * ivfTopKFromIndex) recover first; external callers must too.
   *
   * Row-for-row identical contents, so replay/idempotence discipline

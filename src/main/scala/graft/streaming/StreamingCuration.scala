@@ -30,16 +30,12 @@ import org.apache.spark.sql.types._
   *
   * Store layout under one root: `fp/` (fp, doc_id) and `shards/`
   * (doc_id, n_tok, cum_tok, shard, batch_id), both partitioned under the
-  * [[graft.sources.AppendLog]] whose `_batches/<bid>` markers commit them,
-  * keyed by the engine's batch id. The two appends are not atomic
-  * together, so the marker is the commit point and the log's discipline
-  * gives exactly-once: every read (the dedup index, the lifetime total)
-  * sees committed rows only, a crashed attempt's partitions are deleted
-  * before its id is reused, a replay of the latest id with the same rows
-  * is skipped, and a fresh checkpoint over an existing store (engine ids
-  * restarting at 0) fails loudly — checkpoint and store are reset
-  * together. `batch_id` is the originating batch; [[compactSinks]] folds
-  * the log's `bid` partitions but keeps it.
+  * [[graft.sources.AppendLog]] whose `_batches/<bid>` markers, keyed by
+  * the engine's batch id, commit them exactly once: every read (the dedup
+  * index, the lifetime total) sees committed rows only, and a fresh
+  * checkpoint over an existing store fails loudly — checkpoint and store
+  * are reset together. `batch_id` is the originating batch;
+  * [[compactSinks]] folds the log's `bid` partitions but keeps it.
   *
   * Scale: every stage is the corresponding batch operator's shape — no
   * single-reducer window (the pack is the two-phase prefix sum), no
@@ -75,38 +71,26 @@ object StreamingCuration {
   }
 
   /** Compact both sink tables into the latest committed id (each
-    * micro-batch appends one small file to each). Whole-store
-    * rewrite-then-swap carrying that id's replay signature, so a kill at
-    * any point leaves the old or the new store and a post-compaction
-    * replay still verifies. An empty store is a no-op: a marker for id 0
-    * would make a stream's first batch look like a replay. Run between
-    * micro-batches (maintenance slot), not concurrently with one. */
-  def compactSinks(spark: SparkSession, storeDir: String): Unit = {
-    ParquetCompaction.recover(spark, storeDir)
-    log.cleanOrphans(spark, storeDir)
-    val keep = log.latest(spark, storeDir)
-    if (keep < 0L) return
-    val keepSig = log.sig(spark, storeDir, keep).get
-    ParquetCompaction.rewrite(spark, storeDir) { tmp =>
+    * micro-batch appends one small file to each) through
+    * [[AppendLog.fold]]: a kill at any point leaves the old or the new
+    * store, a post-compaction replay still verifies, and an empty store
+    * is a no-op. Run between micro-batches (maintenance slot), not
+    * concurrently with one. */
+  def compactSinks(spark: SparkSession, storeDir: String): Unit =
+    log.fold(spark, storeDir) { (tmp, keep) =>
       def fold(sub: String, schema: StructType): () => Unit = () =>
         log.read(spark, storeDir, sub, schema)
           .withColumn("bid", lit(keep)).repartition(1)
           .write.partitionBy("bid").parquet(s"$tmp/$sub")
       ParJobs.run(Seq(fold("fp", fpSchema), fold("shards", shardsSchema)))
-      log.commit(spark, tmp, keep, keepSig)
     }
-  }
 
   /** One micro-batch. `batchId` must be the engine's replay-stable batch
     * id (foreachBatch's second argument): it is the log's commit id. */
   private[streaming] def processBatch(batch: DataFrame, batchId: Long,
       storeDir: String, budget: Long, rate: Double): Unit = {
     val spark = batch.sparkSession
-    ParquetCompaction.recover(spark, storeDir)
-    log.cleanOrphans(spark, storeDir)
-    val latest = log.latest(spark, storeDir)
-    val bid = AppendLog.resolveId(latest, Some(batchId),
-      log.sig(spark, storeDir, latest),
+    val bid = log.begin(spark, storeDir, Some(batchId),
       AppendLog.batchSig(batch, "doc_id", "text"),
       s"curation store at $storeDir").getOrElse(return)
 
@@ -142,8 +126,7 @@ object StreamingCuration {
         budget, startAt)
       .withColumn("batch_id", lit(batchId))
 
-    // both appends land in this id's own bid= partitions (orphans until
-    // the marker commits) — disjoint directories, so they run concurrently
+    // two writes into disjoint bid= partitions, committed by the marker
     ParJobs.run(Seq(
       () => fresh.select("fp", "doc_id").withColumn("bid", lit(bid))
         .write.mode("append").partitionBy("bid").parquet(s"$storeDir/fp"),

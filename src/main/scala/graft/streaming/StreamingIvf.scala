@@ -23,8 +23,11 @@ import org.apache.spark.sql.types._
   * Restart contract: the cells append is not atomic with the checkpoint
   * commit, so a replayed batch could re-append its vectors; the batch is
   * anti-joined on vec_id against the cells already in the index (a
-  * single-column scan of the probed dataset), making replays no-ops —
-  * the idempotent-upsert discipline any foreachBatch sink needs.
+  * single-column scan of the probed dataset), making replays no-ops.
+  * Unlike a store with derived statistics, this guard is exact here: the
+  * cells are the index's only accumulated rows and each vector lands
+  * whole in the one cid file of its cell, so a vector the anti-join finds
+  * is a vector fully indexed, and nothing else counts it.
   *
   * Scale: per batch, one broadcast-centroids assignment kernel over the
   * batch (map-only), one metadata-sized occupancy aggregate, and the

@@ -38,15 +38,12 @@ import org.apache.spark.sql.types._
   *
   * Store layout under one root: `index/` (the band table of emitted docs)
   * and `out/` (the surviving batch rows), both partitioned under the
-  * [[graft.sources.AppendLog]] whose `_batches/<bid>` markers commit them,
-  * keyed by the engine's batch id. The two appends are not atomic
-  * together, so the marker is the commit point: every batch matches
-  * against the committed index only, a crashed attempt's partitions are
-  * deleted before its id is reused (so a replay re-derives the same
-  * survivors, never matching its own earlier append), a replay of the
-  * latest id with the same rows is skipped, and a fresh checkpoint over
-  * an existing store (engine ids restarting at 0) fails loudly —
-  * checkpoint and store are reset together.
+  * [[graft.sources.AppendLog]] whose `_batches/<bid>` markers, keyed by
+  * the engine's batch id, commit them exactly once: every batch matches
+  * against the committed index only (so a crashed batch's retry never
+  * matches its own earlier append), and a fresh checkpoint over an
+  * existing store fails loudly — checkpoint and store are reset
+  * together.
   *
   * Scale: the index is the emitted corpus's band table. At lake scale it
   * would be bucketed by bandHash so step 2's join prunes; the per-batch
@@ -84,14 +81,11 @@ object StreamingNearDup {
       storeDir: String, shingleN: Int, numHashes: Int, rowsPerBand: Int,
       threshold: Double, numBands: Int): Unit = {
     val spark = batch.sparkSession
-    log.cleanOrphans(spark, storeDir)
-    val latest = log.latest(spark, storeDir)
     // the band table is built through an RDD, so no pass here could carry
     // an observed signature: one job computes it for the replay check and
     // the commit alike
     lazy val sig = AppendLog.batchSig(batch, "doc_id", "text")
-    val bid = AppendLog.resolveId(latest, Some(batchId),
-      log.sig(spark, storeDir, latest), sig,
+    val bid = log.begin(spark, storeDir, Some(batchId), sig,
       s"near-dup store at $storeDir").getOrElse(return)
     val banded = TextOps.minhashBandTable(batch, "doc_id", "text",
       shingleN, numHashes, rowsPerBand).localCheckpoint()
@@ -142,8 +136,7 @@ object StreamingNearDup {
       .unionByName(dominated)
       .distinct()
 
-    // both appends land in this id's own bid= partitions (orphans until
-    // the marker commits) — disjoint directories, so they run concurrently
+    // two writes into disjoint bid= partitions, committed by the marker
     ParJobs.run(Seq(
       () => banded.join(dropped, banded("id") === dropped("id"), "left_anti")
         .withColumn("bid", lit(bid))

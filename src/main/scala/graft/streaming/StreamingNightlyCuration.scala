@@ -1,6 +1,7 @@
 package graft.streaming
 
-import graft.llm.{BloomHistory, NightlyCuration, ShingleIndex, SimGraphStore}
+import graft.llm.{BloomHistory, NightlyCuration, ShingleIndex, SimGraphStore,
+  TextIndex}
 import graft.sources.AppendLog
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
@@ -41,17 +42,14 @@ import org.apache.spark.sql.types.StructType
   *    with the INPUT batch's signature — staging is deterministic given
   *    the pre-night stores, so same input ⇒ same staged rows) commits
   *    them, under the log's orphan and replay discipline;
-  *  - [[endOfNight]] is idempotent: Bloom/shingle/graph appends carry the
-  *    night's explicit commit id (their stores' replay-skip verifies the
-  *    recomputed staged union), text/IVF appends are guarded by the
-  *    already-indexed anti-join (the [[StreamingTextIndex]] /
-  *    [[StreamingIvf]] `processBatch` discipline), and the manifest
-  *    retires via a single atomic rename AFTER every append committed — a
-  *    kill anywhere re-runs to the identical final state, except inside
-  *    the text store's append: [[graft.llm.TextIndex.appendToIndex]]
-  *    killed between its postings append and its df/meta rewrite leaves
-  *    the batch's doc_ids indexed, so the re-run's anti-join skips the
-  *    batch and df, nDocs and totLen stay short of it;
+  *  - [[endOfNight]] is idempotent: Bloom/shingle/graph/text appends
+  *    carry the night's explicit commit id (their stores' replay-skip
+  *    verifies the recomputed staged union), the IVF append is guarded by
+  *    the already-indexed `vec_id` anti-join ([[StreamingIvf]] — exact
+  *    there because its cells are its only accumulated rows and each
+  *    vector lands whole in one cell file), and the manifest retires via
+  *    a single atomic rename AFTER every append committed — a kill
+  *    anywhere re-runs to the identical final state;
   *  - a completed fold advances the night floor (`_night_floor`) and
   *    keeps each folded bid's signature (`_folded_bids/<b>`), so the
   *    engine replaying a folded bid no-ops when its rows match and fails
@@ -101,7 +99,6 @@ object StreamingNightlyCuration {
       containmentThreshold: Double = 0.8): Unit = {
     val spark = batch.sparkSession
     val dir = manifestDir(stores)
-    manifest.cleanOrphans(spark, dir)
     lazy val sig = AppendLog.batchSig(batch, "doc_id", "text")
     // a bid at or below the night floor was folded by a completed
     // endOfNight. The engine replaying it is legitimate exactly when the
@@ -121,9 +118,8 @@ object StreamingNightlyCuration {
           "folded bids or rebuild the stores")
       return
     }
-    val latest = manifest.latest(spark, dir)
-    AppendLog.resolveId(latest, Some(bid), manifest.sig(spark, dir, latest),
-        sig, s"manifest at $dir").foreach { _ =>
+    manifest.begin(spark, dir, Some(bid), sig, s"manifest at $dir")
+        .foreach { _ =>
       val admitted = NightlyCuration.admit(spark, stores, batch,
         "doc_id", "text", minTokens, minUniqueRatio, containmentThreshold)
       admitted.select(col("doc_id").cast("long").as("doc_id"), col("text"))
@@ -146,8 +142,8 @@ object StreamingNightlyCuration {
     * manifest. `nightId` is the night's commit id in the id-disciplined
     * stores — strictly increasing across nights, starting at 1 after a
     * fresh [[NightlyCuration.initStores]] (the bootstrap committed
-    * Bloom bid 0 / shingle epoch 0 / graph bid 0). `emb` is the static
-    * embeddings lookup; admitted ids without an embedding simply never
+    * Bloom bid 0 / shingle and text epoch 0 / graph bid 0). `emb` is the
+    * static embeddings lookup; admitted ids without an embedding never
     * enter the IVF index (the [[NightlyCuration.initStores]] contract).
     * Idempotent: re-run after a kill anywhere and it converges to the
     * same final state (class doc). No-ops when nothing is staged. */
@@ -190,9 +186,9 @@ object StreamingNightlyCuration {
         "doc_id", "text", explicitEp = Some(nightId)): Unit,
       () => SimGraphStore.update(spark, stores.graph, admitted, "doc_id",
         "text", explicitBid = Some(nightId)): Unit,
-      // anti-join-disciplined stores: drop what a crashed earlier run of
-      // THIS night already appended (doc identity is the replay key)
-      () => StreamingTextIndex.processBatch(admitted, stores.text),
+      () => TextIndex.appendToIndex(spark, stores.text, admitted, "doc_id",
+        "text", explicitEp = Some(nightId)): Unit,
+      // the IVF store drops vectors a crashed run of THIS night appended
       () => StreamingIvf.processBatch(
         emb.join(admitted.select(col("doc_id").as("vec_id")), "vec_id"),
         stores.ivf, dim),

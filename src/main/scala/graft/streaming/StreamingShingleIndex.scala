@@ -12,11 +12,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * engine batch still lands strictly above it) — the same
   * keep-max discipline as [[StreamingSimGraph]].
   *
-  * Crash-replay safety is the store's marker-commit contract: a replayed
-  * in-flight micro-batch (same id, same rows) is recognized as committed
-  * and skipped, its orphan `ep=` partitions from the crashed attempt are
-  * wiped before the id is reused, and a checkpoint that has fallen BEHIND
-  * the index fails loudly — checkpoint and index reset together.
+  * Crash-replay safety is the store's append log
+  * ([[graft.sources.AppendLog.begin]]), as in [[StreamingSimGraph]].
   *
   * Stream == batch: appendToIndex is deterministic given (index state,
   * batch rows) and the served sweeps are exact under any epoch split

@@ -6,16 +6,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** Streaming maintenance of the incremental similarity graph: each
   * micro-batch of documents folds into a [[SimGraphStore]] via
   * `foreachBatch`, passing the ENGINE's batch id through as the store's
-  * batch id. Crash-replay safety comes from the store's marker-commit
-  * discipline (SimGraphStore.update scaladoc): a replayed in-flight
-  * batch — same id, same rows, the Structured Streaming contract — is
-  * recognized as already committed and skipped; its orphan partitions
-  * from the crashed attempt are wiped before the id is reused; and a
-  * FRESH checkpoint pointed at an EXISTING store (engine ids restarting
-  * at 0) fails loudly instead of silently skipping data — checkpoint and
-  * store must be reset together, the same rule as StreamingCuration's
-  * sinks. Run [[SimGraphStore.compact]] in the maintenance slot between
-  * micro-batches.
+  * batch id. Crash-replay safety is the store's append log
+  * ([[graft.sources.AppendLog.begin]]): a replayed in-flight batch (same
+  * id, same rows) is skipped, a crashed attempt's retry is exact, and a
+  * FRESH checkpoint pointed at an EXISTING store fails loudly —
+  * checkpoint and store are reset together. Run [[SimGraphStore.compact]]
+  * in the maintenance slot between micro-batches.
   *
   * Stream == batch: folding the same files through the stream produces
   * the identical graph as batch folds of the same slices

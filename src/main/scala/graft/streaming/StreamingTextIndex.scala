@@ -2,8 +2,6 @@ package graft.streaming
 
 import graft.llm.TextIndex
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Streaming inverted-index maintenance: documents arriving on a stream
   * are tokenized and appended into the persisted term-bucket-partitioned
@@ -16,34 +14,30 @@ import org.apache.spark.sql.types._
   * state and must live outside the state store to be queryable by
   * concurrent serving jobs (the StreamingNearDup / StreamingIvf argument).
   *
-  * Restart contract: the postings append, df merge, and meta rewrite are
-  * not atomic with the checkpoint commit; a replayed batch is made a no-op
-  * by anti-joining batch doc_ids against the doc_ids already indexed (a
-  * single-column scan of the postings dataset — the same bound as
-  * StreamingIvf's vec_id probe). */
+  * Restart contract: engine batch b is the index's epoch 1 + b (the
+  * build committed epoch 0), so the index's append log makes the batch
+  * exactly-once ([[graft.sources.AppendLog]]): a crashed append's partial
+  * writes are deleted before its retry, a replay of the latest batch with
+  * the same rows is skipped, and a fresh checkpoint over an index that
+  * already took streamed batches fails loudly — checkpoint and index are
+  * reset together. */
 object StreamingTextIndex {
-
-  /** documents.parquet schema for the file-source stream. */
-  val docSchema: StructType = StructType(Seq(
-    StructField("doc_id", LongType),
-    StructField("text", StringType)))
 
   /** Stream documents from `srcDir` into the persisted index at
     * `indexPath` (built by [[TextIndex.buildIndex]]). Drains
     * currently-available input (Trigger.AvailableNow). */
   def run(spark: SparkSession, srcDir: String, indexPath: String,
       checkpointDir: String, maxFilesPerTrigger: Int = 1): Unit =
-    StreamingFold.drain(spark, docSchema, srcDir, checkpointDir,
-      maxFilesPerTrigger)((batch, _) => processBatch(batch, indexPath))
+    StreamingFold.drain(spark, StreamingFold.docSchema, srcDir,
+        checkpointDir, maxFilesPerTrigger) { (batch, batchId) =>
+      processBatch(batch, 1L + batchId, indexPath)
+    }
 
-  private[streaming] def processBatch(batch: DataFrame,
-      indexPath: String): Unit = {
-    val spark = batch.sparkSession
-    val existing = spark.read.parquet(s"$indexPath/postings")
-      .select("doc_id").distinct()
-    val fresh = batch.join(existing, Seq("doc_id"), "left_anti")
-      .localCheckpoint()
-    if (!fresh.isEmpty)
-      TextIndex.appendToIndex(spark, indexPath, fresh, "doc_id", "text")
-  }
+  /** One micro-batch append as epoch `ep` — the `foreachBatch` body,
+    * callable directly in tests (crash replay = calling it twice with the
+    * same epoch). */
+  private[streaming] def processBatch(batch: DataFrame, ep: Long,
+      indexPath: String): Unit =
+    TextIndex.appendToIndex(batch.sparkSession, indexPath, batch, "doc_id",
+      "text", explicitEp = Some(ep)): Unit
 }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.llm.{BloomHistory, ShingleIndex, SimGraphStore}
+import graft.llm.{BloomHistory, ShingleIndex, SimGraphStore, TextIndex}
 import graft.sources.AppendLog
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
@@ -9,8 +9,9 @@ import scala.concurrent.duration._
 
 /** The curation stores' commits read the batch signature from a pass that
   * already runs: a non-replay append fires no signature job of its own
-  * (`collect at AppendLog`), and BloomHistory's append and serve no count
-  * or collect of their own. The observed signature equals [[AppendLog.batchSig]] on
+  * (`collect at AppendLog`), BloomHistory's append and serve no count
+  * or collect of their own, and TextIndex's build and append no stats
+  * collect. The observed signature equals [[AppendLog.batchSig]] on
   * the same rows, and a signature that never arrives falls back to the
   * same value within its bound. */
 class StoreCommitJobsSpec extends SparkTestBase {
@@ -72,6 +73,44 @@ class StoreCommitJobsSpec extends SparkTestBase {
       Some(AppendLog.batchSig(batch0, "doc_id", "text")))
     assert(log.sig(spark, dir, ep) ==
       Some(AppendLog.batchSig(batch1, "doc_id", "text")))
+  }
+
+  test("TextIndex buildIndex and appendToIndex fire no signature or " +
+      "stats job, their markers carry batchSig, and serving stays within " +
+      "its job budget") {
+    val dir = tmp("text")
+    val log = AppendLog("_epochs", "ep", Nil)
+    def serveJobs() = {
+      def serve() = TextIndex.bm25FromIndex(spark, dir, Seq("a", "c", "x"),
+        topK = 3).collect()
+      serve()
+      JobProbe(spark)(serve())
+    }
+    // the stats and the signature ride the first checkpoint; with a stats
+    // collect of their own, build fired 9 jobs and append 13
+    val built = JobProbe(spark)(TextIndex.buildIndex(batch0, "doc_id",
+      "text", dir, nBuckets = 4))
+    assert(built.forall(!_.callSite.startsWith("collect at")), built)
+    assert(built.size <= 8, built)
+    val served1 = serveJobs()
+    var ep = -1L
+    val appended = JobProbe(spark) {
+      ep = TextIndex.appendToIndex(spark, dir, batch1, "doc_id", "text")
+    }
+    assert(appended.forall(!_.callSite.startsWith("collect at")), appended)
+    assert(appended.size <= 8, appended)
+    assert(ep == 1L)
+    assert(log.sig(spark, dir, 0L) ==
+      Some(AppendLog.batchSig(batch0, "doc_id", "text")))
+    assert(log.sig(spark, dir, 1L) ==
+      Some(AppendLog.batchSig(batch1, "doc_id", "text")))
+    assert(TextIndex.readMeta(spark, dir) == ((4, 7L, 33L)))
+    // serving read one merged df table in 8 jobs, two of them schema
+    // inference; the declared schemas drop those, and summing the
+    // epochs' df deltas costs one
+    val served2 = serveJobs()
+    assert(served1.size <= 7, served1)
+    assert(served2.size <= 7, served2)
   }
 
   test("a non-replay BloomHistory.append fires no signature, count or " +

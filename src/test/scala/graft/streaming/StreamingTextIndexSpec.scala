@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 /** Streaming inverted-index maintenance: after streaming late documents
   * into a persisted BM25 index, serving must equal the direct from-corpus
   * computation over the FULL corpus (stats included), and a full replay
-  * (lost checkpoint) must append nothing. */
+  * (lost checkpoint) fails loudly and appends nothing. */
 class StreamingTextIndexSpec extends SparkTestBase {
 
   test("streamed docs serve identically to from-scratch; replay is a no-op") {
@@ -51,10 +51,17 @@ class StreamingTextIndexSpec extends SparkTestBase {
     // late (odd) docs actually surfaced
     assert(served.exists(_._3 % 2 == 1))
 
-    // lost checkpoint: a full replay must be a no-op
+    // lost checkpoint: a full replay under a fresh checkpoint restarts
+    // at engine batch 0 — older than the index's latest epoch, so it
+    // fails loudly and appends nothing
     val (_, nDocs1, totLen1) = TextIndex.readMeta(spark, idx)
-    StreamingTextIndex.run(spark, src.toString + "/*", idx,
-      tmp.resolve("ckpt2").toString)
+    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+      StreamingTextIndex.run(spark, src.toString + "/*", idx,
+        tmp.resolve("ckpt2").toString))
+    val cause = Iterator.iterate[Throwable](e)(_.getCause)
+      .takeWhile(_ != null)
+      .collectFirst { case c: IllegalArgumentException => c }
+    assert(cause.exists(_.getMessage.contains("older than the latest")), e)
     val (_, nDocs2, totLen2) = TextIndex.readMeta(spark, idx)
     assert(nDocs1 == nDocs2 && totLen1 == totLen2, "replay mutated stats")
     assert(canon(TextIndex.bm25FromIndex(spark, idx, terms, topK = 8))
